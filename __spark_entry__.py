@@ -83,7 +83,9 @@ def _doc_pairs(spark, sf_dir, mod=7):
     candidates by another factor of ``mod``).  Guide §3.1 "pick the
     join strategy deliberately" / §2.4 — the predicate is unchanged,
     merely visible to the hash join as a key, so the emitted pair set
-    is IDENTICAL (pinned by tests/test_round7_opts.py)."""
+    is IDENTICAL (pinned against the plain filter form by
+    test_doc_pairs_residue_key_equals_mod_filter in
+    tests/test_round7_opts.py)."""
     d = _t(spark, sf_dir, "documents")
     n_parts = max(spark.sparkContext.defaultParallelism,
                   d.rdd.getNumPartitions())
@@ -568,10 +570,12 @@ def q_streaming_windows(spark, sf_dir):
 def q_streaming_match(spark, sf_dir):
     """Streaming fuzzy match under the driver gate: the odd-doc half of
     the corpus is replayed as a file stream and matched, micro-batch by
-    micro-batch, against the static even-doc reference through the SAME
-    blocking machinery as the batch pipeline (streaming/ops.py
-    _match_batch: shared block keys -> candidate pairs -> prefilter ->
-    ratio at cutoff 0.9).  Edge set and scores are batch-order
+    micro-batch, against the static even-doc reference with the SAME
+    block keys as the batch pipeline (streaming/ops.py _match_batch:
+    the reference is indexed once on the driver and broadcast, each
+    micro-batch probes it in one Arrow map -> ratio at cutoff 0.9; above
+    the broadcast gate, a candidate join against the persisted
+    reference keys).  Edge set and scores are batch-order
     independent, so the oracle is an ordinary batch relation with exact
     multi-word-LCS scores."""
     from fuzzspark.pipeline.corpus import corpus_from_documents
@@ -596,7 +600,7 @@ def q_streaming_match(spark, sf_dir):
                .select("stream_id", "ref_id", "score").toPandas())
     finally:
         import shutil
-        q.unpersist_reference()  # release the cached ref projections
+        q.unpersist_reference()  # release the broadcast reference side
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ck, ignore_errors=True)
         shutil.rmtree(sink, ignore_errors=True)

@@ -23,8 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-__all__ = ["normalize_content", "block_keys", "defuse_skew",
-           "minhash_bands_udf", "minhash_key_rows"]
+__all__ = ["normalize_content", "block_key_columns", "block_keys",
+           "defuse_skew", "minhash_bands_udf", "minhash_key_rows"]
 
 # large 63-bit primes for the affine minhash family
 _MERSENNE = (1 << 61) - 1
@@ -196,6 +196,34 @@ def normalize_content(col):
     return F.lower(F.regexp_replace(col, r"\s+", " "))
 
 
+def block_key_columns(*, use_exact: bool = True, use_path: bool = True,
+                      use_minhash: bool = True) -> dict:
+    """The enabled key families as column expressions over (content,
+    path, lang) — the ONE definition that :func:`block_keys` and the
+    streaming reference index (``fuzzspark.streaming.index``) both
+    evaluate, so batch and stream keys cannot drift:
+
+    * ``exact``   — ``'x:' || sha256(content)``, the block key itself.
+    * ``path``    — ``'p:' || lang || '/' || lower(stem)``, the block
+      key itself.
+    * ``minhash`` — the normalized content the MinHash kernel shingles
+      (:func:`make_minhash_matrix`); its block keys are
+      ``'m:' || band_key``.
+    """
+    cols = {}
+    if use_exact:
+        cols["exact"] = F.concat(
+            F.lit("x:"), F.sha2(F.col("content").cast("binary"), 256))
+    if use_path:
+        stem = F.regexp_extract(F.element_at(F.split(F.col("path"), "/"), -1),
+                                r"^([A-Za-z_]+)", 1)
+        cols["path"] = F.concat(F.lit("p:"), F.col("lang"), F.lit("/"),
+                                F.lower(stem))
+    if use_minhash:
+        cols["minhash"] = normalize_content(F.col("content"))
+    return cols
+
+
 def block_keys(files: DataFrame, *, use_exact: bool = True,
                use_path: bool = True, use_minhash: bool = True,
                n_bands: int = 8, rows_per_band: int = 4,
@@ -208,25 +236,16 @@ def block_keys(files: DataFrame, *, use_exact: bool = True,
     shuffles of the (amplified) pair set to attach them — see
     candidate_pairs(attach_sides=False)."""
     carry = ["content_len"] if "content_len" in files.columns else []
-    parts = []
-    if use_exact:
-        parts.append(files.select(
-            "id", F.concat(F.lit("x:"), F.sha2(F.col("content").cast("binary"), 256))
-            .alias("block_key"), *carry))
-    if use_path:
-        stem = F.regexp_extract(F.element_at(F.split(F.col("path"), "/"), -1),
-                                r"^([A-Za-z_]+)", 1)
-        parts.append(files.select(
-            "id", F.concat(F.lit("p:"), F.col("lang"), F.lit("/"),
-                           F.lower(stem)).alias("block_key"), *carry))
-    if use_minhash:
+    cols = block_key_columns(use_exact=use_exact, use_path=use_path,
+                             use_minhash=use_minhash)
+    parts = [files.select("id", cols[fam].alias("block_key"), *carry)
+             for fam in ("exact", "path") if fam in cols]
+    if "minhash" in cols:
         # round 7: pre-exploded Arrow rows straight from the kernel's
         # key matrix (see minhash_key_rows) — same keys, no per-doc
         # Python list + JVM explode
         rows = minhash_key_rows(
-            files.select("id", *carry,
-                         normalize_content(F.col("content"))
-                         .alias("__mh_norm")),
+            files.select("id", *carry, cols["minhash"].alias("__mh_norm")),
             carry=tuple(carry), n_bands=n_bands,
             rows_per_band=rows_per_band, shingle=shingle,
             max_chars=max_chars)
@@ -250,7 +269,8 @@ def defuse_skew(blocks: DataFrame, files_len: DataFrame,
     re-keyed into overlapping windows of ``window`` members with 50%
     overlap: pairs per member bounded by ~2*window instead of n.
 
-    ``files_len``: (id, content_len).
+    ``files_len``: (id, content_len), joined only when ``blocks`` does
+    not carry ``content_len`` itself.
     """
     from pyspark.sql import Window
     # window census: ONE shuffle by block_key and a single computation
@@ -272,7 +292,12 @@ def defuse_skew(blocks: DataFrame, files_len: DataFrame,
     # smoke tier that is two fewer shuffles+sorts of 148M key rows.
     carry = ["content_len"] if "content_len" in blocks.columns else []
     if not carry:
-        blocks = blocks.join(files_len, "id")
+        # LEFT join: a key row whose id is missing from files_len keeps
+        # its block membership with a NULL length (an inner join would
+        # drop it silently); the ascending window order puts NULL
+        # lengths first and breaks ties by id, so ranks stay
+        # deterministic
+        blocks = blocks.join(files_len, "id", "left")
     wc = Window.partitionBy("block_key")
     wr = wc.orderBy("content_len", "id")
     half = max(1, window // 2)

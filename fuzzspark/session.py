@@ -17,6 +17,13 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS_PER_BATCH = 2048
 
 
+def usable_cpus() -> int:
+    """Cores a local session should use: ``SPARK_GRAFT_CPUS`` when set,
+    else the cores this process may run on (``nproc``)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(app_name: str = "fuzzspark", cpus: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:

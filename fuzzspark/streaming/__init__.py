@@ -6,11 +6,11 @@ grows by commits):
 
 * ``streaming_exact_dedup``   — watermarked sha256 dropDuplicates.
 * ``streaming_fuzzy_match``   — micro-batch fuzzy match of arriving
-  records against a static reference corpus: blocking keys on both
-  sides, candidate equi-join, scorer pandas UDF, threshold — the
-  scoring stage of the batch pipeline, applied incrementally via
-  ``foreachBatch`` (the standard pattern when a stage needs a
-  stream-static join plus arbitrary sinks).
+  records against a static reference corpus with the batch pipeline's
+  block keys and scorer, applied incrementally via ``foreachBatch``:
+  the reference is indexed once on the driver and broadcast, so each
+  micro-batch is one Arrow map (a candidate equi-join against the
+  persisted reference keys above the broadcast gate).
 * ``streaming_ingest_linkage`` — end-to-end: new files scored against
   the accumulated corpus, match edges appended to a parquet sink that
   the batch connected-components job folds in on the next run.

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -19,3 +20,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@contextlib.contextmanager
+def broadcast_gate(spark, value: str):
+    """Set the broadcast size gate (``fuzzspark.broadcast.content.
+    max_bytes``) for the block, restoring the previous value after."""
+    key = "fuzzspark.broadcast.content.max_bytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -42,6 +42,22 @@ def test_small_blocks_pass_through(spark):
         [(1, "k1"), (2, "k1"), (3, "k2")]
 
 
+def test_defuse_skew_keeps_ids_missing_from_files_len(spark):
+    """Key rows without content_len join files_len for their window
+    order; an id missing from files_len must keep its block membership
+    (NULL length, ranked by id), not vanish from the blocks."""
+    rows = [(i, "hot") for i in range(30)] + [(99, "small"), (98, "small")]
+    blocks = spark.createDataFrame(rows, "id: long, block_key: string")
+    lens = spark.createDataFrame([(i, 100 + i) for i in range(0, 30, 2)],
+                                 "id: long, content_len: long")
+    out = defuse_skew(blocks, lens, max_block=10, window=10)
+    ids = {r["id"] for r in out.collect()}
+    assert ids == {r[0] for r in rows}
+    small = sorted(r["id"] for r in out.where("block_key = 'small'")
+                   .collect())
+    assert small == [98, 99]
+
+
 def test_candidate_pairs_dedup_and_prefilter(spark):
     files = spark.createDataFrame(
         [(1, "abcdef"), (2, "abcdxx"), (3, "ab")],

@@ -392,35 +392,55 @@ def test_native_minhash_bit_exact_with_numpy_reference():
 # ------------------- streaming matcher hot-key defusal (r6)
 
 
-def test_streaming_matcher_hot_key_defused(spark):
+def _hot_key_defusal_case(spark, max_bytes: str, path: str) -> None:
     """A reference block key shared by every doc (the degenerate
     path-stem shape) must not amplify each arrival into whole-corpus
     candidates: with max_block set the hot key is dropped at build
-    time, and true near-dups still match via their minhash keys."""
+    time, and true near-dups still match via their minhash keys.
+    ``max_bytes`` sets the broadcast gate, so the case runs on the
+    matcher ``path`` it selects."""
     from pyspark.sql import functions as F
 
     from fuzzspark.pipeline import corpus_to_spark, generate_corpus
     from fuzzspark.streaming.ops import _match_batch
+    from tests.conftest import broadcast_gate
 
     files, _p, _t = corpus_to_spark(
         spark, generate_corpus(n_clusters=60, seed=13, threshold=0.9))
-    # degenerate path: every doc shares the letters-only stem
+    # degenerate path key: every doc shares the (empty) letters-only
+    # stem and one lang, so 'p:text/' is carried by the whole reference
     ref = files.withColumn(
         "path", F.concat(F.lit("docs/"), F.col("id").cast("string"),
-                         F.lit(".txt"))).cache()
+                         F.lit(".txt"))).withColumn(
+        "lang", F.lit("text")).cache()
     n_ref = ref.count()
     assert n_ref > 50
     batch = ref.limit(40).cache()
     bk = dict(use_exact=True, use_path=True, use_minhash=True)
 
-    m_defused = _match_batch(ref, "ratio", 0.9, bk, max_block=50)
-    m_full = _match_batch(ref, "ratio", 0.9, bk, max_block=None)
+    with broadcast_gate(spark, max_bytes):
+        m_defused = _match_batch(ref, "ratio", 0.9, bk, max_block=50)
+        m_full = _match_batch(ref, "ratio", 0.9, bk, max_block=None)
+    assert m_defused.plan["path"] == m_full.plan["path"] == path
+    if path == "broadcast_index":
+        assert m_defused.plan["hot_keys_dropped"] >= 1
+        assert m_full.plan["hot_keys_dropped"] == 0
     key = lambda df: sorted(map(tuple, df.collect()))
     got, want = key(m_defused(batch)), key(m_full(batch))
     m_defused.unpersist()
     m_full.unpersist()
     assert got == want  # identical edges — hot key carried no signal
     assert len(got) >= 40  # every doc at least matches itself
+
+
+def test_streaming_matcher_hot_key_defused(spark):
+    """Hot-key defusal on the broadcast-index matcher (default gate)."""
+    _hot_key_defusal_case(spark, "64m", "broadcast_index")
+
+
+def test_streaming_matcher_hot_key_defused_join_path(spark):
+    """Hot-key defusal on the join matcher (gate forced off)."""
+    _hot_key_defusal_case(spark, "0", "join")
 
 
 # ---------------------- streaming state is watermark-bounded (r6)

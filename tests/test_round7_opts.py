@@ -170,6 +170,25 @@ def test_streaming_ingest_forwards_blocking_knobs(monkeypatch, tmp_path,
                                            use_minhash=False)
 
 
+@pytest.mark.parametrize("mod", [7, 67])
+def test_doc_pairs_residue_key_equals_mod_filter(spark, mod):
+    """_doc_pairs' residue equi-join key selects exactly the pairs of
+    the plain ``(a + b) % mod == 0`` filter it replaced."""
+    import __spark_entry__ as em
+    d = em._t(spark, SF_SMOKE, "documents")
+    a, b = d.alias("a"), d.alias("b")
+    want = (a.join(b, (F.col("a.lang") == F.col("b.lang"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .where((F.col("a.doc_id") + F.col("b.doc_id")) % mod == 0)
+            .select(F.col("a.doc_id").alias("left_id"),
+                    F.col("b.doc_id").alias("right_id")))
+    got = em._doc_pairs(spark, SF_SMOKE, mod=mod) \
+        .select("left_id", "right_id")
+    key = lambda df: sorted(map(tuple, df.collect()))
+    w = key(want)
+    assert w and key(got) == w
+
+
 def test_minhash_fallback_no_runtime_warning(monkeypatch):
     import fuzzspark.kernels._native as _native
     from fuzzspark.pipeline.blocking import make_minhash_compute

@@ -28,9 +28,9 @@ def canon(df: pd.DataFrame) -> tuple:
 
 def main(sf_dir: str, only=None):
     import __spark_entry__ as entrymod
-    from fuzzspark.session import get_spark
+    from fuzzspark.session import get_spark, usable_cpus
 
-    spark = get_spark("oracle-check", cpus=8)
+    spark = get_spark("oracle-check", cpus=usable_cpus())
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from fuzzspark.pipeline import corpus_from_documents
-from fuzzspark.session import get_spark
+from fuzzspark.session import get_spark, usable_cpus
 from fuzzspark.streaming.ops import streaming_ingest_linkage
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -33,8 +33,9 @@ SWEEP = [int(x) for x in os.environ.get(
 
 def main() -> None:
     os.environ.setdefault("FUZZSPARK_DRIVER_MEM", "16g")
-    spark = get_spark("streaming-batch-curve", cpus=32,
-                      shuffle_partitions=32)
+    cpus = usable_cpus()
+    spark = get_spark("streaming-batch-curve", cpus=cpus,
+                      shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
