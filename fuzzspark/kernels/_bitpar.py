@@ -9,8 +9,9 @@ src/distance/lcs_seq.rs:199-341; OSA transposition variant,
 src/distance/osa.rs:84-227) — public algorithms from Myers (1999) and
 Hyyrö (2002/2003).
 
-A numpy across-the-batch variant for patterns ≤ 64 code points lives in
-``_bitpar_np.py`` (the Arrow-batch fast path).
+They are the no-compiler backend: ``batch.py`` calls them when the C
+batch kernel (``_native.c``) is unavailable, and ``comparator.py`` /
+``metrics.py`` use them for scalar calls.
 """
 
 from __future__ import annotations
@@ -115,9 +116,10 @@ def osa_core(s1: str, s2: str, masks: dict[str, int] | None = None) -> int:
     get = masks.get
     for ch in s2:
         pm = get(ch, 0)
-        tr = ((((~d0) & pm) << 1) & pm_prev) & all_ones
-        d0 = ((((pm & vp) + vp) & (all_ones | (1 << m))) ^ vp) | pm | vn
-        d0 = (d0 | tr) & all_ones
+        # masks hold bits < m only, so tr needs no mask and the carry
+        # out of the add is cut once, below
+        tr = (((~d0) & pm) << 1) & pm_prev
+        d0 = ((((pm & vp) + vp) ^ vp) | pm | vn | tr) & all_ones
         hp = vn | (~(d0 | vp) & all_ones)
         hn = d0 & vp
         if hp & msb:

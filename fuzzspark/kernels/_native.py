@@ -2,8 +2,10 @@
 
 Compiles lazily, once per machine, into a shared cache dir keyed by the
 source hash (safe under concurrent python workers via atomic rename).
-Falls back to None when no compiler is available — callers must keep
-the pure-Python path.  Disable with FUZZSPARK_NO_NATIVE=1.
+When the library cannot be built or loaded, ``get_lib`` warns once,
+naming the cause, and returns None — callers then use the pure-Python
+big-int cores.  :func:`backend` reports which of the two this process
+scores with.  Disable with FUZZSPARK_NO_NATIVE=1.
 """
 
 from __future__ import annotations
@@ -11,14 +13,20 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import shutil
 import subprocess
 import tempfile
+import time
+import warnings
 
 import numpy as np
 
 _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_native.c")
 _LIB = None
 _TRIED = False
+_REASON: str | None = None  # why _LIB is None after a failed attempt
+_COMPILE_S: float | None = None  # gcc wall time, when this process built it
+_GCC_TIMEOUT_S = 120
 
 KIND_LCS = 0
 KIND_LEV = 1
@@ -27,7 +35,8 @@ KIND_OSA = 2
 
 def _read_source() -> bytes | None:
     try:
-        return open(_SRC, "rb").read()
+        with open(_SRC, "rb") as f:
+            return f.read()
     except OSError:
         pass
     try:  # imported from the shipped zip: read via the package loader
@@ -37,10 +46,13 @@ def _read_source() -> bytes | None:
         return None
 
 
-def _compile() -> str | None:
+def _compile() -> str:
+    """Path of the compiled library, building it on a cache miss.
+    Raises RuntimeError naming the cause when it cannot be built."""
+    global _COMPILE_S
     src = _read_source()
     if src is None:
-        return None
+        raise RuntimeError("kernel source _native.c not found")
     tag = hashlib.sha256(src).hexdigest()[:16]
     cache = os.path.join(tempfile.gettempdir(), "fuzzspark_native")
     os.makedirs(cache, exist_ok=True)
@@ -53,36 +65,43 @@ def _compile() -> str | None:
         with open(ctmp, "wb") as f:
             f.write(src)
         os.replace(ctmp, csrc)
+    if shutil.which("gcc") is None:
+        raise RuntimeError("gcc not found on PATH")
     tmp = f"{so}.{os.getpid()}.tmp"
     cmd = ["gcc", "-O3", "-shared", "-fPIC", "-o", tmp, csrc]
+    t0 = time.perf_counter()
     try:
-        r = subprocess.run(cmd, capture_output=True, timeout=120)
+        r = subprocess.run(cmd, capture_output=True, timeout=_GCC_TIMEOUT_S)
         if r.returncode != 0:
-            return None
+            tail = r.stderr.decode(errors="replace").strip().splitlines()
+            raise RuntimeError(f"gcc exited with {r.returncode}: "
+                               + " | ".join(tail[-5:]))
         os.replace(tmp, so)  # atomic; racing workers converge on one file
-        return so
-    except Exception:
-        return None
+    except subprocess.TimeoutExpired:
+        raise RuntimeError(
+            f"gcc timed out after {_GCC_TIMEOUT_S} s") from None
     finally:
         if os.path.exists(tmp):
             try:
                 os.remove(tmp)
             except OSError:
                 pass
+    _COMPILE_S = round(time.perf_counter() - t0, 3)
+    return so
 
 
 def get_lib():
-    global _LIB, _TRIED
+    """The loaded kernel library, or None (first call builds and loads
+    it; a failure warns once with its cause, see :func:`backend`)."""
+    global _LIB, _TRIED, _REASON
     if _TRIED:
         return _LIB
     _TRIED = True
     if os.environ.get("FUZZSPARK_NO_NATIVE"):
-        return None
-    so = _compile()
-    if so is None:
+        _REASON = "FUZZSPARK_NO_NATIVE is set"
         return None
     try:
-        lib = ctypes.CDLL(so)
+        lib = ctypes.CDLL(_compile())
         lib.batch_metric.restype = ctypes.c_int
         lib.batch_metric.argtypes = [
             ctypes.c_int,
@@ -200,9 +219,23 @@ def get_lib():
             np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
         ]
         _LIB = lib
-    except (OSError, AttributeError):
-        _LIB = None
+    except (RuntimeError, OSError, AttributeError) as e:
+        _REASON = f"{type(e).__name__}: {e}"
+        warnings.warn("fuzzspark native kernels unavailable, scoring falls "
+                      f"back to the pure-Python cores: {_REASON}",
+                      RuntimeWarning, stacklevel=2)
     return _LIB
+
+
+def backend() -> dict:
+    """Which kernels this process scores with: ``native`` (the C batch
+    kernels) or ``python`` (the big-int cores), why not native, and the
+    gcc build time when this process built the library (None on a
+    cache hit)."""
+    lib = get_lib()
+    return {"backend": "python" if lib is None else "native",
+            "reason": _REASON if lib is None else None,
+            "compile_s": _COMPILE_S}
 
 
 def _flatten(strs: list[str], lens: np.ndarray | None = None):
@@ -343,13 +376,6 @@ def native_banded(kind: str, pat_strs: list[str], txt_strs: list[str],
         None if b is None else b.ctypes.data_as(ctypes.c_void_p),
         p_es)
     return out if rc == 0 else None
-
-
-def native_lev_hinted(pat_strs: list[str], txt_strs: list[str],
-                      hint, bounds: np.ndarray | None = None
-                      ) -> np.ndarray | None:
-    """Back-compat alias for native_banded('levenshtein', ...)."""
-    return native_banded("levenshtein", pat_strs, txt_strs, hint, bounds)
 
 
 def native_partial_lcs(pat_strs: list[str], txt_strs: list[str]

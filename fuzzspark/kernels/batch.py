@@ -4,10 +4,10 @@ This is the engine under the Spark pandas UDFs: one call scores an
 entire Arrow batch.  Strategy per pair family:
 
 * ``levenshtein`` (uniform) / ``lcs_seq`` / ``indel`` / ``osa`` /
-  ``ratio``: strip common affix (src/details/common.rs:79-108), then
-  route short remainders (pattern ≤ 64 code points) to the numpy
-  across-pair bit-parallel kernels and long remainders to big-int
-  bit-parallel cores with per-distinct-pattern mask reuse — the
+  ``ratio``: the C batch kernel (affix stripping, bounds and banding
+  inside).  Without a compiler: strip the common affix
+  (src/details/common.rs:79-108), then run the big-int bit-parallel
+  cores with pattern masks built once per distinct pattern — the
   ``BatchComparator`` analog (src/distance/levenshtein.rs:1636-1657).
 * ``jaro`` / ``jaro_winkler``: C batch kernel + vectorized prefix boost.
 * ``hamming``: one flat element-compare + cumsum segment sums across
@@ -22,14 +22,12 @@ suppressed scores (reference ``Option::None``, src/common.rs:33-86).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 import numpy as np
 
 from . import fuzz as _fuzz
 from ._bitpar import lcs_core, levenshtein_core, osa_core, pattern_masks
-from ._bitpar_np import lcs_batch64, levenshtein_batch64, osa_batch64
-from ._lcs_blocked_np import lcs_blocked_batch, width_chunks
 from . import _native
 
 _NATIVE_KIND = {"lcs_seq": _native.KIND_LCS, "levenshtein": _native.KIND_LEV,
@@ -53,11 +51,8 @@ SCORERS = (
 )
 FORMS = ("distance", "similarity", "normalized_distance", "normalized_similarity")
 
-_BITPAR_CORES = {
-    "levenshtein": (levenshtein_core, levenshtein_batch64),
-    "lcs_seq": (lcs_core, lcs_batch64),
-    "osa": (osa_core, osa_batch64),
-}
+_BITPAR_CORES = {"levenshtein": levenshtein_core, "lcs_seq": lcs_core,
+                 "osa": osa_core}
 
 
 def _seq_to_str(seq) -> str:
@@ -92,16 +87,6 @@ def _clean(arr) -> list[Optional[str]]:
         else:
             append(str(v))
     return out
-
-
-def _pad_codes(strs: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
-    lens = np.fromiter((len(s) for s in strs), dtype=np.int64, count=len(strs))
-    width = max(1, int(lens.max()) if len(lens) else 1)
-    mat = np.zeros((len(strs), width), dtype=np.int64)
-    for k, s in enumerate(strs):
-        if s:
-            mat[k, : len(s)] = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-    return mat, lens
 
 
 def _factorize(strs: list[str]) -> tuple[np.ndarray, int]:
@@ -169,8 +154,8 @@ def _bitpar_family_distances(kind: str, pairs: list[tuple[str, str]],
     bounds (computes exactly — identical observable results).
 
     Fast path: the compiled batch kernel (_native.c) when a compiler is
-    available; else numpy across-pair uint64 lanes for short patterns
-    and big-int bit-parallel cores for long ones."""
+    available; else the big-int bit-parallel cores (_bitpar.py), one
+    call per pair."""
     n = len(pairs)
     if _native.get_lib() is not None and pairs:
         # all three metrics are symmetric; the shorter side as pattern
@@ -183,62 +168,22 @@ def _bitpar_family_distances(kind: str, pairs: list[tuple[str, str]],
             pat, txt, aux=bounds)
         if got is not None:
             return got
-    scalar_core, np_core = _BITPAR_CORES[kind]
-    out = np.zeros(n, dtype=np.int64)
+    core = _BITPAR_CORES[kind]
     # strip affixes python-side; LCS gets them added back at the end
     stripped = [strip_common_affix(a, b) for a, b in pairs]
-    affix = np.fromiter(
-        (len(a) - len(a2) for (a, _b), (a2, _b2) in zip(pairs, stripped)),
-        dtype=np.int64, count=n)
-    short_idx: list[int] = []
-    short_pairs: list[tuple[str, str]] = []
-    long_idx: list[int] = []
-    long_pairs: list[tuple[str, str]] = []
-    for k, (a, b) in enumerate(stripped):
-        if not a:
-            out[k] = 0 if kind == "lcs_seq" else len(b)
-        elif not b:
-            out[k] = 0 if kind == "lcs_seq" else len(a)
-        elif len(a) <= 64:
-            short_idx.append(k)
-            short_pairs.append((a, b))
-        else:
-            long_idx.append(k)
-            long_pairs.append((a, b))
-    if short_pairs:
-        # width-aware chunking (round 5): the text-side padded matrix
-        # is bounded at rows*max_width <= budget elements, so one long
-        # document in the batch can't blow the allocation up
-        t_lens = np.fromiter((len(b) for _a, b in short_pairs),
-                             dtype=np.int64, count=len(short_pairs))
-        sidx = np.asarray(short_idx, dtype=np.int64)
-        for sel in width_chunks(t_lens):
-            c1, l1 = _pad_codes([short_pairs[j][0] for j in sel])
-            c2, l2 = _pad_codes([short_pairs[j][1] for j in sel])
-            out[sidx[sel]] = np_core(c1, l1, c2, l2)
-    if long_pairs:
-        if kind == "lcs_seq":
-            # blocked numpy kernel, vectorized across pairs; LCS is
-            # symmetric so the shorter side becomes the pattern
-            pat = [min(a, b, key=len) for a, b in long_pairs]
-            txt = [max(b, a, key=len) for a, b in long_pairs]
-            out[long_idx] = lcs_blocked_batch(pat, txt)
-        else:
-            # BatchComparator analog: reuse pattern masks per distinct s1
-            order = sorted(range(len(long_pairs)),
-                           key=lambda k: long_pairs[k][0])
-            masks = None
-            last = None
-            for k in order:
-                a, b = long_pairs[k]
-                # value compare: the list is sorted by content, so equal
-                # strings are adjacent even when they are distinct objects
-                if a != last:
-                    masks = pattern_masks(a)
-                    last = a
-                out[long_idx[k]] = scalar_core(a, b, masks)
+    out = np.empty(n, dtype=np.int64)
+    # BatchComparator analog: pairs ordered by pattern content, so equal
+    # patterns are adjacent (even as distinct objects) and share masks
+    masks = last = None
+    for k in sorted(range(n), key=lambda k: stripped[k][0]):
+        a, b = stripped[k]
+        if a != last:
+            masks, last = pattern_masks(a), a
+        out[k] = core(a, b, masks)
     if kind == "lcs_seq":
-        out += affix
+        out += np.fromiter(
+            (len(a) - len(a2) for (a, _b), (a2, _b2) in zip(pairs, stripped)),
+            dtype=np.int64, count=n)
     return out
 
 
@@ -596,21 +541,10 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
                 # vectorized: <=4-char common prefix from the C affix
                 # scan, boost applied across the batch.  Same op order
                 # as the scalar path ((pfx*w)*(1-sim)) -> bit-identical.
+                # (the library is loaded here, and batch_affix cannot fail)
                 pfx = _native.native_affix(0, a, b, cap=4)
-                if pfx is None:  # lib vanished mid-flight: scalar tail
-                    for pos in range(len(idx)):
-                        sim = got[pos]
-                        if sim > 0.7:
-                            p = 0
-                            for c1, c2 in zip(a[pos][:4], b[pos][:4]):
-                                if c1 != c2:
-                                    break
-                                p += 1
-                            got[pos] = sim + p * prefix_weight * (1.0 - sim)
-                else:
-                    got = np.where(
-                        got > 0.7,
-                        got + (pfx * prefix_weight) * (1.0 - got), got)
+                got = np.where(got > 0.7,
+                               got + (pfx * prefix_weight) * (1.0 - got), got)
             raw[idx] = got
     elif scorer in ("prefix", "postfix"):
         # canonical raw = distance = max(len) - common_affix; the affix

@@ -7,8 +7,12 @@ params hash, row count, schema, per-partition row counts
 the "per-partition lineage + metrics" of BASELINE.json:north_rule.
 
 ``StageRunner.run`` skips any stage whose manifest exists and matches
-the current params hash — a killed run resumes from the last complete
-stage (tests/test_resume.py kills between stages and re-runs).
+the stage's lineage hash — a killed run resumes from the last complete
+stage (tests/test_resume.py kills between stages and re-runs).  The
+lineage hash chains: it covers the params (which the pipeline keys on
+its input with :func:`input_fingerprint`) and the lineage hash of the
+stage run before it, so a different input or config invalidates every
+stage from the first, never only some of them.
 """
 
 from __future__ import annotations
@@ -16,13 +20,15 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 from dataclasses import dataclass, field
 from typing import Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-__all__ = ["StageRunner", "params_hash"]
+__all__ = ["StageRunner", "input_fingerprint", "params_hash"]
 
 MANIFEST = "_MANIFEST.json"
 
@@ -30,6 +36,34 @@ MANIFEST = "_MANIFEST.json"
 def params_hash(params: dict) -> str:
     return hashlib.sha256(
         json.dumps(params, sort_keys=True, default=str).encode()).hexdigest()[:16]
+
+
+def input_fingerprint(df: DataFrame) -> str:
+    """A cheap identity for a pipeline input that runs no Spark job.
+
+    Path sources: the input files with their sizes and mtimes, plus the
+    analyzed plan with its expression ids dropped (they differ between
+    sessions, so a resume in a new process still matches).  In-memory
+    sources (``LogicalRDD``, ``LocalRelation``) have no file to stat:
+    the analyzed plan keeps its expression ids, which are unique per
+    DataFrame within a session."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    files = sorted(df.inputFiles())
+    if not files or re.search(r"\b(LogicalRDD|LocalRelation)\b", plan):
+        return params_hash({"plan": plan, "files": files})
+    spark = df.sparkSession
+    stats = []
+    for f in files:
+        u = urlparse(f)
+        if u.scheme in ("", "file"):
+            st = os.stat(unquote(u.path))
+            stats.append((f, st.st_size, st.st_mtime_ns))
+        else:  # any other Hadoop filesystem
+            path = spark._jvm.org.apache.hadoop.fs.Path(f)
+            st = (path.getFileSystem(spark._jsc.hadoopConfiguration())
+                  .getFileStatus(path))
+            stats.append((f, st.getLen(), st.getModificationTime()))
+    return params_hash({"plan": re.sub(r"#\d+", "", plan), "files": stats})
 
 
 def _score_histogram(df: DataFrame, col: str, bins: int = 20):
@@ -62,6 +96,8 @@ class StageRunner:
     stages_run: list = field(default_factory=list)
     stages_skipped: list = field(default_factory=list)
     table_format: str = "parquet"
+    # lineage hash of the stage last run or reused (the chain's head)
+    _upstream: str = field(default="", init=False, repr=False)
 
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)
@@ -75,7 +111,15 @@ class StageRunner:
     def manifest_path(self, stage: str) -> str:
         return os.path.join(self._dir(stage), MANIFEST)
 
+    def _lineage_hash(self, stage: str) -> str:
+        """Hash of what ``stage`` is built from: the params and the
+        lineage hash of the stage run before it on this runner."""
+        return params_hash({"stage": stage, "params": self.params,
+                            "upstream": self._upstream})
+
     def is_complete(self, stage: str) -> bool:
+        """Whether ``stage``'s persisted output can be reused as the next
+        stage of this runner's chain."""
         p = self.manifest_path(stage)
         if not os.path.exists(p):
             return False
@@ -83,7 +127,8 @@ class StageRunner:
             m = json.load(open(p))
         except Exception:
             return False
-        return m.get("params_hash") == params_hash(self.params) and m.get("complete")
+        return (m.get("lineage_hash") == self._lineage_hash(stage)
+                and m.get("complete"))
 
     def run(self, stage: str, build: Callable[[], DataFrame], *,
             score_col: str | None = None,
@@ -95,8 +140,10 @@ class StageRunner:
         write time — ``build`` may populate it during construction
         (e.g. the CC round-by-round contracted-edge counts)."""
         out_dir = self._dir(stage)
+        lineage = self._lineage_hash(stage)
         if self.is_complete(stage):
             self.stages_skipped.append(stage)
+            self._upstream = lineage
             return self._read(out_dir)
         t0 = time.time()
         df = build()
@@ -125,6 +172,7 @@ class StageRunner:
         manifest = {
             "stage": stage,
             "params_hash": params_hash(self.params),
+            "lineage_hash": lineage,
             "row_count": (int(metrics["rows"]) if metrics is not None
                           else int(sum(partition_rows.values()))),
             "schema": persisted.schema.jsonValue(),
@@ -147,6 +195,7 @@ class StageRunner:
         with open(self.manifest_path(stage), "w") as f:
             json.dump(manifest, f, indent=1)
         self.stages_run.append(stage)
+        self._upstream = lineage
         return persisted
 
     def _partition_rows(self, out_dir: str,

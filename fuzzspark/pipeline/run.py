@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from fuzzspark.functions import scorer_column, sha256_column
 from fuzzspark.pipeline.blocking import block_keys, defuse_skew
-from fuzzspark.pipeline.checkpoint import StageRunner
+from fuzzspark.kernels import _native
+from fuzzspark.pipeline.checkpoint import StageRunner, input_fingerprint
 from fuzzspark.pipeline.cluster import connected_components
 from fuzzspark.pipeline.pairs import candidate_pairs
 
@@ -78,7 +79,11 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
     ``files`` must have columns (id, repo, path, commit, lang, content).
     """
     cfg = config or LinkageConfig()
-    runner = StageRunner(spark, workdir, params=cfg.as_dict(),
+    # stage reuse keys on the input as well as the config: linking a
+    # different corpus into the same workdir reruns every stage
+    runner = StageRunner(spark, workdir,
+                         params=dict(cfg.as_dict(),
+                                     input=input_fingerprint(files)),
                          table_format=cfg.table_format)
 
     def widen(df: DataFrame, input_bytes: int | None = None) -> DataFrame:
@@ -176,6 +181,10 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
             files_ck, blocks, scorer=cfg.scorer, cutoff=cfg.threshold,
             attach_sides="content_len" not in blocks.columns))
 
+    # the driver's kernel backend and the scoring path (set by _score)
+    # land in the 04_scores manifest
+    score_info = {"kernel_backend": _native.backend()["backend"]}
+
     def _score():
         # 03_pairs is id-only (text never rides the pair checkpoint —
         # see candidate_pairs); join content back by id here.  Exact
@@ -214,7 +223,9 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         files_bytes = _dir_bytes(runner._dir("01_files"))
         bc_max = _parse_bytes(spark.conf.get(
             "fuzzspark.broadcast.content.max_bytes", "64m"))
-        if files_bytes is not None and files_bytes <= bc_max:
+        score_info["score_path"] = ("broadcast" if files_bytes is not None
+                                    and files_bytes <= bc_max else "shuffle")
+        if score_info["score_path"] == "broadcast":
             # Round 7 (second pass, guide §8): within the broadcast
             # gate, resolve content IN the python worker instead of
             # attaching it row-wise in the JVM.  The corpus (id,
@@ -251,6 +262,10 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
                         .to_numpy(zero_copy_only=False), dtype=bool)
                     i1 = np.searchsorted(ids, li)
                     i2 = np.searchsorted(ids, ri)
+                    # a bug guard only: stage lineage chains 03_pairs to
+                    # the 01_files it was built from, so a resume cannot
+                    # pair ids from another corpus and this is unreachable
+                    # on resume
                     if n and (len(ids) == 0
                               or (ids[np.clip(i1, 0, len(ids) - 1)]
                                   != li).any()
@@ -319,7 +334,8 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
                                    score_cutoff=cfg.threshold))
         return scored.select(*out_cols).unionByName(exact)
 
-    scores = runner.run("04_scores", _score, score_col="score")
+    scores = runner.run("04_scores", _score, score_col="score",
+                        extra_manifest=score_info)
 
     cc_stats: dict = {}
 

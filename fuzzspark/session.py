@@ -9,12 +9,15 @@ src/distance/levenshtein.rs:48-62 — our analog is bounding rows/batch).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS_PER_BATCH = 2048
+
+_log = logging.getLogger(__name__)
 
 
 def usable_cpus() -> int:
@@ -99,12 +102,12 @@ def _ship_package(spark: SparkSession) -> None:
         sc.addPyFile(package_zip())
     except Exception:  # already added under this name
         pass
-    # pre-compile the native kernels on the driver so local-mode python
+    # build the native kernels on the driver so local-mode python
     # workers hit the warm cache immediately (cluster executors compile
     # once per machine via the same atomic cache path)
-    try:
-        from fuzzspark.kernels import _native
-        _native._compile()
-    except Exception:
-        pass
+    from fuzzspark.kernels import _native
+    kernels = _native.backend()
+    if kernels["backend"] != "native":
+        _log.warning("fuzzspark scores on the pure-Python kernels: %s",
+                     kernels["reason"])
     sc._fuzzspark_shipped = True

@@ -11,6 +11,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from fuzzspark.functions import length_prefilter, scorer_column, sha256_column
+from fuzzspark.kernels import _native
 from fuzzspark.pipeline.blocking import (block_key_columns, block_keys,
                                          make_minhash_matrix)
 from fuzzspark.pipeline.util import parse_bytes
@@ -201,7 +202,8 @@ def _match_batch(reference: DataFrame, scorer: str, threshold: float,
     run.plan = dict(path="broadcast_index" if use_index else "join",
                     ref_docs=int(agg["n"]), content_bytes=content_bytes,
                     max_bytes=gate, **stats,
-                    build_s=round(time.perf_counter() - t0, 4))
+                    build_s=round(time.perf_counter() - t0, 4),
+                    kernel_backend=_native.backend()["backend"])
     run.unpersist = release
     return run
 

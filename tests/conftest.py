@@ -36,3 +36,25 @@ def broadcast_gate(spark, value: str):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+@pytest.fixture
+def python_kernels():
+    """Score on the pure-Python big-int cores in this process, as when
+    no compiler is available; the native library comes back after."""
+    from fuzzspark.kernels import _native
+    saved = _native._LIB, _native._TRIED
+    _native._LIB, _native._TRIED = None, True
+    try:
+        yield
+    finally:
+        _native._LIB, _native._TRIED = saved
+
+
+@pytest.fixture(params=["native", "python"])
+def kernel_backend(request):
+    """Run a test once per kernel backend.  ``native`` is whatever
+    ``get_lib`` loads (the Python cores too under FUZZSPARK_NO_NATIVE)."""
+    if request.param == "python":
+        request.getfixturevalue("python_kernels")
+    return request.param

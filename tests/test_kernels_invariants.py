@@ -121,6 +121,15 @@ def test_weighted_batch_matches_scalar():
         assert list(got) == exp, w
 
 
+@pytest.mark.usefixtures("python_kernels")
+class TestPythonBackend:
+    """The batch-vs-scalar checks again on the no-compiler backend."""
+    test_batch_equals_scalar = staticmethod(test_batch_equals_scalar)
+    test_batch_cutoff_and_nulls = staticmethod(test_batch_cutoff_and_nulls)
+    test_weighted_batch_matches_scalar = staticmethod(
+        test_weighted_batch_matches_scalar)
+
+
 def test_weighted_vs_bruteforce_dp():
     """generalized weighted levenshtein vs a reference O(NM) DP."""
     def dp(a, b, ins, dele, sub):

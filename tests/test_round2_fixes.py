@@ -1,7 +1,7 @@
 """Round-2 regression tests for the ADVICE findings.
 
-1. _lcs_blocked_np mask-table aliasing past 2^16-char patterns
-   (packed-scalar sort overflowed the word-index bit budget).
+1. LCS of patterns past 2^16 code points (a since-deleted blocked
+   kernel's packed-scalar sort overflowed the word-index bit budget).
 2. jaro_winkler length-hopeless prune must scale with prefix_weight
    (the reference imposes no cap — src/distance/jaro_winkler.rs:64-101).
 3. streaming_stateful_dedup state contract: constant-size marker per
@@ -15,31 +15,25 @@ import numpy as np
 import pytest
 
 from fuzzspark.kernels._bitpar import lcs_core
-from fuzzspark.kernels._lcs_blocked_np import lcs_blocked_batch
 from fuzzspark.kernels.batch import batch_scores
 
 
 # ---------------------------------------------------------------------------
-# 1. blocked-LCS word-index bit budget
+# 1. LCS word-index bit budget
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("pat_len", [65_500, 65_600])
-def test_lcs_blocked_straddles_word_index_budget(pat_len):
-    """patterns straddling 2^16 code points: the (key, word) grouping
-    must not alias (regression: 65,600 returned 33839 vs correct 33848)."""
+def test_lcs_seq_batch_straddles_word_index_budget(pat_len, kernel_backend):
+    """patterns straddling 2^16 code points score exactly on both
+    backends (regression: a blocked kernel's (key, word) grouping
+    aliased there, 65,600 returned 33839 vs correct 33848)."""
     rng = random.Random(13)
     pat = "".join(rng.choice("abcdef") for _ in range(pat_len))
     txt = "".join(rng.choice("abcdef") for _ in range(120))
-    got = lcs_blocked_batch([pat], [txt])
-    want = lcs_core(txt, pat)  # big-int core, shorter side as pattern
-    assert got[0] == want
-
-
-def test_lcs_blocked_small_sanity():
-    pats = ["banana", "abcdef", "", "xyzzy"]
-    txts = ["bahama", "fedcba", "abc", "xyzzy plugh"]
-    got = lcs_blocked_batch(pats, txts)
-    want = [lcs_core(p, t) for p, t in zip(pats, txts)]
+    pats = [pat, "banana", "abcdef", "", "xyzzy"]
+    txts = [txt, "bahama", "fedcba", "abc", "xyzzy plugh"]
+    got = batch_scores("lcs_seq", "similarity", pats, txts)
+    want = [lcs_core(t, p) for p, t in zip(pats, txts)]
     assert list(got) == want
 
 

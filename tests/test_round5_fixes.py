@@ -3,7 +3,7 @@
 1. CC pre-contraction: partition-local union-find before the first
    distributed star round (VERDICT r4 item 1).
 2. Vectorized hamming + token_set scorer paths (item 2).
-3. Bounded _pad_codes memory on the no-compiler fallback (item 3).
+3. Bounded memory on the no-compiler fallback (item 3).
 4. sha256 integrity riding the 01_files write job (item 4) + drift
    detection against a source-provided hash.
 5. NULL exact_equal pairs take the scorer path (ADVICE r4).
@@ -253,8 +253,9 @@ def test_token_set_distinct_pair_dedup_parity():
 
 
 def test_pad_codes_fallback_memory_bounded():
-    """One ~100 KB doc in an 8k-row batch must not allocate an
-    (n x max_len) matrix on the no-compiler path (VERDICT r4 item 3)."""
+    """One ~100 KB doc in an 8k-row batch stays within bounded memory
+    on the no-compiler path (VERDICT r4 item 3): the big-int cores
+    allocate per pair, never a matrix padded to the longest string."""
     import json
     import os
     import subprocess
@@ -298,22 +299,6 @@ print(json.dumps({"peak": peak, "v0": got[0], "vbig": got[1234]}))
     s2[1234] = "x" * 100_000
     ref = bs("levenshtein", "distance", s1, s2)
     assert got["v0"] == ref[0] and got["vbig"] == ref[1234]
-
-
-def test_width_chunks_bounds_and_covers():
-    from fuzzspark.kernels._lcs_blocked_np import width_chunks
-
-    rng = np.random.default_rng(9)
-    widths = rng.integers(1, 200, 5000)
-    widths[17] = 1_000_000
-    seen = np.zeros(len(widths), dtype=bool)
-    for sel in width_chunks(widths, budget=1 << 16, max_rows=512):
-        assert not seen[sel].any()
-        seen[sel] = True
-        assert len(sel) * max(1, int(widths[sel].max())) <= (1 << 16) \
-            or len(sel) == 1
-        assert len(sel) <= 512
-    assert seen.all()
 
 
 def test_cc_pre_contract_empty_and_single(spark):

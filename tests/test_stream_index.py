@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
+from fuzzspark.kernels import _native
 from fuzzspark.streaming.index import KeyCSR
 from fuzzspark.streaming.ops import _match_batch
 from tests.conftest import broadcast_gate
@@ -68,6 +69,7 @@ def _edges_both_paths(spark, ref, batch, blocking=None, threshold=0.8):
             m = _match_batch(ref, "ratio", threshold, bk)
         try:
             assert m.plan["path"] == path
+            assert m.plan["kernel_backend"] == _native.backend()["backend"]
             out[gate] = sorted(map(tuple, m(batch).collect()))
         finally:
             m.unpersist()
