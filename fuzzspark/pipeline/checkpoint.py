@@ -1,10 +1,18 @@
 """Stage checkpointing, lineage manifests, resume.
 
-Every pipeline stage writes parquet (Iceberg in prod — same API shape,
-``format("iceberg")``) plus a ``_MANIFEST.json`` recording: stage
-params hash, row count, schema, per-partition row counts
-(``spark_partition_id()``), and for scoring stages a score histogram —
-the "per-partition lineage + metrics" of BASELINE.json:north_rule.
+Every pipeline stage is written in ``StageRunner.table_format`` (parquet
+by default; orc is tested, and any path-based DataSource such as
+``iceberg`` takes the same calls) next to a ``_MANIFEST.json`` that
+records the stage's params and lineage hashes, row count, schema,
+per-partition row counts (``partition_rows``, keyed as
+``partition_rows_kind`` says), any stage-specific ``extra`` values and,
+for the scoring stage, a score histogram — the "per-partition lineage +
+metrics" of BASELINE.json:north_rule.  The row count, the histogram and
+the ``observe`` values are aggregates of the write job itself.  Parquet
+and orc stages are read back with the recorded schema instead of
+inferring it, and parquet's per-file row counts come from the file
+footers, so a fresh parquet stage costs its write job and no other
+Spark job.
 
 ``StageRunner.run`` skips any stage whose manifest exists and matches
 the stage's lineage hash — a killed run resumes from the last complete
@@ -22,15 +30,22 @@ import json
 import os
 import re
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Callable
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 __all__ = ["StageRunner", "input_fingerprint", "params_hash"]
 
 MANIFEST = "_MANIFEST.json"
+
+# formats whose reader takes the schema the stage recorded, which spares
+# the schema-inference job of every read-back; Iceberg's source rejects
+# a user schema and keeps its own
+_SCHEMA_ON_READ = frozenset({"parquet", "orc"})
 
 
 def params_hash(params: dict) -> str:
@@ -66,22 +81,26 @@ def input_fingerprint(df: DataFrame) -> str:
     return params_hash({"plan": re.sub(r"#\d+", "", plan), "files": stats})
 
 
-def _score_histogram(df: DataFrame, col: str, bins: int = 20):
-    """Fallback scan-based histogram (the hot path rides the write job
-    via Observation — see StageRunner.run)."""
-    binned = (df.where(F.col(col).isNotNull())
-              .select(F.least(F.lit(bins - 1),
-                              F.floor(F.col(col) * bins).cast("int")).alias("b"))
-              .groupBy("b").count().orderBy("b").collect())
-    return {int(r["b"]): int(r["count"]) for r in binned}
-
-
 def _histogram_aggs(col: str, bins: int = 20):
-    """Observation aggregates equivalent to _score_histogram: NULL
-    scores excluded, bucket = min(bins-1, floor(score*bins))."""
-    bucket = F.least(F.lit(bins - 1), F.floor(F.col(col) * bins).cast("int"))
-    return [F.sum((F.col(col).isNotNull() & (bucket == b)).cast("long"))
+    """Observation aggregates of the score histogram: NULL scores
+    excluded, bucket = min(bins-1, floor(score*bins)).  One SQL
+    expression per bin is parsed in the JVM; the Column-API form cost
+    about a dozen py4j calls per bin."""
+    return [F.expr(f"count_if(`{col}` IS NOT NULL AND least({bins - 1}, "
+                   f"CAST(floor(`{col}` * {bins}) AS INT)) = {b})")
             .alias(f"b{b}") for b in range(bins)]
+
+
+def _as_read_back(schema_json):
+    """A schema's JSON with every field, element and map value
+    nullable: the schema a file source reads back from what it wrote."""
+    if isinstance(schema_json, dict):
+        return {k: True if k in ("nullable", "containsNull",
+                                 "valueContainsNull")
+                else _as_read_back(v) for k, v in schema_json.items()}
+    if isinstance(schema_json, list):
+        return [_as_read_back(v) for v in schema_json]
+    return schema_json
 
 
 @dataclass
@@ -105,11 +124,23 @@ class StageRunner:
     def _write(self, df: DataFrame, out_dir: str) -> None:
         df.write.mode("overwrite").format(self.table_format).save(out_dir)
 
-    def _read(self, out_dir: str) -> DataFrame:
-        return self.spark.read.format(self.table_format).load(out_dir)
+    def _read(self, out_dir: str, schema: StructType) -> DataFrame:
+        reader = self.spark.read.format(self.table_format)
+        if self.table_format.lower() in _SCHEMA_ON_READ:
+            reader = reader.schema(schema)
+        return reader.load(out_dir)
 
     def manifest_path(self, stage: str) -> str:
         return os.path.join(self._dir(stage), MANIFEST)
+
+    def manifest(self, stage: str) -> dict | None:
+        """``stage``'s manifest as last written, or None when there is
+        none or it cannot be parsed."""
+        try:
+            with open(self.manifest_path(stage)) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return None
 
     def _lineage_hash(self, stage: str) -> str:
         """Hash of what ``stage`` is built from: the params and the
@@ -117,64 +148,63 @@ class StageRunner:
         return params_hash({"stage": stage, "params": self.params,
                             "upstream": self._upstream})
 
+    def _reusable_manifest(self, stage: str) -> dict | None:
+        m = self.manifest(stage)
+        if (m and m.get("lineage_hash") == self._lineage_hash(stage)
+                and m.get("complete")):
+            return m
+        return None
+
     def is_complete(self, stage: str) -> bool:
         """Whether ``stage``'s persisted output can be reused as the next
         stage of this runner's chain."""
-        p = self.manifest_path(stage)
-        if not os.path.exists(p):
-            return False
-        try:
-            m = json.load(open(p))
-        except Exception:
-            return False
-        return (m.get("lineage_hash") == self._lineage_hash(stage)
-                and m.get("complete"))
+        return self._reusable_manifest(stage) is not None
 
     def run(self, stage: str, build: Callable[[], DataFrame], *,
             score_col: str | None = None,
             repartition: int | None = None,
-            extra_manifest: dict | None = None) -> DataFrame:
+            extra_manifest: dict | None = None,
+            observe: dict | None = None) -> DataFrame:
         """Build + persist a stage, or reload it if already complete.
 
-        ``extra_manifest``: dict reference merged into the manifest at
-        write time — ``build`` may populate it during construction
-        (e.g. the CC round-by-round contracted-edge counts)."""
+        ``extra_manifest``: dict reference merged into the manifest's
+        ``extra`` at write time — ``build`` may populate it during
+        construction (e.g. the CC round-by-round contracted-edge
+        counts).  ``observe``: name -> aggregate Column computed by the
+        write job itself; each value lands in ``extra`` under its
+        name."""
         out_dir = self._dir(stage)
         lineage = self._lineage_hash(stage)
-        if self.is_complete(stage):
+        reused = self._reusable_manifest(stage)
+        if reused is not None:
             self.stages_skipped.append(stage)
             self._upstream = lineage
-            return self._read(out_dir)
+            return self._read(out_dir, StructType.fromJson(reused["schema"]))
         t0 = time.time()
         df = build()
         if repartition:
             df = df.repartition(repartition)
+        schema = StructType.fromJson(_as_read_back(df.schema.jsonValue()))
         # lineage metrics RIDE THE WRITE JOB (CollectMetrics node): row
         # count + score histogram cost nothing extra, instead of paying
         # a second full pass over every stage's output — at 100 TB the
         # post-write re-scan is the same size as the write itself.
         bins = 20
-        metrics = None
-        try:
-            from pyspark.sql import Observation
-            import uuid
-            aggs = [F.count(F.lit(1)).alias("rows")]
-            if score_col is not None:
-                aggs += _histogram_aggs(score_col, bins)
-            obs = Observation(f"lineage_{stage}_{uuid.uuid4().hex[:8]}")
-            df = df.observe(obs, *aggs)
-            self._write(df, out_dir)
-            metrics = obs.get
-        except ImportError:  # pragma: no cover — very old pyspark
-            self._write(df, out_dir)
-        persisted = self._read(out_dir)
+        observe = observe or {}
+        aggs = [F.count(F.lit(1)).alias("rows"),
+                *(c.alias(name) for name, c in observe.items())]
+        if score_col is not None:
+            aggs += _histogram_aggs(score_col, bins)
+        obs = Observation(f"lineage_{stage}_{uuid.uuid4().hex[:8]}")
+        self._write(df.observe(obs, *aggs), out_dir)
+        metrics = obs.get
+        persisted = self._read(out_dir, schema)
         partition_rows, rows_kind = self._partition_rows(out_dir, persisted)
         manifest = {
             "stage": stage,
             "params_hash": params_hash(self.params),
             "lineage_hash": lineage,
-            "row_count": (int(metrics["rows"]) if metrics is not None
-                          else int(sum(partition_rows.values()))),
+            "row_count": int(metrics["rows"]),
             "schema": persisted.schema.jsonValue(),
             "partition_rows": partition_rows,
             "partition_rows_kind": rows_kind,
@@ -183,15 +213,11 @@ class StageRunner:
             "complete": True,
         }
         if score_col is not None:
-            if metrics is not None:
-                hist = {b: int(metrics[f"b{b}"] or 0) for b in range(bins)}
-                manifest["score_histogram"] = {b: c for b, c in hist.items()
-                                               if c}
-            else:  # pragma: no cover
-                manifest["score_histogram"] = _score_histogram(persisted,
-                                                               score_col)
-        if extra_manifest:
-            manifest["extra"] = dict(extra_manifest)
+            hist = {b: int(metrics[f"b{b}"]) for b in range(bins)}
+            manifest["score_histogram"] = {b: c for b, c in hist.items() if c}
+        extra = dict(extra_manifest or {}, **{k: metrics[k] for k in observe})
+        if extra:
+            manifest["extra"] = extra
         with open(self.manifest_path(stage), "w") as f:
             json.dump(manifest, f, indent=1)
         self.stages_run.append(stage)

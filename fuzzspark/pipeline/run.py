@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -24,7 +25,8 @@ from fuzzspark.pipeline.pairs import candidate_pairs
 __all__ = ["LinkageConfig", "run_pipeline"]
 
 
-from fuzzspark.pipeline.util import parse_bytes as _parse_bytes
+from fuzzspark.pipeline.util import (broadcast_max_bytes, content_bytes,
+                                     parse_bytes as _parse_bytes)
 
 
 def _dir_bytes(path: str) -> int | None:
@@ -110,8 +112,6 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
                 return df
         return df.repartition(target)
 
-    integrity_obs: list = []
-
     def _files():
         # a source-provided content_sha256 column is KEPT as the
         # source-table assertion (BASELINE: per-row sha256 equality vs
@@ -120,26 +120,21 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         df = files
         if "content_sha256" not in files.columns:
             df = df.withColumn("content_sha256", sha256_column("content"))
-        df = df.withColumn("content_len", F.length("content"))
-        # round 5: the per-row integrity check RIDES THE WRITE JOB (an
-        # Observation counting recomputed-sha mismatches) instead of
-        # paying a second full corpus scan per run — at 100 TB the old
-        # re-scan was the same size as the write itself
-        try:
-            from pyspark.sql import Observation
-            obs = Observation("integrity_01_files")
-            df = df.observe(obs, F.sum(
-                (sha256_column("content") != F.col("content_sha256"))
-                .cast("long")).alias("sha_mismatch"))
-            integrity_obs.append(obs)
-        except ImportError:  # pragma: no cover — very old pyspark
-            pass
-        return df
+        return df.withColumn("content_len", F.length("content"))
 
-    files_ck = runner.run("01_files", _files)
+    # round 5: the per-row integrity check RIDES THE WRITE JOB (counting
+    # recomputed-sha mismatches) instead of paying a second full corpus
+    # scan per run — at 100 TB the old re-scan was the same size as the
+    # write itself.  The uncompressed content bytes that gate the
+    # 04_scores broadcast ride it too.
+    files_ck = runner.run("01_files", _files, observe={
+        "sha_mismatch": F.sum((sha256_column("content")
+                               != F.col("content_sha256")).cast("long")),
+        "content_bytes": content_bytes()})
+    files_extra = runner.manifest("01_files").get("extra", {})
 
-    if integrity_obs and "01_files" in runner.stages_run:
-        n_drift = int(integrity_obs[0].get["sha_mismatch"] or 0)
+    if "01_files" in runner.stages_run:
+        n_drift = int(files_extra["sha_mismatch"] or 0)
     else:
         # resumed (stage skipped — no write job to ride): verify the
         # PERSISTED stage instead, i.e. the storage roundtrip
@@ -151,19 +146,28 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         raise RuntimeError("content sha256 integrity violation in 01_files")
 
     def _blocks():
-        # widen BEFORE the minhash UDF: the persisted 01_files stage is
-        # tiny on disk and would otherwise reach the python workers as a
-        # single input split.  Round 7: defuse_skew is a single subtree
-        # now (one census exchange, no union), so the block-key rows
-        # have exactly one consumer and the old bk.persist() would only
-        # pay cache materialization for nothing.
-        bk = block_keys(widen(files_ck,
-                              input_bytes=_dir_bytes(runner._dir("01_files"))),
-                        use_exact=cfg.use_exact,
-                        use_path=cfg.use_path, use_minhash=cfg.use_minhash,
-                        n_bands=cfg.n_bands, rows_per_band=cfg.rows_per_band,
-                        shingle=cfg.shingle, max_chars=cfg.max_chars)
-        return defuse_skew(bk, files_ck.select("id", "content_len"),
+        # widen only the MinHash UDF's input: the persisted 01_files
+        # stage is tiny on disk and would otherwise reach the python
+        # workers as a single input split.  The exact and path keys are
+        # JVM expressions and read the 01_files scan directly — fed the
+        # same widen, each union branch would pay its own round-robin
+        # exchange of the whole content.  Round 7: defuse_skew is a
+        # single subtree (one census exchange), so the key rows have
+        # exactly one consumer and need no persist.
+        mh = dict(n_bands=cfg.n_bands, rows_per_band=cfg.rows_per_band,
+                  shingle=cfg.shingle, max_chars=cfg.max_chars)
+        parts = []
+        if cfg.use_exact or cfg.use_path:
+            parts.append(block_keys(files_ck, use_exact=cfg.use_exact,
+                                    use_path=cfg.use_path, use_minhash=False,
+                                    **mh))
+        if cfg.use_minhash:
+            wide = widen(files_ck.select("id", "content_len", "content"),
+                         input_bytes=_dir_bytes(runner._dir("01_files")))
+            parts.append(block_keys(wide, use_exact=False, use_path=False,
+                                    use_minhash=True, **mh))
+        return defuse_skew(reduce(DataFrame.unionByName, parts),
+                           files_ck.select("id", "content_len"),
                            max_block=cfg.max_block, window=cfg.window)
 
     blocks = runner.run("02_blocks", _blocks)
@@ -209,22 +213,21 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         exact = pairs.where(exact_flag)
         content = files_ck.select("id", "content")
         todo_ids = pairs.where(~exact_flag)
-        # round 7: when the persisted corpus stage is small enough to
-        # broadcast (on-disk bytes from the driver listing — free), the
-        # content attach becomes two BroadcastHashJoins and the id-only
-        # pair set never shuffles; the widen happens BEFORE the joins on
-        # slim id rows so the scorer UDF still gets its task width
-        # (guide §3.1).  Above the threshold (conf
-        # ``fuzzspark.broadcast.content.max_bytes``, default 64m) the
-        # shuffle joins distribute the output across
-        # spark.sql.shuffle.partitions as before — a post-join widen()
-        # would re-shuffle every text-attached row a second time; at
-        # the 200x tier that extra shuffle alone is ~100 GB
-        files_bytes = _dir_bytes(runner._dir("01_files"))
-        bc_max = _parse_bytes(spark.conf.get(
-            "fuzzspark.broadcast.content.max_bytes", "64m"))
-        score_info["score_path"] = ("broadcast" if files_bytes is not None
-                                    and files_bytes <= bc_max else "shuffle")
+        # the corpus content is broadcast when its uncompressed bytes
+        # (measured by the 01_files write, as the streaming matcher's
+        # gate measures them) fit ``fuzzspark.broadcast.content.
+        # max_bytes``.  Above the gate the shuffle joins distribute the
+        # output across spark.sql.shuffle.partitions — a post-join
+        # widen() would re-shuffle every text-attached row a second
+        # time; at the 200x tier that extra shuffle alone is ~100 GB
+        if "content_bytes" in files_extra:
+            corpus_bytes = files_extra["content_bytes"]
+        else:  # a 01_files manifest written before it was recorded
+            corpus_bytes = files_ck.agg(content_bytes()).first()[0]
+        bc_max = broadcast_max_bytes(spark)
+        score_info["score_path"] = (
+            "broadcast" if 0 < bc_max and (corpus_bytes or 0) <= bc_max
+            else "shuffle")
         if score_info["score_path"] == "broadcast":
             # Round 7 (second pass, guide §8): within the broadcast
             # gate, resolve content IN the python worker instead of
@@ -240,9 +243,12 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
             # pair checkpoint disappear.  Above the gate the shuffle
             # joins below distribute exactly as before.
             import numpy as np
-            rows = content.collect()  # ≤ bc_max on-disk by the gate
-            b_ids = np.array([r[0] for r in rows], dtype=np.int64)
-            b_txt = np.array([r[1] for r in rows], dtype=object)
+            # Arrow, not Rows: the driver gets the two columns as
+            # arrays, with no Python object per row but the strings
+            table = content.toArrow()
+            b_ids = np.asarray(table.column("id").to_numpy(), np.int64)
+            b_txt = table.column("content").to_numpy(zero_copy_only=False)
+            del table
             order = np.argsort(b_ids)
             bcv = spark.sparkContext.broadcast(
                 (b_ids[order], b_txt[order]))
@@ -353,15 +359,8 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         # disk) upper-bounds the edge count; when it fits the driver-
         # finish threshold, CC skips its contraction passes, reliable
         # checkpoint and fingerprint jobs outright (identical labels)
-        ub_edges = None
-        try:
-            import json as _json
-            with open(runner.manifest_path("04_scores")) as f:
-                m = _json.load(f)
-            if m.get("complete"):
-                ub_edges = int(m["row_count"])
-        except Exception:
-            ub_edges = None
+        m = runner.manifest("04_scores") or {}
+        ub_edges = int(m["row_count"]) if m.get("complete") else None
         labels = connected_components(
             edges, max_iter=cfg.cc_max_iter,
             driver_finish_edges=cfg.cc_driver_finish, stats=cc_stats,

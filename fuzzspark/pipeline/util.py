@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-__all__ = ["parse_bytes"]
+from pyspark.sql import Column, SparkSession, functions as F
+
+__all__ = ["broadcast_max_bytes", "content_bytes", "parse_bytes"]
 
 
 def parse_bytes(v: str) -> int:
@@ -19,3 +21,17 @@ def parse_bytes(v: str) -> int:
         return int(float(s) * mult)
     except ValueError:
         return 0
+
+
+def broadcast_max_bytes(spark: SparkSession) -> int:
+    """``fuzzspark.broadcast.content.max_bytes``: the most uncompressed
+    content bytes (:func:`content_bytes`) that 04_scores and the
+    streaming matcher broadcast; a value <= 0 turns the broadcast off."""
+    return parse_bytes(spark.conf.get("fuzzspark.broadcast.content.max_bytes",
+                                      "64m"))
+
+
+def content_bytes(col: str = "content") -> Column:
+    """The aggregate the broadcast gate measures: UTF-8 bytes of
+    ``col`` summed (NULL over no rows)."""
+    return F.sum(F.octet_length(col))

@@ -14,7 +14,7 @@ from fuzzspark.functions import length_prefilter, scorer_column, sha256_column
 from fuzzspark.kernels import _native
 from fuzzspark.pipeline.blocking import (block_key_columns, block_keys,
                                          make_minhash_matrix)
-from fuzzspark.pipeline.util import parse_bytes
+from fuzzspark.pipeline.util import broadcast_max_bytes, content_bytes
 from fuzzspark.streaming.index import RefIndex, source_name
 
 __all__ = ["streaming_exact_dedup", "streaming_fuzzy_match",
@@ -189,18 +189,17 @@ def _match_batch(reference: DataFrame, scorer: str, threshold: float,
     figures."""
     t0 = time.perf_counter()
     agg = reference.agg(F.count(F.lit(1)).alias("n"),
-                        F.sum(F.octet_length("content")).alias("b")).first()
-    content_bytes = int(agg["b"] or 0)
-    gate = parse_bytes(reference.sparkSession.conf.get(
-        "fuzzspark.broadcast.content.max_bytes", "64m"))
-    use_index = 0 < gate and content_bytes <= gate
+                        content_bytes().alias("b")).first()
+    ref_bytes = int(agg["b"] or 0)
+    gate = broadcast_max_bytes(reference.sparkSession)
+    use_index = 0 < gate and ref_bytes <= gate
     build = _index_matcher if use_index else _join_matcher
     run, release, stats = build(reference, scorer, threshold,
                                 blocking_kwargs, max_block)
     if use_index:  # the broadcast carries the content too
-        stats["index_bytes"] += content_bytes
+        stats["index_bytes"] += ref_bytes
     run.plan = dict(path="broadcast_index" if use_index else "join",
-                    ref_docs=int(agg["n"]), content_bytes=content_bytes,
+                    ref_docs=int(agg["n"]), content_bytes=ref_bytes,
                     max_bytes=gate, **stats,
                     build_s=round(time.perf_counter() - t0, 4),
                     kernel_backend=_native.backend()["backend"])

@@ -1,6 +1,9 @@
 import contextlib
+import json
 import os
 import sys
+import types
+import uuid
 
 import pytest
 
@@ -36,6 +39,50 @@ def broadcast_gate(spark, value: str):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel")
+
+
+@contextlib.contextmanager
+def count_jobs(spark):
+    """Count the Spark jobs the block submits from this thread: yields a
+    namespace whose ``jobs`` holds the count once the block exits.  The
+    block runs under its own job group; the previous group comes back
+    after."""
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    counted = types.SimpleNamespace(jobs=None)
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        yield counted
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+        # the status tracker learns of jobs through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        counted.jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# run_pipeline's stages and the names of the DataFrames it returns
+PIPELINE_STAGES = {"01_files": "files", "02_blocks": "blocks",
+                   "03_pairs": "pairs", "04_scores": "scores",
+                   "05_clusters": "clusters"}
+
+
+def assert_stage_schemas(spark, out, fmt="parquet"):
+    """Each stage's manifest schema, and the schema of the DataFrame
+    ``run_pipeline`` returned for it, equal the schema Spark infers
+    when it reads the stage back."""
+    runner = out["runner"]
+    for stage, name in PIPELINE_STAGES.items():
+        path = runner.manifest_path(stage)
+        inferred = spark.read.format(fmt).load(os.path.dirname(path)).schema
+        with open(path) as f:
+            assert json.load(f)["schema"] == inferred.jsonValue(), stage
+        assert out[name].schema == inferred, stage
 
 
 @pytest.fixture

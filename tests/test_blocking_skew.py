@@ -71,3 +71,34 @@ def test_candidate_pairs_dedup_and_prefilter(spark):
     assert got.count((1, 2)) == 1
     # (1,3)/(2,3): len 6 vs 2 -> bound 2*2/8 = 0.5 < 0.9 -> pruned JVM-side
     assert (1, 3) not in got and (2, 3) not in got
+
+
+@pytest.mark.parametrize("families", [
+    dict(use_exact=True, use_path=True, use_minhash=True),
+    dict(use_exact=True, use_path=True, use_minhash=False),
+    dict(use_exact=False, use_path=False, use_minhash=True),
+], ids=["all", "no_minhash", "minhash_only"])
+def test_pipeline_blocks_equal_one_block_keys_call(spark, tmp_path,
+                                                   families):
+    """run_pipeline builds the exact/path keys and the MinHash keys from
+    different inputs; its 02_blocks rows must equal one block_keys call
+    over 01_files through defuse_skew.  A low max_block makes some
+    blocks window."""
+    from fuzzspark.pipeline import (LinkageConfig, corpus_to_spark,
+                                    generate_corpus, run_pipeline)
+    from fuzzspark.pipeline.blocking import block_keys
+
+    corpus = generate_corpus(n_clusters=12, seed=19, threshold=0.9)
+    files, _, _ = corpus_to_spark(spark, corpus)
+    cfg = LinkageConfig(threshold=0.9, max_block=2, window=2, **families)
+    out = run_pipeline(spark, files, str(tmp_path / "wd"), cfg)
+    files_ck = out["files"]
+    want = defuse_skew(
+        block_keys(files_ck, n_bands=cfg.n_bands,
+                   rows_per_band=cfg.rows_per_band, shingle=cfg.shingle,
+                   max_chars=cfg.max_chars, **families),
+        files_ck.select("id", "content_len"),
+        max_block=cfg.max_block, window=cfg.window)
+    got = sorted(tuple(r) for r in out["blocks"].collect())
+    assert got == sorted(tuple(r) for r in want.collect())
+    assert any("#w" in r[1] for r in got)

@@ -2,6 +2,9 @@
 blocking recall, pairwise F1 >= 0.99 (the BASELINE.json gate), cluster
 correctness vs planted truth, and determinism across reruns."""
 
+import json
+
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -13,6 +16,7 @@ from fuzzspark.pipeline import (
     generate_corpus,
     run_pipeline,
 )
+from tests.conftest import PIPELINE_STAGES, assert_stage_schemas
 
 
 @pytest.fixture(scope="module")
@@ -21,8 +25,13 @@ def corpus():
 
 
 @pytest.fixture(scope="module")
-def pipeline_out(spark, corpus, tmp_path_factory):
-    files, pairs, truth = corpus_to_spark(spark, corpus)
+def corpus_frames(spark, corpus):
+    return corpus_to_spark(spark, corpus)
+
+
+@pytest.fixture(scope="module")
+def pipeline_out(spark, corpus_frames, tmp_path_factory):
+    files, pairs, truth = corpus_frames
     wd = str(tmp_path_factory.mktemp("linkage"))
     out = run_pipeline(spark, files, wd, LinkageConfig(threshold=0.9))
     return out, pairs, truth
@@ -89,11 +98,30 @@ def test_integrity_column(pipeline_out):
 
 def test_score_histogram_in_manifest(pipeline_out):
     out, _, _ = pipeline_out
-    import json
     m = json.load(open(out["runner"].manifest_path("04_scores")))
     assert m["complete"] and m["row_count"] > 0
     assert sum(m["score_histogram"].values()) > 0
     assert m["partition_rows"]
+    # the same histogram from the persisted scores: NULL scores are not
+    # counted, bin = min(19, floor(score * 20)), so 1.0 lands in bin 19
+    scores = out["scores"].select("score").toPandas()["score"]
+    s = scores.dropna().to_numpy()
+    assert scores.isna().any()
+    bins, counts = np.unique(np.minimum(19, np.floor(s * 20).astype(int)),
+                             return_counts=True)
+    assert m["score_histogram"] == {str(b): int(c)
+                                    for b, c in zip(bins, counts)}
+
+
+def test_stage_schemas_match_inference(spark, corpus_frames, pipeline_out):
+    """Stages read back with their recorded schema: it equals the
+    schema parquet infers, on the fresh run and on a resumed one."""
+    out, _, _ = pipeline_out
+    assert_stage_schemas(spark, out)
+    resumed = run_pipeline(spark, corpus_frames[0], out["runner"].root,
+                           LinkageConfig(threshold=0.9))
+    assert resumed["runner"].stages_skipped == list(PIPELINE_STAGES)
+    assert_stage_schemas(spark, resumed)
 
 
 def test_deterministic_rerun(spark, corpus, tmp_path_factory):

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fuzzspark.pipeline import LinkageConfig, corpus_to_spark, generate_corpus, run_pipeline
+from tests.conftest import assert_stage_schemas
 
 
 def test_pipeline_runs_on_orc(spark, tmp_path):
@@ -25,6 +26,9 @@ def test_pipeline_runs_on_orc(spark, tmp_path):
     # resume works through the same format seam
     out2 = run_pipeline(spark, files, str(tmp_path / "wd"), cfg)
     assert len(out2["runner"].stages_skipped) == 5
+    # fresh and resumed stages read back with the schema ORC infers
+    assert_stage_schemas(spark, out, "orc")
+    assert_stage_schemas(spark, out2, "orc")
 
 
 def test_pipeline_iceberg_seam(spark, tmp_path):
