@@ -17,3 +17,10 @@ Re-implements the query/data-processing capabilities of rapidfuzz-rs
 """
 
 __version__ = "0.1.0"
+
+# a Python worker imports the package when it unpickles its first task
+# that uses fuzzspark; from then on its per-task import-cache reset stops
+# re-reading every unchanged zip archive (fuzzspark/_zipgate.py)
+from fuzzspark._zipgate import install as _install_zipgate
+
+_install_zipgate()

@@ -73,6 +73,77 @@ class LinkageConfig:
         return dict(self.__dict__)
 
 
+# 04_scores' columns, in order
+SCORE_COLS = ("left_id", "right_id", "len1", "len2", "exact_equal", "score")
+
+
+def broadcast_scores(spark: SparkSession, content: DataFrame,
+                     pairs: DataFrame, scorer: str,
+                     threshold: float) -> DataFrame:
+    """04_scores' broadcast path: score ``pairs`` (left_id, right_id,
+    exact_equal) against ``content`` (id, content), which the driver
+    collects and broadcasts once, in one ``mapInArrow``.  Rows as the
+    shuffle path writes them: ``len1``/``len2`` are the code-point
+    lengths ``F.length`` gives (NULL for NULL content), an exact pair
+    scores 1.0 and a pair below ``threshold`` scores NULL."""
+    import numpy as np
+    import pyarrow.compute as pc
+    # Arrow, not Rows: the driver gets the two columns as arrays, with
+    # no Python object per row but the strings
+    table = content.toArrow()
+    b_ids = np.asarray(table.column("id").to_numpy(), np.int64)
+    b_txt = table.column("content").to_numpy(zero_copy_only=False)
+    # lengths and their NULL mask once here, not per pair side per task
+    lens = pc.utf8_length(table.column("content"))
+    b_null = lens.is_null().to_numpy()
+    b_len = lens.fill_null(0).to_numpy().astype(np.int32)
+    del table, lens
+    order = np.argsort(b_ids)
+    bcv = spark.sparkContext.broadcast(
+        (b_ids[order], b_txt[order], b_len[order], b_null[order]))
+
+    def score_map(batches):
+        import pyarrow as pa
+        from fuzzspark.kernels.batch import batch_scores
+        ids, texts, lens, null = bcv.value
+        for batch in batches:
+            li = batch.column("left_id").to_numpy()
+            ri = batch.column("right_id").to_numpy()
+            ex_raw = batch.column("exact_equal")
+            n = len(li)
+            ex = np.asarray(ex_raw.fill_null(False)
+                            .to_numpy(zero_copy_only=False), dtype=bool)
+            i1 = np.searchsorted(ids, li)
+            i2 = np.searchsorted(ids, ri)
+            # a bug guard only: stage lineage chains 03_pairs to the
+            # 01_files it was built from, so a resume cannot pair ids
+            # from another corpus and this is unreachable on resume
+            if n and (len(ids) == 0
+                      or (ids[np.clip(i1, 0, len(ids) - 1)] != li).any()
+                      or (ids[np.clip(i2, 0, len(ids) - 1)] != ri).any()):
+                raise RuntimeError(
+                    "04_scores: pair id missing from the corpus "
+                    "broadcast (pairs must derive from 01_files)")
+            out = np.full(n, np.nan)
+            todo = ~ex
+            if todo.any():
+                out[todo] = batch_scores(
+                    scorer, "normalized_similarity",
+                    texts[i1[todo]], texts[i2[todo]],
+                    score_cutoff=threshold)
+            out[ex] = 1.0
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(li), pa.array(ri),
+                 pa.array(lens[i1], mask=null[i1]),
+                 pa.array(lens[i2], mask=null[i2]),
+                 ex_raw, pa.array(out, mask=np.isnan(out))],
+                names=list(SCORE_COLS))
+
+    return pairs.mapInArrow(
+        score_map, "left_id long, right_id long, len1 int, len2 int, "
+                   "exact_equal boolean, score double")
+
+
 def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
                  config: LinkageConfig | None = None) -> dict:
     """Returns dict of stage DataFrames: files, blocks, pairs, scores,
@@ -197,8 +268,6 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         # pushed into the kernel: sub-threshold scores come back NULL
         # (identical to the post-hoc WHERE, per reference cutoff
         # semantics src/common.rs:73-86)
-        out_cols = ["left_id", "right_id", "len1", "len2",
-                    "exact_equal", "score"]
         # NULL-safe split (ADVICE r4): under three-valued logic a bare
         # predicate AND its negation both drop NULL rows — coalesce so
         # a NULL exact_equal (NULL content/sha) takes the scorer path
@@ -242,74 +311,13 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
             # kernel), so the split/union and its extra scan of the
             # pair checkpoint disappear.  Above the gate the shuffle
             # joins below distribute exactly as before.
-            import numpy as np
-            # Arrow, not Rows: the driver gets the two columns as
-            # arrays, with no Python object per row but the strings
-            table = content.toArrow()
-            b_ids = np.asarray(table.column("id").to_numpy(), np.int64)
-            b_txt = table.column("content").to_numpy(zero_copy_only=False)
-            del table
-            order = np.argsort(b_ids)
-            bcv = spark.sparkContext.broadcast(
-                (b_ids[order], b_txt[order]))
-            scorer_name, thr = cfg.scorer, cfg.threshold
-
-            def score_map(batches):
-                import pyarrow as pa
-                from fuzzspark.kernels.batch import batch_scores
-                ids, texts = bcv.value
-                for batch in batches:
-                    li = batch.column("left_id").to_numpy()
-                    ri = batch.column("right_id").to_numpy()
-                    ex_raw = batch.column("exact_equal")
-                    n = len(li)
-                    ex = np.asarray(
-                        ex_raw.fill_null(False)
-                        .to_numpy(zero_copy_only=False), dtype=bool)
-                    i1 = np.searchsorted(ids, li)
-                    i2 = np.searchsorted(ids, ri)
-                    # a bug guard only: stage lineage chains 03_pairs to
-                    # the 01_files it was built from, so a resume cannot
-                    # pair ids from another corpus and this is unreachable
-                    # on resume
-                    if n and (len(ids) == 0
-                              or (ids[np.clip(i1, 0, len(ids) - 1)]
-                                  != li).any()
-                              or (ids[np.clip(i2, 0, len(ids) - 1)]
-                                  != ri).any()):
-                        raise RuntimeError(
-                            "04_scores: pair id missing from the corpus "
-                            "broadcast (pairs must derive from 01_files)")
-                    s1 = texts[i1] if n else texts[:0]
-                    s2 = texts[i2] if n else texts[:0]
-                    out = np.full(n, np.nan)
-                    todo = ~ex
-                    if todo.any():
-                        out[todo] = batch_scores(
-                            scorer_name, "normalized_similarity",
-                            s1[todo], s2[todo], score_cutoff=thr)
-                    out[ex] = 1.0
-                    l1 = np.fromiter(
-                        (len(s) if s is not None else 0 for s in s1),
-                        np.int64, n).astype(np.int32)
-                    l2 = np.fromiter(
-                        (len(s) if s is not None else 0 for s in s2),
-                        np.int64, n).astype(np.int32)
-                    m1 = np.fromiter((s is None for s in s1), bool, n)
-                    m2 = np.fromiter((s is None for s in s2), bool, n)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(li), pa.array(ri),
-                         pa.array(l1, mask=m1), pa.array(l2, mask=m2),
-                         ex_raw, pa.array(out, mask=np.isnan(out))],
-                        names=out_cols)
-
-            # pass ONLY the columns the mapper reads (guide §4.1) —
+            #
+            # Pass ONLY the columns the mapper reads (guide §4.1) —
             # the widen shuffle then moves 17 B rows
-            return widen(pairs.select("left_id", "right_id",
-                                      "exact_equal")).mapInArrow(
-                score_map,
-                "left_id long, right_id long, len1 int, len2 int, "
-                "exact_equal boolean, score double")
+            return broadcast_scores(
+                spark, content,
+                widen(pairs.select("left_id", "right_id", "exact_equal")),
+                cfg.scorer, cfg.threshold)
         # above the broadcast gate: shuffle joins attach content to the
         # scorer side.  NOTE (measured): a shared-child alias form does
         # NOT get ReusedExchange here — the analyzer's attribute dedup
@@ -333,12 +341,12 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
                 F.col("id").alias("left_id"),
                 F.col("content_len").alias("len1")), "left_id")
                 .withColumn("len2", F.col("len1")))
-        exact = exact.withColumn("score", F.lit(1.0)).select(*out_cols)
+        exact = exact.withColumn("score", F.lit(1.0)).select(*SCORE_COLS)
         scored = todo.withColumn(
             "score", scorer_column(cfg.scorer, "s1", "s2",
                                    "normalized_similarity",
                                    score_cutoff=cfg.threshold))
-        return scored.select(*out_cols).unionByName(exact)
+        return scored.select(*SCORE_COLS).unionByName(exact)
 
     scores = runner.run("04_scores", _score, score_col="score",
                         extra_manifest=score_info)
