@@ -3,7 +3,7 @@
 Five strategies, cheapest-first (the standard training-data stack):
 
 * exact       — groupBy sha256(content): one shuffle, no scoring.
-* minhash-LSH — fuzzspark.pipeline.blocking.minhash_bands_udf (shared
+* minhash-LSH — fuzzspark.pipeline.blocking.minhash_key_rows (shared
   with the linkage pipeline): near-dup candidates at ~O(n) via band
   bucketing; verify candidates with n-gram Jaccard or ``ratio``.
 * simhash     — 64-bit token-hash fingerprint; near-dups differ in few
@@ -251,8 +251,6 @@ def minhash_near_dup_pairs(df: DataFrame, *, id_col: str = "id",
                            shingle: int = 5) -> DataFrame:
     """MinHash-LSH candidates verified by exact n-gram Jaccard."""
     from fuzzspark.pipeline.blocking import minhash_key_rows, normalize_content
-    # round 7: pre-exploded Arrow key rows (same keys, no per-doc
-    # Python list + JVM explode — see blocking.minhash_key_rows)
     keys = minhash_key_rows(
         df.select(F.col(id_col).alias("id"),
                   normalize_content(F.col(content_col)).alias("__mh_norm")),

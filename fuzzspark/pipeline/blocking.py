@@ -6,9 +6,9 @@ Key families (each a (id, block_key) relation; union = recall ∪):
 * ``path``     — (lang, normalized path stem): cheap structural key.
 * ``minhash``  — MinHash-LSH over character shingles of normalized
   content: b bands × r rows; two files share a band key with
-  probability 1-(1-j^r)^b for Jaccard j (the LSH S-curve).  Computed in
-  ONE vectorized pandas UDF returning array<long>, then exploded —
-  no per-row Python (BASELINE.json:input_hint).
+  probability 1-(1-j^r)^b for Jaccard j (the LSH S-curve).  Computed
+  per Arrow batch in ONE ``mapInArrow`` that emits the key rows already
+  exploded, one flat int64 column (:func:`minhash_key_rows`).
 
 Skew defusal: a single giant block produces O(n²) pairs no matter what
 AQE does to the *join*, so oversized blocks are length-sorted and
@@ -19,12 +19,10 @@ documented recall tradeoff) — SURVEY.md §4 "what Catalyst cannot do".
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
 __all__ = ["normalize_content", "block_key_columns", "block_keys",
-           "defuse_skew", "minhash_bands_udf", "minhash_key_rows"]
+           "defuse_skew", "minhash_key_rows"]
 
 # large 63-bit primes for the affine minhash family
 _MERSENNE = (1 << 61) - 1
@@ -119,7 +117,7 @@ def make_minhash_compute(n_bands: int = 8, rows_per_band: int = 4,
                          shingle: int = 5, max_chars: int = 2000,
                          seed: int = 1729):
     """Plain-python MinHash band-key computation (no Spark dependency;
-    the UDF below wraps it).
+    the parity reference for :func:`minhash_key_rows`).
 
     MinHash over character shingles of the first ``max_chars`` chars
     (content prefix shingles per BASELINE.json north_star).  Band key =
@@ -139,20 +137,6 @@ def make_minhash_compute(n_bands: int = 8, rows_per_band: int = 4,
     return compute
 
 
-def minhash_bands_udf(n_bands: int = 8, rows_per_band: int = 4,
-                      shingle: int = 5, max_chars: int = 2000,
-                      seed: int = 1729):
-    """pandas UDF: content -> array<long> of band keys."""
-    compute = make_minhash_compute(n_bands, rows_per_band, shingle,
-                                   max_chars, seed)
-
-    @pandas_udf("array<long>")
-    def _udf(content: pd.Series) -> pd.Series:
-        return pd.Series(compute(content), index=content.index)
-
-    return _udf
-
-
 def minhash_key_rows(df: DataFrame, *, id_col: str = "id",
                      text_col: str = "__mh_norm",
                      carry: tuple[str, ...] = (),
@@ -162,13 +146,11 @@ def minhash_key_rows(df: DataFrame, *, id_col: str = "id",
     """Pre-exploded MinHash key rows: ``df`` (with an already-normalized
     ``text_col``) -> (id_col, *carry, bk:long), one row per (doc, band).
 
-    Round 7 (guide §4.2): equivalent to
-    ``explode(minhash_bands_udf(text_col))`` — same kernel, same keys,
-    null texts dropped just as ``explode`` drops null arrays — but the
-    keys leave the Python worker as one flat Arrow int64 column
-    (``matrix.ravel()`` + ``np.repeat`` of the carried columns) instead
-    of a per-doc Python list that the JVM then re-explodes.  The
-    per-doc list build + explode was most of the key stage's cost."""
+    The rows are :func:`make_minhash_compute`'s per-doc keys, exploded:
+    same kernel, same keys, no row for a null text.  They leave the
+    Python worker as one flat Arrow int64 column (``matrix.ravel()`` +
+    ``np.repeat`` of the carried columns), with no per-doc Python list
+    and no JVM ``explode``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -230,11 +212,10 @@ def block_keys(files: DataFrame, *, use_exact: bool = True,
                shingle: int = 5, max_chars: int = 2000) -> DataFrame:
     """(id, block_key:string) relation — union over key families.
 
-    Round 7: when ``files`` carries ``content_len``, the key rows carry
-    it too (+8 B/row).  Downstream this lets candidate_pairs read both
-    pair lengths straight off the join sides instead of paying two
-    shuffles of the (amplified) pair set to attach them — see
-    candidate_pairs(attach_sides=False)."""
+    When ``files`` carries ``content_len``, the key rows carry it too
+    (+8 B/row): :func:`defuse_skew` orders oversized blocks by it and
+    :func:`~fuzzspark.pipeline.pairs.candidate_pairs` reads both pair
+    lengths off its join sides.  Both require it."""
     carry = ["content_len"] if "content_len" in files.columns else []
     cols = block_key_columns(use_exact=use_exact, use_path=use_path,
                              use_minhash=use_minhash)
@@ -259,45 +240,30 @@ def block_keys(files: DataFrame, *, use_exact: bool = True,
     return out
 
 
-def defuse_skew(blocks: DataFrame, files_len: DataFrame,
-                max_block: int = 200, window: int = 20) -> DataFrame:
+def defuse_skew(blocks: DataFrame, *, max_block: int = 200,
+                window: int = 20) -> DataFrame:
     """Bound pair blow-up of oversized blocks.
 
+    ``blocks``: (id, block_key, content_len) key rows, as
+    :func:`block_keys` emits them from a ``files`` with ``content_len``.
     Blocks with <= max_block members pass through.  Larger blocks are
     sorted by content length (near-dups have near-equal lengths — the
     length-difference prune would reject far-apart pairs anyway) and
     re-keyed into overlapping windows of ``window`` members with 50%
-    overlap: pairs per member bounded by ~2*window instead of n.
-
-    ``files_len``: (id, content_len), joined only when ``blocks`` does
-    not carry ``content_len`` itself.
+    overlap: pairs per member bounded by ~2*window instead of n.  A
+    NULL length (NULL content) sorts first and ties break by id, so
+    ranks stay deterministic and no key row loses its block.
     """
     from pyspark.sql import Window
+    if "content_len" not in blocks.columns:
+        raise ValueError("defuse_skew needs blocks with content_len "
+                         "(see block_keys)")
     # window census: ONE shuffle by block_key and a single computation
-    # of the (UDF-bearing) blocks input — a groupBy+self-join would scan
-    # it twice and pay a second shuffle for the join.  Key rows that
-    # already carry content_len (see block_keys) skip the files_len
-    # join, so the downstream pair join can read both lengths off its
-    # sides.
-    #
-    # Round 7 (second pass): the old small ∪ w0 ∪ w1 union replicated
-    # the census subtree into THREE branches whose analyzer-deduped
-    # attribute ids defeated exchange reuse — the executed plan carried
-    # three hashpartitioning(block_key) exchanges + sorts + windows,
-    # and the event log showed the census jobs running 3x per stage.
-    # Both windows share one partitioning (guide §2.4), so they now
-    # stack over a SINGLE exchange+sort, and the 1-or-2 output keys per
-    # row come from ONE explode instead of a union: identical output
-    # rows, one shuffle of the key set instead of three.  At the 1600x
-    # smoke tier that is two fewer shuffles+sorts of 148M key rows.
-    carry = ["content_len"] if "content_len" in blocks.columns else []
-    if not carry:
-        # LEFT join: a key row whose id is missing from files_len keeps
-        # its block membership with a NULL length (an inner join would
-        # drop it silently); the ascending window order puts NULL
-        # lengths first and breaks ties by id, so ranks stay
-        # deterministic
-        blocks = blocks.join(files_len, "id", "left")
+    # of the (UDF-bearing) blocks input.  Both windows share that
+    # partitioning (guide §2.4), so they stack over a single
+    # exchange+sort, and the 1-or-2 output keys per row come from ONE
+    # explode, not a union of subtrees that would each re-run the
+    # census.
     wc = Window.partitionBy("block_key")
     wr = wc.orderBy("content_len", "id")
     half = max(1, window // 2)
@@ -313,4 +279,5 @@ def defuse_skew(blocks: DataFrame, files_len: DataFrame,
         F.concat(F.col("block_key"), F.lit("#v"),
                  ((F.col("_rank") + half) / window).cast("long")
                  .cast("string"))))
-    return c.select("id", F.explode(keys).alias("block_key"), *carry)
+    return c.select("id", F.explode(keys).alias("block_key"),
+                    "content_len")

@@ -148,10 +148,16 @@ class StageRunner:
         return params_hash({"stage": stage, "params": self.params,
                             "upstream": self._upstream})
 
-    def _reusable_manifest(self, stage: str) -> dict | None:
+    def _reusable_manifest(self, stage: str,
+                           observe=()) -> dict | None:
+        """``stage``'s manifest when its output can be reused: complete,
+        of this lineage, and holding a value for every name in
+        ``observe`` (a manifest written before a value was observed is
+        rebuilt, so no reader of ``extra`` meets a missing name)."""
         m = self.manifest(stage)
         if (m and m.get("lineage_hash") == self._lineage_hash(stage)
-                and m.get("complete")):
+                and m.get("complete")
+                and set(observe) <= set(m.get("extra", {}))):
             return m
         return None
 
@@ -171,11 +177,12 @@ class StageRunner:
         ``extra`` at write time — ``build`` may populate it during
         construction (e.g. the CC round-by-round contracted-edge
         counts).  ``observe``: name -> aggregate Column computed by the
-        write job itself; each value lands in ``extra`` under its
-        name."""
+        write job itself; each value lands in ``extra`` under its name,
+        and a stored stage whose ``extra`` lacks one is rebuilt."""
+        observe = observe or {}
         out_dir = self._dir(stage)
         lineage = self._lineage_hash(stage)
-        reused = self._reusable_manifest(stage)
+        reused = self._reusable_manifest(stage, observe)
         if reused is not None:
             self.stages_skipped.append(stage)
             self._upstream = lineage
@@ -190,7 +197,6 @@ class StageRunner:
         # a second full pass over every stage's output — at 100 TB the
         # post-write re-scan is the same size as the write itself.
         bins = 20
-        observe = observe or {}
         aggs = [F.count(F.lit(1)).alias("rows"),
                 *(c.alias(name) for name, c in observe.items())]
         if score_col is not None:

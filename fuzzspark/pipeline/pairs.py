@@ -16,145 +16,40 @@ from fuzzspark.functions import length_prefilter
 __all__ = ["candidate_pairs"]
 
 
-def _metadata_rowcount(df: DataFrame) -> int | None:
-    """Rowcount from parquet footer metadata — ZERO Spark jobs (round
-    6; the checkpoint.py manifest mechanism applied to the broadcast
-    decision).  Only valid when the DataFrame is a pure projection of a
-    parquet scan: any Filter/Join/Aggregate/... in the optimized plan
-    changes the rowcount, so those return None (caller falls back to a
-    count job)."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:  # pragma: no cover — py4j API drift
-        return None
-    for node in ("Filter", "Join", "Aggregate", "Union", "Generate",
-                 "Window", "GlobalLimit", "LocalLimit", "Sample",
-                 "Deduplicate", "Intersect", "Except", "Expand"):
-        if node in plan:
-            return None
-    try:
-        files = [f[len("file:"):] if f.startswith("file:") else f
-                 for f in df.inputFiles()]
-    except Exception:  # pragma: no cover
-        return None
-    if not files or not all(f.endswith(".parquet") for f in files):
-        return None
-    try:
-        import duckdb
-        row = duckdb.execute(
-            "SELECT sum(num_rows) FROM parquet_file_metadata(?)",
-            [files]).fetchone()
-        return int(row[0]) if row and row[0] is not None else None
-    except Exception:  # pragma: no cover — duckdb absent / odd footer
-        return None
+def candidate_pairs(blocks: DataFrame, *, scorer: str = "ratio",
+                    cutoff: float = 0.9) -> DataFrame:
+    """(left_id, right_id, exact_equal) distinct pairs of ``blocks``
+    (id, block_key, content_len) rows that share a block key.
 
+    The length prune reads both lengths off the two join sides, so it
+    runs BEFORE the dedup exchange: length-impossible pairs never
+    shuffle, and the surviving rows stay 17 B.  ``exact_equal`` is
+    decided from the exact-sha block family itself: a pair is
+    content-equal iff it shares an ``x:``-prefixed key.  Without the
+    exact family (``use_exact=False``) equal pairs take the scorer path
+    and still score 1.0.  The same pair found via several keys is
+    deduped BEFORE scoring, by one aggregation on the pair key.
 
-def candidate_pairs(files: DataFrame, blocks: DataFrame, *,
-                    scorer: str = "ratio", cutoff: float = 0.9,
-                    broadcast_threshold: int | None = None,
-                    attach_sides: bool = True) -> DataFrame:
-    """(left_id, right_id, len1, len2, exact_equal) distinct pairs.
-
-    ``attach_sides=False`` (round 7, requires ``blocks`` to carry
-    ``content_len`` — see block_keys): returns SKINNY distinct pairs
-    (left_id, right_id, exact_equal) only.  The length prune reads both
-    lengths straight off the two join sides (so it runs BEFORE the
-    dedup exchange and length-impossible pairs never shuffle), and
-    ``exact_equal`` is decided from the exact-sha block family itself
-    (a pair is content-equal iff it shares an ``x:``-prefixed key —
-    the same sha256-equality guarantee as comparing attached hashes).
-    The TWO side-attach joins disappear and the (amplified) pair set is
-    shuffled exactly ONCE, as 17 B rows, for the dedup aggregation; the
-    scoring stage re-derives len1/len2 from the content it attaches
-    anyway.  At the 3200x tier the attach joins were two extra full
-    shuffles of the pair stream hitting the scratch-disk ceiling
-    (VERDICT r6 item 1), and a fat dedup row (lengths carried through)
-    measured WORSE at broadcast-able tiers — hence skinny.  Requires
-    ``use_exact`` blocking for exact-dup detection (without the x:
-    family, equal pairs simply take the scorer path and still score
-    1.0 — slower, never wrong).
-
-    ``files`` must have (id, content) — or, cheaper, precomputed
-    (id, content_len, content_sha256) as 01_files provides; ``blocks``
-    (id, block_key).  The same pair found via several keys is deduped
-    BEFORE scoring (aggregation on the pair key — cheaper than scoring
-    twice).
-
-    TEXT IS NOT MATERIALIZED into the pair rows (round 4): inlining
-    both contents would multiply the checkpoint by the pair
-    amplification factor (a 100 TB corpus with 10x amplification would
-    write petabytes); the scoring stage joins content by id instead.
-    ``exact_equal`` therefore compares the sha256 of the contents —
-    identical decisions, 64 bytes per side instead of the documents.
-
-    ``broadcast_threshold`` (rows; round 5): when set and the sides
-    projection (id + len + sha) has at most that many rows, broadcast
-    it so both attach joins become BroadcastHashJoins and the amplified
-    pair-id set never shuffles.  None (default) leaves the choice to
-    Catalyst/AQE statistics.
+    Text never rides the pair rows: inlining both contents would
+    multiply the checkpoint by the pair amplification factor, so the
+    scoring stage attaches content by id instead.
     """
-    if not attach_sides:
-        if "content_len" not in blocks.columns:
-            raise ValueError("attach_sides=False requires blocks to carry "
-                             "content_len (see block_keys)")
-        left = blocks.alias("l")
-        right = blocks.alias("r")
-        is_x = F.col("l.block_key").startswith("x:")
-        # prune BEFORE the dedup exchange using the side lengths, but
-        # do NOT project them through it: length-impossible pairs never
-        # shuffle, and the surviving rows stay 17 B.  x: pairs always
-        # pass the uniform-cost length bound (len1 == len2 -> bound =
-        # 1.0), kept explicit for parity with the attach path's
-        # `exact_equal | prefilter`.
-        cand = (
-            left.join(right, F.col("l.block_key") == F.col("r.block_key"))
-            .where((F.col("l.id") < F.col("r.id"))
-                   & (is_x | length_prefilter(F.col("l.content_len"),
-                                              F.col("r.content_len"),
-                                              scorer, cutoff)))
-            .select(F.col("l.id").alias("left_id"),
-                    F.col("r.id").alias("right_id"),
-                    is_x.alias("_is_x")))
-        return (cand.groupBy("left_id", "right_id")
-                .agg(F.max("_is_x").alias("exact_equal")))
-    cols = set(files.columns)
-    sides = files.select(
-        "id",
-        (F.col("content_len") if "content_len" in cols
-         else F.length("content")).alias("content_len"),
-        (F.col("content_sha256") if "content_sha256" in cols
-         else F.sha2(F.col("content").cast("binary"), 256)).alias("_sha"))
-    b = blocks
-    left = b.alias("l")
-    right = b.alias("r")
-    pair_ids = (
+    if "content_len" not in blocks.columns:
+        raise ValueError("candidate_pairs needs blocks with content_len "
+                         "(see block_keys)")
+    left = blocks.alias("l")
+    right = blocks.alias("r")
+    is_x = F.col("l.block_key").startswith("x:")
+    # x: pairs have len1 == len2 and so pass any length bound; the
+    # explicit term keeps exact duplicates independent of the scorer
+    cand = (
         left.join(right, F.col("l.block_key") == F.col("r.block_key"))
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("left_id"), F.col("r.id").alias("right_id"))
-        .dropDuplicates(["left_id", "right_id"])
-    )
-    lf = sides.select(F.col("id").alias("left_id"),
-                      F.col("content_len").alias("len1"),
-                      F.col("_sha").alias("_sha1"))
-    rf = sides.select(F.col("id").alias("right_id"),
-                      F.col("content_len").alias("len2"),
-                      F.col("_sha").alias("_sha2"))
-    if broadcast_threshold is not None and broadcast_threshold > 0:
-        # the sides projection is ~80 B/row (id + len + sha); when it
-        # fits, broadcasting turns both attach joins into
-        # BroadcastHashJoins — the (amplified) pair-id set never
-        # shuffles.  Round 6: the deciding rowcount comes FREE from the
-        # parquet footers when ``files`` is a persisted stage scan
-        # (zero Spark jobs); only a non-scan input pays a count job.
-        n_sides = _metadata_rowcount(files)
-        if n_sides is None:
-            n_sides = sides.count()
-        if n_sides <= broadcast_threshold:
-            lf, rf = F.broadcast(lf), F.broadcast(rf)
-    pairs = (pair_ids.join(lf, "left_id").join(rf, "right_id")
-             .withColumn("exact_equal", F.col("_sha1") == F.col("_sha2")))
-    # Catalyst-native prune: pairs that cannot reach the cutoff by length
-    pairs = pairs.where(
-        F.col("exact_equal")
-        | length_prefilter(F.col("len1"), F.col("len2"), scorer, cutoff))
-    return pairs.select("left_id", "right_id", "len1", "len2", "exact_equal")
+        .where((F.col("l.id") < F.col("r.id"))
+               & (is_x | length_prefilter(F.col("l.content_len"),
+                                          F.col("r.content_len"),
+                                          scorer, cutoff)))
+        .select(F.col("l.id").alias("left_id"),
+                F.col("r.id").alias("right_id"),
+                is_x.alias("_is_x")))
+    return (cand.groupBy("left_id", "right_id")
+            .agg(F.max("_is_x").alias("exact_equal")))

@@ -193,16 +193,17 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
             df = df.withColumn("content_sha256", sha256_column("content"))
         return df.withColumn("content_len", F.length("content"))
 
-    # round 5: the per-row integrity check RIDES THE WRITE JOB (counting
+    # the per-row integrity check RIDES THE WRITE JOB (counting
     # recomputed-sha mismatches) instead of paying a second full corpus
-    # scan per run — at 100 TB the old re-scan was the same size as the
-    # write itself.  The uncompressed content bytes that gate the
+    # scan per run.  The uncompressed content bytes that gate the
     # 04_scores broadcast ride it too.
     files_ck = runner.run("01_files", _files, observe={
         "sha_mismatch": F.sum((sha256_column("content")
                                != F.col("content_sha256")).cast("long")),
         "content_bytes": content_bytes()})
-    files_extra = runner.manifest("01_files").get("extra", {})
+    # StageRunner reuses a stage only when its manifest holds every
+    # observed value, so both are here on a fresh run and a resume alike
+    files_extra = runner.manifest("01_files")["extra"]
 
     if "01_files" in runner.stages_run:
         n_drift = int(files_extra["sha_mismatch"] or 0)
@@ -222,9 +223,9 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         # workers as a single input split.  The exact and path keys are
         # JVM expressions and read the 01_files scan directly — fed the
         # same widen, each union branch would pay its own round-robin
-        # exchange of the whole content.  Round 7: defuse_skew is a
-        # single subtree (one census exchange), so the key rows have
-        # exactly one consumer and need no persist.
+        # exchange of the whole content.  defuse_skew is a single
+        # subtree (one census exchange), so the key rows have exactly
+        # one consumer and need no persist.
         mh = dict(n_bands=cfg.n_bands, rows_per_band=cfg.rows_per_band,
                   shingle=cfg.shingle, max_chars=cfg.max_chars)
         parts = []
@@ -238,23 +239,18 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
             parts.append(block_keys(wide, use_exact=False, use_path=False,
                                     use_minhash=True, **mh))
         return defuse_skew(reduce(DataFrame.unionByName, parts),
-                           files_ck.select("id", "content_len"),
                            max_block=cfg.max_block, window=cfg.window)
 
     blocks = runner.run("02_blocks", _blocks)
 
-    # round 7: the block rows carry content_len, so candidate_pairs
-    # reads both pair lengths off the join sides and decides exact_equal
-    # from the x: key family — the two side-attach joins (two full
-    # shuffles of the amplified pair set, the 3200x-tier scratch-ceiling
-    # driver) are gone and the dedup exchange runs on the length-pruned
-    # set.  Falls back to the attach path if the blocks stage predates
-    # the len-carrying schema (resume from an old workdir).
+    # the block rows carry content_len, so candidate_pairs reads both
+    # pair lengths off the join sides and decides exact_equal from the
+    # x: key family: the pair set shuffles once, length-pruned, for the
+    # dedup
     pairs = runner.run(
         "03_pairs",
-        lambda: candidate_pairs(
-            files_ck, blocks, scorer=cfg.scorer, cutoff=cfg.threshold,
-            attach_sides="content_len" not in blocks.columns))
+        lambda: candidate_pairs(blocks, scorer=cfg.scorer,
+                                cutoff=cfg.threshold))
 
     # the driver's kernel backend and the scoring path (set by _score)
     # land in the 04_scores manifest
@@ -264,21 +260,20 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         # 03_pairs is id-only (text never rides the pair checkpoint —
         # see candidate_pairs); join content back by id here.  Exact
         # duplicates skip the join and the scorer entirely (score 1.0
-        # from the sha equality decided at pair time).  Cutoff is
+        # from the shared x: key found at pair time).  Cutoff is
         # pushed into the kernel: sub-threshold scores come back NULL
         # (identical to the post-hoc WHERE, per reference cutoff
         # semantics src/common.rs:73-86)
         # NULL-safe split (ADVICE r4): under three-valued logic a bare
         # predicate AND its negation both drop NULL rows — coalesce so
-        # a NULL exact_equal (NULL content/sha) takes the scorer path
-        # and surfaces as a NULL score, as the old when/otherwise did
+        # a NULL exact_equal takes the scorer path and surfaces as a
+        # NULL score
         exact_flag = F.coalesce(F.col("exact_equal"), F.lit(False))
-        # round 7: the skinny pair checkpoint carries no lengths (they
-        # would have doubled the pair dedup shuffle) — re-derive them
-        # here: the scorer branch gets them free off the content it
-        # attaches anyway; the exact branch (len1 == len2 by
-        # definition) attaches ONE side's stored content_len
-        skinny = "len1" not in pairs.columns
+        # the pair checkpoint carries no lengths (they would double the
+        # pair dedup shuffle), so they are derived here: the scorer
+        # branch gets them off the content it attaches anyway; the
+        # exact branch (len1 == len2 by definition) attaches ONE side's
+        # stored content_len
         exact = pairs.where(exact_flag)
         content = files_ck.select("id", "content")
         todo_ids = pairs.where(~exact_flag)
@@ -289,28 +284,19 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         # output across spark.sql.shuffle.partitions — a post-join
         # widen() would re-shuffle every text-attached row a second
         # time; at the 200x tier that extra shuffle alone is ~100 GB
-        if "content_bytes" in files_extra:
-            corpus_bytes = files_extra["content_bytes"]
-        else:  # a 01_files manifest written before it was recorded
-            corpus_bytes = files_ck.agg(content_bytes()).first()[0]
+        corpus_bytes = files_extra["content_bytes"]
         bc_max = broadcast_max_bytes(spark)
         score_info["score_path"] = (
             "broadcast" if 0 < bc_max and (corpus_bytes or 0) <= bc_max
             else "shuffle")
         if score_info["score_path"] == "broadcast":
-            # Round 7 (second pass, guide §8): within the broadcast
-            # gate, resolve content IN the python worker instead of
-            # attaching it row-wise in the JVM.  The corpus (id,
-            # content) ships ONCE per executor as a broadcast variable
-            # (bounded by the same conf that bounded the old
-            # F.broadcast), only the ~17 B id pairs cross the Arrow
-            # boundary, and no per-pair string is materialized JVM-side
-            # — the old ArrowEvalPython path allocated a fresh python
-            # string per pair SIDE (~2 × pairs × doc_len bytes).  The
-            # exact branch folds into the same mapper (score 1.0, no
-            # kernel), so the split/union and its extra scan of the
-            # pair checkpoint disappear.  Above the gate the shuffle
-            # joins below distribute exactly as before.
+            # within the broadcast gate, content is resolved IN the
+            # python worker (guide §8): the corpus (id, content) ships
+            # ONCE per executor as a broadcast variable, only the ~17 B
+            # id pairs cross the Arrow boundary, and no per-pair string
+            # is materialized JVM-side.  The exact branch folds into
+            # the same mapper (score 1.0, no kernel), so there is no
+            # split/union and no second scan of the pair checkpoint.
             #
             # Pass ONLY the columns the mapper reads (guide §4.1) —
             # the widen shuffle then moves 17 B rows
@@ -331,17 +317,14 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
                 .join(c1, F.col("p.left_id") == F.col("c1.id"))
                 .join(c2, F.col("p.right_id") == F.col("c2.id"))
                 .select("p.*", F.col("c1.content").alias("s1"),
-                        F.col("c2.content").alias("s2")))
-        if skinny:
-            todo = todo.withColumn("len1", F.length("s1")) \
-                       .withColumn("len2", F.length("s2"))
-            # exact rows: len1 == len2 by definition (content-equal);
-            # the stored content_len attaches as a 16 B row
-            exact = (exact.join(files_ck.select(
-                F.col("id").alias("left_id"),
-                F.col("content_len").alias("len1")), "left_id")
-                .withColumn("len2", F.col("len1")))
-        exact = exact.withColumn("score", F.lit(1.0)).select(*SCORE_COLS)
+                        F.col("c2.content").alias("s2"))
+                .withColumn("len1", F.length("s1"))
+                .withColumn("len2", F.length("s2")))
+        exact = (exact.join(files_ck.select(
+            F.col("id").alias("left_id"),
+            F.col("content_len").alias("len1")), "left_id")
+            .withColumn("len2", F.col("len1"))
+            .withColumn("score", F.lit(1.0)).select(*SCORE_COLS))
         scored = todo.withColumn(
             "score", scorer_column(cfg.scorer, "s1", "s2",
                                    "normalized_similarity",

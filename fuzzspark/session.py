@@ -19,6 +19,11 @@ ARROW_MAX_RECORDS_PER_BATCH = 2048
 
 _log = logging.getLogger(__name__)
 
+# how Spark refuses a second file under a name it already serves: the
+# file server (cluster) and the driver's local copy (local mode)
+_ALREADY_ADDED = ("was already registered with a different path",
+                  "exists and does not match contents of")
+
 
 def usable_cpus() -> int:
     """Cores a local session should use: ``SPARK_GRAFT_CPUS`` when set,
@@ -98,10 +103,16 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_fuzzspark_shipped", False):
         return
+    path = package_zip()
     try:
-        sc.addPyFile(package_zip())
-    except Exception:  # already added under this name
-        pass
+        sc.addPyFile(path)
+    except Exception as e:
+        # a zip of this name from another path is already on the
+        # context (say, spark-submit --py-files): that copy serves the
+        # executors.  Anything else would surface later as an executor
+        # ModuleNotFoundError, so it raises here.
+        if not any(m in str(e) for m in _ALREADY_ADDED):
+            raise
     # build the native kernels on the driver so local-mode python
     # workers hit the warm cache immediately (cluster executors compile
     # once per machine via the same atomic cache path)

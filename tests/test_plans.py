@@ -87,7 +87,7 @@ def test_blocking_join_is_hash_join(spark):
     files, _, _ = corpus_to_spark(spark, corpus)
     files = files.withColumn("content_len", F.length("content"))
     blocks = block_keys(files)
-    pairs = candidate_pairs(files, blocks, scorer="ratio", cutoff=0.9)
+    pairs = candidate_pairs(blocks, scorer="ratio", cutoff=0.9)
     plan = _plan(pairs)
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan \
         or "ShuffledHashJoin" in plan

@@ -7,7 +7,6 @@
 4. sha256 integrity riding the 01_files write job (item 4) + drift
    detection against a source-provided hash.
 5. NULL exact_equal pairs take the scorer path (ADVICE r4).
-6. candidate_pairs broadcast_threshold is functional (item 7).
 """
 
 from __future__ import annotations
@@ -143,20 +142,6 @@ def test_null_exact_equal_takes_scorer_path(spark):
     todo = pairs.where(~exact_flag)
     assert exact.count() + todo.count() == 3
     assert todo.count() == 2  # the NULL row went to the scorer branch
-
-
-def test_broadcast_threshold_functional(spark, small_corpus):
-    from fuzzspark.pipeline.blocking import block_keys
-    from fuzzspark.pipeline.pairs import candidate_pairs
-
-    blocks = block_keys(small_corpus, use_minhash=False)
-    on = candidate_pairs(small_corpus, blocks, broadcast_threshold=10**6)
-    off = candidate_pairs(small_corpus, blocks, broadcast_threshold=None)
-    plan_on = on._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan_on
-    # results identical either way
-    key = lambda df: sorted(map(tuple, df.collect()))
-    assert key(on) == key(off)
 
 
 def test_widen_skip_decision_parts(tmp_path):

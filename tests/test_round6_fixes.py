@@ -306,58 +306,6 @@ def test_indel_banded_kernel_contract():
                     assert g == t
 
 
-# ------------------------------- free broadcast decision (r6 #5)
-
-
-def test_metadata_rowcount_paths(spark, tmp_path):
-    from fuzzspark.pipeline.pairs import _metadata_rowcount
-
-    p = str(tmp_path / "t")
-    spark.range(0, 137).withColumnRenamed("id", "x") \
-         .repartition(3).write.parquet(p)
-    scan = spark.read.parquet(p)
-    # pure scan and pure projection: footer answer, no job
-    assert _metadata_rowcount(scan) == 137
-    assert _metadata_rowcount(scan.select("x")) == 137
-    # anything that changes the rowcount: refuse (fall back to count)
-    assert _metadata_rowcount(scan.where("x > 5")) is None
-    assert _metadata_rowcount(scan.limit(5)) is None
-    assert _metadata_rowcount(scan.groupBy("x").count()) is None
-    # non-file source: refuse
-    assert _metadata_rowcount(spark.range(3)) is None
-
-
-def test_broadcast_decision_free_on_persisted_stage(spark, tmp_path,
-                                                    monkeypatch):
-    """With a parquet-scan input the broadcast decision must read the
-    footers — no count() job (VERDICT r5 item 5)."""
-    from pyspark.sql import DataFrame
-
-    from fuzzspark.functions import sha256_column
-    from fuzzspark.pipeline import corpus_to_spark, generate_corpus
-    from fuzzspark.pipeline.blocking import block_keys
-    from fuzzspark.pipeline.pairs import candidate_pairs
-
-    files, _p, _t = corpus_to_spark(
-        spark, generate_corpus(n_clusters=8, seed=9))
-    stage = str(tmp_path / "01_files")
-    (files.withColumn("content_sha256", sha256_column("content"))
-          .withColumn("content_len", F.length("content"))
-          .write.parquet(stage))
-    persisted = spark.read.parquet(stage)
-    blocks = block_keys(persisted, use_minhash=False)
-
-    def boom(self):
-        raise AssertionError("count() job paid despite footer metadata")
-
-    monkeypatch.setattr(DataFrame, "count", boom)
-    pairs = candidate_pairs(persisted, blocks, broadcast_threshold=10**6)
-    monkeypatch.undo()
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert pairs.count() > 0
-
-
 # --------------------------- C minhash kernel parity (r6)
 
 

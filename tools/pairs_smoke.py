@@ -1,17 +1,13 @@
-"""03_pairs shuffle-footprint A/B at a scale tier (VERDICT r6 item 1).
+"""03_pairs shuffle footprint at a scale tier.
 
 Replicates the sf0.1 documents corpus N times (same near-dup recipe as
-scale_smoke.py), runs 01_files + 02_blocks ONCE, then executes the
-candidate-pair stage twice over the same persisted blocks:
-
-* ``attach`` — the pre-round-7 path: pair-id dedup then two side joins
-  to attach (len, sha);
-* ``carried`` — the round-7 path: lengths read off the len-carrying
-  block rows, exact_equal from the x: key family, prune before dedup.
+scale_smoke.py), runs 01_files + 02_blocks, then the candidate-pair
+stage over the persisted blocks: lengths read off the len-carrying
+block rows, exact_equal from the x: key family, prune before the dedup.
 
 Shuffle bytes written / spill are read from the Spark event log per
-job-description window, so the two variants' footprints come from
-Spark's own task metrics.  Usage:
+job-description window, so each stage's footprint comes from Spark's
+own task metrics.  Usage:
 
     SCALE_SMOKE_REPLICAS=1600 python tools/pairs_smoke.py
 """
@@ -112,45 +108,20 @@ def main() -> None:
 
     t0 = time.time()
     sc.setJobDescription("02_blocks")
-    blocks = defuse_skew(
-        block_keys(files_ck.repartition(16)),
-        files_ck.select("id", "content_len"))
+    blocks = defuse_skew(block_keys(files_ck.repartition(16)))
     blocks.write.parquet(os.path.join(wd, "02_blocks"))
     blocks_ck = spark.read.parquet(os.path.join(wd, "02_blocks"))
     print(f"02_blocks: {time.time()-t0:.1f}s rows={blocks_ck.count()}",
           flush=True)
 
-    order = [("attach", True), ("carried", False)]
-    if os.environ.get("PAIRS_SMOKE_ORDER", "") == "carried_first":
-        order.reverse()
-    variants = os.environ.get("PAIRS_SMOKE_VARIANTS", "")
-    if variants:
-        keep = set(variants.split(","))
-        order = [o for o in order if o[0] in keep]
-    results = {}
-    for label, attach in order:
-        b = blocks_ck if not attach else blocks_ck.drop("content_len")
-        t0 = time.time()
-        sc.setJobDescription(f"03_pairs_{label}")
-        out_dir = os.path.join(wd, f"03_pairs_{label}")
-        pairs = candidate_pairs(files_ck, b, scorer="ratio", cutoff=0.85,
-                                attach_sides=attach)
-        pairs.write.parquet(out_dir)
-        n = spark.read.parquet(out_dir).count()
-        results[label] = dict(sec=round(time.time() - t0, 1), rows=n)
-        print(f"03_pairs[{label}]: {results[label]}", flush=True)
+    t0 = time.time()
+    sc.setJobDescription("03_pairs")
+    out_dir = os.path.join(wd, "03_pairs")
+    candidate_pairs(blocks_ck, scorer="ratio",
+                    cutoff=0.85).write.parquet(out_dir)
+    n = spark.read.parquet(out_dir).count()
+    print(f"03_pairs: {time.time()-t0:.1f}s rows={n}", flush=True)
     sc.setJobDescription(None)
-
-    # the two variants must produce the SAME pair set (exact_equal
-    # semantics: sha-compare vs shared-x:-key are equivalent decisions)
-    if len(order) == 2:
-        cols = ["left_id", "right_id", "exact_equal"]
-        a = spark.read.parquet(
-            os.path.join(wd, "03_pairs_attach")).select(*cols)
-        c = spark.read.parquet(
-            os.path.join(wd, "03_pairs_carried")).select(*cols)
-        mism = a.exceptAll(c).count() + c.exceptAll(a).count()
-        print("pair-set symmetric difference:", mism, flush=True)
 
     spark.stop()  # flush the event log
     time.sleep(2)
@@ -162,13 +133,6 @@ def main() -> None:
               f"{a['shuffle_write']/gb:8.3f} GiB  "
               f"shuffle_read={a['shuffle_read']/gb:8.3f} GiB  "
               f"spill={a['spill']/gb:8.3f} GiB")
-    aw = agg.get("03_pairs_attach", {})
-    cw = agg.get("03_pairs_carried", {})
-    if aw.get("shuffle_write") and cw.get("shuffle_write"):
-        print(f"REDUCTION shuffle_write: "
-              f"{aw['shuffle_write']/max(cw['shuffle_write'],1):.2f}x  "
-              f"(attach {aw['shuffle_write']/gb:.3f} GiB -> "
-              f"carried {cw['shuffle_write']/gb:.3f} GiB) at {REPLICAS}x")
 
 
 if __name__ == "__main__":

@@ -35,8 +35,8 @@ def run_experiment(spark, n_clusters: int = 400, seed: int = 17):
     n_truth = truth.count()
 
     # worst case: every row in one hot block
-    blocks = files.select("id", F.lit("hot").alias("block_key"))
-    lens = files.select("id", F.length("content").alias("content_len"))
+    blocks = files.select("id", F.lit("hot").alias("block_key"),
+                          F.length("content").alias("content_len"))
 
     def pairs_of(bl):
         a, b = bl.alias("a"), bl.alias("b")
@@ -50,7 +50,7 @@ def run_experiment(spark, n_clusters: int = 400, seed: int = 17):
     base_pairs = n * (n - 1) // 2
     rows.append(("off", "-", base_pairs, 1.0))
     for mb, w in [(200, 20), (200, 40), (100, 20), (100, 40), (50, 10)]:
-        cand = pairs_of(defuse_skew(blocks, lens, max_block=mb, window=w))
+        cand = pairs_of(defuse_skew(blocks, max_block=mb, window=w))
         n_cand = cand.count()
         hit = truth.join(cand, ["left_id", "right_id"]).count()
         rows.append((str(mb), str(w), n_cand, hit / n_truth))
