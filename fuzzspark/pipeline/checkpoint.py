@@ -148,8 +148,7 @@ class StageRunner:
         return params_hash({"stage": stage, "params": self.params,
                             "upstream": self._upstream})
 
-    def _reusable_manifest(self, stage: str,
-                           observe=()) -> dict | None:
+    def _reusable_manifest(self, stage: str, observe) -> dict | None:
         """``stage``'s manifest when its output can be reused: complete,
         of this lineage, and holding a value for every name in
         ``observe`` (a manifest written before a value was observed is
@@ -160,11 +159,6 @@ class StageRunner:
                 and set(observe) <= set(m.get("extra", {}))):
             return m
         return None
-
-    def is_complete(self, stage: str) -> bool:
-        """Whether ``stage``'s persisted output can be reused as the next
-        stage of this runner's chain."""
-        return self._reusable_manifest(stage) is not None
 
     def run(self, stage: str, build: Callable[[], DataFrame], *,
             score_col: str | None = None,

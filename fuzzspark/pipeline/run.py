@@ -2,8 +2,10 @@
 
 stages: 01_files (+sha256 integrity) → 02_blocks → 03_pairs →
 04_scores → 05_clusters.  Every stage checkpoints via StageRunner and
-resumes mid-pipeline after a kill.  All heavy compute is vectorized
-(scorer pandas UDF over Arrow batches; everything else Catalyst-native).
+resumes mid-pipeline after a kill.  All heavy compute is vectorized:
+04_scores scores whole Arrow batches, in one ``mapInArrow`` against a
+broadcast content table below the broadcast gate and through a pandas
+UDF over joined content above it; everything else is Catalyst-native.
 """
 
 from __future__ import annotations
@@ -15,9 +17,10 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from fuzzspark.functions import scorer_column, sha256_column
+from fuzzspark.functions import sha256_column
 from fuzzspark.pipeline.blocking import block_keys, defuse_skew
 from fuzzspark.kernels import _native
+from fuzzspark.kernels.content import ContentTable
 from fuzzspark.pipeline.checkpoint import StageRunner, input_fingerprint
 from fuzzspark.pipeline.cluster import connected_components
 from fuzzspark.pipeline.pairs import candidate_pairs
@@ -25,7 +28,7 @@ from fuzzspark.pipeline.pairs import candidate_pairs
 __all__ = ["LinkageConfig", "run_pipeline"]
 
 
-from fuzzspark.pipeline.util import (broadcast_max_bytes, content_bytes,
+from fuzzspark.pipeline.util import (broadcast_fits, content_bytes, join_scores,
                                      parse_bytes as _parse_bytes)
 
 
@@ -82,60 +85,33 @@ def broadcast_scores(spark: SparkSession, content: DataFrame,
                      threshold: float) -> DataFrame:
     """04_scores' broadcast path: score ``pairs`` (left_id, right_id,
     exact_equal) against ``content`` (id, content), which the driver
-    collects and broadcasts once, in one ``mapInArrow``.  Rows as the
-    shuffle path writes them: ``len1``/``len2`` are the code-point
-    lengths ``F.length`` gives (NULL for NULL content), an exact pair
-    scores 1.0 and a pair below ``threshold`` scores NULL."""
-    import numpy as np
-    import pyarrow.compute as pc
-    # Arrow, not Rows: the driver gets the two columns as arrays, with
-    # no Python object per row but the strings
-    table = content.toArrow()
-    b_ids = np.asarray(table.column("id").to_numpy(), np.int64)
-    b_txt = table.column("content").to_numpy(zero_copy_only=False)
-    # lengths and their NULL mask once here, not per pair side per task
-    lens = pc.utf8_length(table.column("content"))
-    b_null = lens.is_null().to_numpy()
-    b_len = lens.fill_null(0).to_numpy().astype(np.int32)
-    del table, lens
-    order = np.argsort(b_ids)
+    collects once into a :class:`ContentTable` and broadcasts, in one
+    ``mapInArrow``.  Rows as the shuffle path writes them: ``len1``/
+    ``len2`` are the code-point lengths ``F.length`` gives (NULL for
+    NULL content), an exact pair scores 1.0 and a pair below
+    ``threshold`` scores NULL."""
+    # Arrow, not Rows; the sorted Arrow copy is dropped at once
     bcv = spark.sparkContext.broadcast(
-        (b_ids[order], b_txt[order], b_len[order], b_null[order]))
+        ContentTable.from_arrow(content.toArrow())[0])
 
     def score_map(batches):
+        import numpy as np
         import pyarrow as pa
-        from fuzzspark.kernels.batch import batch_scores
-        ids, texts, lens, null = bcv.value
+        t = bcv.value
         for batch in batches:
             li = batch.column("left_id").to_numpy()
             ri = batch.column("right_id").to_numpy()
             ex_raw = batch.column("exact_equal")
-            n = len(li)
-            ex = np.asarray(ex_raw.fill_null(False)
-                            .to_numpy(zero_copy_only=False), dtype=bool)
-            i1 = np.searchsorted(ids, li)
-            i2 = np.searchsorted(ids, ri)
-            # a bug guard only: stage lineage chains 03_pairs to the
-            # 01_files it was built from, so a resume cannot pair ids
-            # from another corpus and this is unreachable on resume
-            if n and (len(ids) == 0
-                      or (ids[np.clip(i1, 0, len(ids) - 1)] != li).any()
-                      or (ids[np.clip(i2, 0, len(ids) - 1)] != ri).any()):
-                raise RuntimeError(
-                    "04_scores: pair id missing from the corpus "
-                    "broadcast (pairs must derive from 01_files)")
-            out = np.full(n, np.nan)
-            todo = ~ex
-            if todo.any():
-                out[todo] = batch_scores(
-                    scorer, "normalized_similarity",
-                    texts[i1[todo]], texts[i2[todo]],
-                    score_cutoff=threshold)
-            out[ex] = 1.0
+            todo = ~np.asarray(ex_raw.fill_null(False)
+                               .to_numpy(zero_copy_only=False), dtype=bool)
+            p1, p2 = t.positions(li), t.positions(ri)
+            out = np.ones(len(li))
+            out[todo] = t.scores(scorer, t.texts[p1[todo]], p2[todo],
+                                 threshold)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(li), pa.array(ri),
-                 pa.array(lens[i1], mask=null[i1]),
-                 pa.array(lens[i2], mask=null[i2]),
+                 pa.array(t.lens[p1], mask=t.null[p1]),
+                 pa.array(t.lens[p2], mask=t.null[p2]),
                  ex_raw, pa.array(out, mask=np.isnan(out))],
                 names=list(SCORE_COLS))
 
@@ -164,15 +140,10 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         input is a small persisted stage (single parquet split).  Width
         is tunable via spark conf ``fuzzspark.python.parallelism``
         (single-box local mode saturates memory bandwidth well below
-        the vCPU count — see BENCH_SCALING.md).
-
-        Round 5: when the caller knows the on-disk input size and the
-        scan ALONE already yields >= target splits
-        (bytes / maxPartitionBytes), the repartition is skipped — at
-        100 TB the unconditional widen re-shuffles the entire corpus
-        just to guarantee task parallelism the file splits deliver for
-        free.  (df.rdd.getNumPartitions() would answer the same
-        question but forces an RDD conversion of the analyzed plan.)"""
+        the vCPU count — see BENCH_SCALING.md).  When the on-disk
+        ``input_bytes`` alone yield >= target scan splits (bytes /
+        maxPartitionBytes) the repartition is skipped: at 100 TB it
+        would re-shuffle the corpus for parallelism the splits give."""
         default = spark.sparkContext.defaultParallelism
         target = int(spark.conf.get("fuzzspark.python.parallelism",
                                     str(default)))
@@ -257,79 +228,40 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
     score_info = {"kernel_backend": _native.backend()["backend"]}
 
     def _score():
-        # 03_pairs is id-only (text never rides the pair checkpoint —
-        # see candidate_pairs); join content back by id here.  Exact
-        # duplicates skip the join and the scorer entirely (score 1.0
-        # from the shared x: key found at pair time).  Cutoff is
-        # pushed into the kernel: sub-threshold scores come back NULL
-        # (identical to the post-hoc WHERE, per reference cutoff
-        # semantics src/common.rs:73-86)
-        # NULL-safe split (ADVICE r4): under three-valued logic a bare
-        # predicate AND its negation both drop NULL rows — coalesce so
-        # a NULL exact_equal takes the scorer path and surfaces as a
-        # NULL score
-        exact_flag = F.coalesce(F.col("exact_equal"), F.lit(False))
-        # the pair checkpoint carries no lengths (they would double the
-        # pair dedup shuffle), so they are derived here: the scorer
-        # branch gets them off the content it attaches anyway; the
-        # exact branch (len1 == len2 by definition) attaches ONE side's
-        # stored content_len
-        exact = pairs.where(exact_flag)
-        content = files_ck.select("id", "content")
-        todo_ids = pairs.where(~exact_flag)
-        # the corpus content is broadcast when its uncompressed bytes
-        # (measured by the 01_files write, as the streaming matcher's
-        # gate measures them) fit ``fuzzspark.broadcast.content.
-        # max_bytes``.  Above the gate the shuffle joins distribute the
-        # output across spark.sql.shuffle.partitions — a post-join
-        # widen() would re-shuffle every text-attached row a second
-        # time; at the 200x tier that extra shuffle alone is ~100 GB
-        corpus_bytes = files_extra["content_bytes"]
-        bc_max = broadcast_max_bytes(spark)
-        score_info["score_path"] = (
-            "broadcast" if 0 < bc_max and (corpus_bytes or 0) <= bc_max
-            else "shuffle")
-        if score_info["score_path"] == "broadcast":
-            # within the broadcast gate, content is resolved IN the
-            # python worker (guide §8): the corpus (id, content) ships
-            # ONCE per executor as a broadcast variable, only the ~17 B
-            # id pairs cross the Arrow boundary, and no per-pair string
-            # is materialized JVM-side.  The exact branch folds into
-            # the same mapper (score 1.0, no kernel), so there is no
-            # split/union and no second scan of the pair checkpoint.
-            #
-            # Pass ONLY the columns the mapper reads (guide §4.1) —
-            # the widen shuffle then moves 17 B rows
+        # 03_pairs is id-only (see candidate_pairs): content attaches by
+        # id here, and exact pairs (a shared x: key) score 1.0 without
+        # the scorer.  The gate reads the bytes the 01_files write
+        # measured.  Above it the shuffle joins spread the output over
+        # spark.sql.shuffle.partitions: a post-join widen() would
+        # re-shuffle every text-attached row (~100 GB at the 200x tier)
+        fits, _ = broadcast_fits(spark, files_extra["content_bytes"])
+        score_info["score_path"] = "broadcast" if fits else "shuffle"
+        if fits:
+            # the corpus ships once per executor and only the 17 B id
+            # pairs widen and cross the Arrow boundary (guide §8, §4.1)
             return broadcast_scores(
-                spark, content,
+                spark, files_ck.select("id", "content"),
                 widen(pairs.select("left_id", "right_id", "exact_equal")),
                 cfg.scorer, cfg.threshold)
-        # above the broadcast gate: shuffle joins attach content to the
-        # scorer side.  NOTE (measured): a shared-child alias form does
-        # NOT get ReusedExchange here — the analyzer's attribute dedup
-        # gives each branch fresh ids and neither the rule nor AQE
-        # stage reuse matches them, so the exact branch must keep its
-        # NARROW len-only attach (16 B rows); routing it through the
-        # content projection "to share the exchange" actually added a
-        # full content shuffle+sort at the 200x tier.
-        c1, c2 = content.alias("c1"), content.alias("c2")
-        todo = (todo_ids.alias("p")
-                .join(c1, F.col("p.left_id") == F.col("c1.id"))
-                .join(c2, F.col("p.right_id") == F.col("c2.id"))
-                .select("p.*", F.col("c1.content").alias("s1"),
-                        F.col("c2.content").alias("s2"))
-                .withColumn("len1", F.length("s1"))
-                .withColumn("len2", F.length("s2")))
-        exact = (exact.join(files_ck.select(
+        # the exact branch keeps its NARROW len-only attach (16 B rows,
+        # len1 == len2): routing it through the content projection does
+        # not reuse that exchange (measured: the analyzer gives each
+        # branch fresh attribute ids) and added a full content
+        # shuffle+sort at the 200x tier
+        exact = (pairs.where("exact_equal").join(files_ck.select(
             F.col("id").alias("left_id"),
             F.col("content_len").alias("len1")), "left_id")
             .withColumn("len2", F.col("len1"))
-            .withColumn("score", F.lit(1.0)).select(*SCORE_COLS))
-        scored = todo.withColumn(
-            "score", scorer_column(cfg.scorer, "s1", "s2",
-                                   "normalized_similarity",
-                                   score_cutoff=cfg.threshold))
-        return scored.select(*SCORE_COLS).unionByName(exact)
+            .withColumn("score", F.lit(1.0)))
+        scored = join_scores(
+            pairs.where(~F.col("exact_equal")),
+            files_ck.select(F.col("id").alias("left_id"),
+                            F.col("content").alias("s1")),
+            files_ck.select(F.col("id").alias("right_id"),
+                            F.col("content").alias("s2")),
+            cfg.scorer, cfg.threshold)
+        return (scored.select(*SCORE_COLS)
+                .unionByName(exact.select(*SCORE_COLS)))
 
     scores = runner.run("04_scores", _score, score_col="score",
                         extra_manifest=score_info)

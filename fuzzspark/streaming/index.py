@@ -1,16 +1,14 @@
 """Driver-built reference index for the streaming matcher.
 
 The reference side of a stream match is static, so its block keys are
-computed once, on the driver, and shipped to the executors as ONE
-broadcast of flat numpy arrays: per key family a sorted unique key
-array with CSR offsets into the reference positions carrying each key,
-plus the reference ids and content.  A micro-batch then probes it with
-``searchsorted`` inside a single Arrow map — no per-batch join,
-exchange or second broadcast.
-
+computed once, on the driver, and shipped to the executors in ONE
+broadcast with the reference's
+:class:`~fuzzspark.kernels.content.ContentTable`: per key kind a sorted
+unique key array with CSR offsets into the table positions carrying
+each key.  A micro-batch probes it with ``searchsorted`` inside a
+single Arrow map — no per-batch join, exchange or second broadcast.
 Flat arrays rather than a dict of per-key arrays: a pickled numpy array
-loads with one buffer copy, so a Python worker reading the broadcast
-pays milliseconds instead of one object per key.
+loads with one buffer copy, not one object per key.
 
 Keys come from the same expressions as the batch pipeline's
 :func:`~fuzzspark.pipeline.blocking.block_keys` (via
@@ -28,6 +26,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+
+from fuzzspark.kernels.content import ContentTable
 
 __all__ = ["KeyCSR", "RefIndex", "doc_keys", "source_name"]
 
@@ -108,11 +108,11 @@ class KeyCSR:
 
 @dataclass
 class RefIndex:
-    """The broadcast reference side: ids and content by position, and
-    one :class:`KeyCSR` per key kind (string keys, MinHash band keys)."""
+    """The broadcast reference side: its :class:`ContentTable`, and one
+    :class:`KeyCSR` per key kind (string keys, MinHash band keys) whose
+    reference positions are positions in that table."""
 
-    ids: np.ndarray
-    content: np.ndarray
+    table: ContentTable
     strs: KeyCSR
     bands: KeyCSR
     hot_keys_dropped: int
@@ -120,12 +120,11 @@ class RefIndex:
     @classmethod
     def build(cls, table, matrix, max_block: int | None) -> "RefIndex":
         """``table``: Arrow table of (id, content, source columns)."""
+        content, table = ContentTable.from_arrow(table)
         (sk, sr), (bk, br) = doc_keys(table, matrix)
         strs, hot_s = KeyCSR.build(sk, sr, max_block)
         bands, hot_b = KeyCSR.build(bk, br, max_block)
-        return cls(np.asarray(table.column("id").to_numpy(), dtype=np.int64),
-                   np.array(table.column("content").to_pylist(), dtype=object),
-                   strs, bands, hot_s + hot_b)
+        return cls(content, strs, bands, hot_s + hot_b)
 
     def candidates(self, batch, matrix) -> tuple:
         """Distinct (row, ref position) candidate pairs of a probe
@@ -133,7 +132,7 @@ class RefIndex:
         (sk, sr), (bk, br) = doc_keys(batch, matrix)
         r1, p1 = self.strs.probe(sk, sr)
         r2, p2 = self.bands.probe(bk, br)
-        n = max(len(self.ids), 1)
+        n = max(len(self.table.ids), 1)
         pair = np.unique(np.concatenate([r1 * n + p1, r2 * n + p2]))
         return pair // n, pair % n
 
@@ -143,5 +142,7 @@ class RefIndex:
 
     @property
     def nbytes(self) -> int:
-        """Bytes of the id and key arrays (the content is not counted)."""
-        return self.ids.nbytes + self.strs.nbytes + self.bands.nbytes
+        """Bytes of the arrays (the texts are not counted)."""
+        t = self.table
+        return (t.ids.nbytes + t.lens.nbytes + t.null.nbytes
+                + self.strs.nbytes + self.bands.nbytes)

@@ -10,11 +10,11 @@ from typing import Optional
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from fuzzspark.functions import length_prefilter, scorer_column, sha256_column
+from fuzzspark.functions import sha256_column
 from fuzzspark.kernels import _native
 from fuzzspark.pipeline.blocking import (block_key_columns, block_keys,
                                          make_minhash_matrix)
-from fuzzspark.pipeline.util import broadcast_max_bytes, content_bytes
+from fuzzspark.pipeline.util import broadcast_fits, content_bytes, join_scores
 from fuzzspark.streaming.index import RefIndex, source_name
 
 __all__ = ["streaming_exact_dedup", "streaming_fuzzy_match",
@@ -51,57 +51,46 @@ def _key_sources(df: DataFrame, key_cols: dict) -> DataFrame:
 
 def _index_matcher(reference: DataFrame, scorer: str, threshold: float,
                    blocking_kwargs: dict, max_block: int | None):
-    """Reference side built ONCE on the driver (one JVM-only collect,
-    MinHash keys by the same kernel, hot keys dropped) and broadcast as
-    a flat :class:`RefIndex`; each micro-batch is then one Arrow map
-    that probes it, dedupes (stream_id, ref_id) and scores with the
-    cutoff pushed into the kernel (whose length prefilter stands in for
-    the join plan's ``length_prefilter``).  Returns (run, release,
-    stats)."""
+    """Reference side built ONCE on the driver (one collect, MinHash
+    keys by the same kernel, hot keys dropped) and broadcast as a
+    :class:`RefIndex`; each micro-batch is then one Arrow map that
+    probes it and scores the distinct candidates against its content
+    table (the kernel's own length prune stands in for
+    ``length_prefilter``).  Returns (run, release, stats)."""
     families = {k: v for k, v in blocking_kwargs.items()
                 if k.startswith("use_")}
     mh = {k: v for k, v in blocking_kwargs.items() if k not in families}
     key_cols = block_key_columns(**families)
     use_mh = "minhash" in key_cols
-    table = _key_sources(reference, key_cols).toArrow()
-    index = RefIndex.build(table, make_minhash_matrix(**mh) if use_mh
-                           else None, max_block)
-    del table
+    index = RefIndex.build(_key_sources(reference, key_cols).toArrow(),
+                           make_minhash_matrix(**mh) if use_mh else None,
+                           max_block)
     bcv = reference.sparkSession.sparkContext.broadcast(index)
 
     def match(batches):
         import pyarrow as pa
-
-        from fuzzspark.kernels.batch import batch_scores
         idx = bcv.value
+        t = idx.table
         matrix = make_minhash_matrix(**mh) if use_mh else None
         for batch in batches:
             rows, refs = idx.candidates(batch, matrix)
             ids = batch.column("id").to_numpy()
             texts = np.array(batch.column("content").to_pylist(),
                              dtype=object)
-            score = batch_scores(scorer, "normalized_similarity",
-                                 texts[rows], idx.content[refs],
-                                 score_cutoff=threshold)
+            score = t.scores(scorer, texts[rows], refs, threshold)
             keep = ~np.isnan(score)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids[rows[keep]]), pa.array(idx.ids[refs[keep]]),
+                [pa.array(ids[rows[keep]]), pa.array(t.ids[refs[keep]]),
                  pa.array(score[keep])],
                 names=["stream_id", "ref_id", "score"])
 
     def run(batch_df: DataFrame) -> DataFrame:
-        # Spark's round() is HALF_UP on the decimal form — numpy's
-        # rounding differs, so it stays a JVM projection
-        return (_key_sources(batch_df, key_cols)
-                .mapInArrow(match, "stream_id long, ref_id long, "
-                                   "score double")
-                .select("stream_id", "ref_id",
-                        F.round("score", 6).alias("score")))
+        return _key_sources(batch_df, key_cols).mapInArrow(
+            match, "stream_id long, ref_id long, score double")
 
-    stats = dict(ref_keys=index.n_keys,
-                 hot_keys_dropped=index.hot_keys_dropped,
-                 index_bytes=index.nbytes)
-    return run, bcv.unpersist, stats
+    return run, bcv.unpersist, dict(ref_keys=index.n_keys,
+                                    hot_keys_dropped=index.hot_keys_dropped,
+                                    index_bytes=index.nbytes)
 
 
 def _join_matcher(reference: DataFrame, scorer: str, threshold: float,
@@ -113,15 +102,11 @@ def _join_matcher(reference: DataFrame, scorer: str, threshold: float,
     ref_blocks = block_keys(reference, **blocking_kwargs) \
         .withColumnRenamed("id", "ref_id")
     if max_block:
-        # skew defusal, streaming shape (round 6): a reference block
-        # key shared by > max_block docs makes EVERY stream doc carrying
-        # it a candidate against the whole block (the 50x smoke's
-        # degenerate path key matched each arrival to 64k refs — 20M
-        # candidate rows per 312-doc batch).  Hot keys carry no
-        # discriminative signal; drop them ONCE at build time — true
-        # near-dups still meet through their selective minhash band
-        # keys (the batch pipeline's defuse_skew rationale, recall
-        # floor measured in tools/skew_recall.py).  None disables.
+        # skew defusal: a reference key shared by > max_block docs
+        # makes every arrival carrying it a candidate of the whole block
+        # (at the 50x smoke, 20M candidate rows per 312-doc batch).  Hot
+        # keys carry no signal; near-dups still meet through their
+        # minhash band keys (recall floor: tools/skew_recall.py)
         hot = (ref_blocks.groupBy("block_key").count()
                .where(F.col("count") > max_block).select("block_key"))
         ref_blocks = ref_blocks.join(F.broadcast(hot), "block_key",
@@ -133,17 +118,14 @@ def _join_matcher(reference: DataFrame, scorer: str, threshold: float,
     # the old plan re-shuffled the ENTIRE reference every micro-batch
     # (at the 50x smoke that one exchange dominated the match leg)
     ref_content = (reference.select(F.col("id").alias("ref_id"),
-                                    F.col("content").alias("ref_content"),
-                                    F.length("content").alias("ref_len"))
+                                    F.col("content").alias("s2"))
                    .repartition("ref_id").persist())
 
     def run(batch_df: DataFrame) -> DataFrame:
         new_blocks = block_keys(batch_df, **blocking_kwargs) \
             .withColumnRenamed("id", "stream_id")
-        new_content = batch_df.select(
-            F.col("id").alias("stream_id"),
-            F.col("content").alias("new_content"),
-            F.length("content").alias("new_len"))
+        new_content = batch_df.select(F.col("id").alias("stream_id"),
+                                      F.col("content").alias("s1"))
         # micro-batches are small vs the corpus: broadcast the stream
         # side (block keys + content are batch-sized BY CONTRACT; the
         # candidate set is NOT — a hot block key can fan out, so it is
@@ -153,17 +135,8 @@ def _join_matcher(reference: DataFrame, scorer: str, threshold: float,
         cand = (ref_blocks.join(F.broadcast(new_blocks), "block_key")
                 .select("stream_id", "ref_id")
                 .dropDuplicates(["stream_id", "ref_id"]))
-        pairs = (cand.join(F.broadcast(new_content), "stream_id")
-                 .join(ref_content, "ref_id")
-                 .where(length_prefilter(F.col("new_len"), F.col("ref_len"),
-                                         scorer, threshold)))
-        scored = pairs.withColumn(
-            "score", scorer_column(scorer, "new_content", "ref_content",
-                                   "normalized_similarity",
-                                   score_cutoff=threshold))
-        return scored.where(F.col("score").isNotNull()) \
-                     .select("stream_id", "ref_id",
-                             F.round("score", 6).alias("score"))
+        return join_scores(cand, F.broadcast(new_content), ref_content,
+                           scorer, threshold).where("score IS NOT NULL")
 
     def release() -> None:
         ref_blocks.unpersist()
@@ -179,8 +152,7 @@ def _match_batch(reference: DataFrame, scorer: str, threshold: float,
     match edges (stream_id, ref_id, score).
 
     One aggregate job measures the reference's uncompressed content
-    bytes.  Within ``fuzzspark.broadcast.content.max_bytes`` (the
-    04_scores broadcast gate; a value <= 0 turns the index off) the
+    bytes for 04_scores' gate (:func:`broadcast_fits`).  Within it the
     reference becomes a broadcast :class:`RefIndex` and a micro-batch
     is a single Arrow map — no join, no exchange, one Spark job with
     the sink write.  Above it the join plan runs.  The returned
@@ -191,20 +163,26 @@ def _match_batch(reference: DataFrame, scorer: str, threshold: float,
     agg = reference.agg(F.count(F.lit(1)).alias("n"),
                         content_bytes().alias("b")).first()
     ref_bytes = int(agg["b"] or 0)
-    gate = broadcast_max_bytes(reference.sparkSession)
-    use_index = 0 < gate and ref_bytes <= gate
+    use_index, gate = broadcast_fits(reference.sparkSession, ref_bytes)
     build = _index_matcher if use_index else _join_matcher
     run, release, stats = build(reference, scorer, threshold,
                                 blocking_kwargs, max_block)
     if use_index:  # the broadcast carries the content too
         stats["index_bytes"] += ref_bytes
-    run.plan = dict(path="broadcast_index" if use_index else "join",
-                    ref_docs=int(agg["n"]), content_bytes=ref_bytes,
-                    max_bytes=gate, **stats,
-                    build_s=round(time.perf_counter() - t0, 4),
-                    kernel_backend=_native.backend()["backend"])
-    run.unpersist = release
-    return run
+
+    def match(batch_df: DataFrame) -> DataFrame:
+        # Spark's round() is HALF_UP on the decimal form — numpy's
+        # rounding differs, so it stays a JVM projection
+        return run(batch_df).select("stream_id", "ref_id",
+                                    F.round("score", 6).alias("score"))
+
+    match.plan = dict(path="broadcast_index" if use_index else "join",
+                      ref_docs=int(agg["n"]), content_bytes=ref_bytes,
+                      max_bytes=gate, **stats,
+                      build_s=round(time.perf_counter() - t0, 4),
+                      kernel_backend=_native.backend()["backend"])
+    match.unpersist = release
+    return match
 
 
 def streaming_fuzzy_match(stream: DataFrame, reference: DataFrame, *,
@@ -279,9 +257,7 @@ def streaming_ingest_linkage(spark, source_dir: str, reference: DataFrame, *,
     of a single batch.
 
     ``blocking_kwargs`` / ``max_block`` forward to
-    :func:`streaming_fuzzy_match` (round 7 — the end-to-end helper
-    previously hard-coded the defaults, hiding the hot-key defusal
-    knob from callers)."""
+    :func:`streaming_fuzzy_match`."""
     reader = spark.readStream.schema(schema or reference.schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger",

@@ -179,6 +179,8 @@ def test_exact_equal_is_content_sha_equality(spark, tmp_path):
                         == F.col("r.content_sha256")).alias("sha_eq"))
                .collect())
     assert len(checked) == out["pairs"].count()
+    # never NULL, not even for the empty and NULL content rows
+    assert all(row["exact_equal"] is not None for row in checked)
     assert all(row["exact_equal"] == row["sha_eq"] for row in checked)
     equal_sha = {(row["l_id"], row["r_id"]) for row in
                  l.join(r, (F.col("l.content_sha256")

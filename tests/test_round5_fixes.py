@@ -6,7 +6,6 @@
 3. Bounded memory on the no-compiler fallback (item 3).
 4. sha256 integrity riding the 01_files write job (item 4) + drift
    detection against a source-provided hash.
-5. NULL exact_equal pairs take the scorer path (ADVICE r4).
 """
 
 from __future__ import annotations
@@ -125,23 +124,6 @@ def test_cc_checkpoint_dir_cleaned_and_restored(spark, small_corpus,
     # no longer under the deleted stage workdir)
     assert cur.isDefined() and "user_ck" in cur.get()
     assert wd not in cur.get()
-
-
-def test_null_exact_equal_takes_scorer_path(spark):
-    """Pairs whose exact_equal is NULL (NULL content/sha) must not be
-    silently dropped by the score-stage split (ADVICE r4)."""
-    from pyspark.sql import functions as F
-
-    from fuzzspark.functions import scorer_column
-
-    pairs = spark.createDataFrame(
-        [(1, 2, True), (3, 4, False), (5, 6, None)],
-        "left_id: long, right_id: long, exact_equal: boolean")
-    exact_flag = F.coalesce(F.col("exact_equal"), F.lit(False))
-    exact = pairs.where(exact_flag)
-    todo = pairs.where(~exact_flag)
-    assert exact.count() + todo.count() == 3
-    assert todo.count() == 2  # the NULL row went to the scorer branch
 
 
 def test_widen_skip_decision_parts(tmp_path):

@@ -1,11 +1,13 @@
 """04_scores' broadcast path takes ``len1``/``len2`` from lengths the
 driver computes once per corpus: they are the code-point lengths
 ``F.length`` gives (non-BMP characters count once, NULL content gives
-NULL), and the broadcast and shuffle paths write the same stage."""
+NULL), and the broadcast and shuffle paths write the same stage, a row
+with a NULL id included."""
 
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -46,6 +48,10 @@ def test_broadcast_lengths_are_code_points_and_null_for_null(spark):
     # NULL content scores NULL, whichever side it is on
     assert got[(2, 3)].score is None and got[(3, 1)].score is None
     assert got[(3, 1)].exact_equal is None
+    # a pair id that is not in the content is a bug: loud, not dropped
+    stray = spark.createDataFrame([(1, 99, False)], pairs.schema)
+    with pytest.raises(Exception, match="pair id missing"):
+        broadcast_scores(spark, content, stray, "ratio", 0.9).collect()
 
 
 def _manifest(wd, stage="04_scores"):
@@ -53,11 +59,15 @@ def _manifest(wd, stage="04_scores"):
         return json.load(f)
 
 
+# a NULL id must stay out of the broadcast content, not be cast to int64
+# (numpy warns "invalid value encountered in cast")
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_broadcast_and_shuffle_paths_write_the_same_scores(spark, tmp_path):
     rows = [(i, f"r{i}", "pkg/mod.py", "c", "python",
              BODY + "\U0001F600" * i + "\n") for i in range(5)]
     rows += [(5, "r5", "pkg/mod.py", "c", "python", BODY + "\n"),
-             (6, "r6", "pkg/mod.py", "c", "python", None)]
+             (6, "r6", "pkg/mod.py", "c", "python", None),
+             (None, "r7", "pkg/mod.py", "c", "python", BODY + "\n")]
     files = spark.createDataFrame(rows, SCHEMA)
     out, m = {}, {}
     for path, gate in [("broadcast", str(1 << 30)), ("shuffle", "0")]:

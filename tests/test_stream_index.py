@@ -104,18 +104,28 @@ def test_empty_reference(spark):
     assert _edges_both_paths(spark, ref, batch) == []
 
 
+NON_BMP = "\U0001d4b3 script x and \U0001F600 emoji, two UTF-16 units each"
+
+
 def test_null_content_and_path_rows(spark):
+    # a NULL-id reference row carries the same content and path as id 1
     ref = _docs(spark, REF_ROWS + [(4, None, "the quick brown fox jumps "
                                              "over the lazy cat"),
-                                   (5, "src/alpha.py", None)])
+                                   (5, "src/alpha.py", None),
+                                   (6, "doc/emoji.md", NON_BMP),
+                                   (None, REF_ROWS[0][1], REF_ROWS[0][2])])
     batch = _docs(spark, [(10, "src/alpha.py", "the quick brown fox jumps "
                                                "over the lazy dog!"),
                           (11, None, "lorem ipsum dolor sit amet "
                                      "consectetur elit"),
-                          (12, "src/beta.py", None)])
+                          (12, "src/beta.py", None),
+                          (13, "doc/emoji.md", NON_BMP + "\U0001F600")])
     got = _edges_both_paths(spark, ref, batch)
     assert {(s, r) for s, r, _ in got} >= {(10, 1), (11, 2)}
-    assert not any(s == 12 or r == 5 for s, r, _ in got)
+    # code points, not UTF-16 units: one insertion over n + (n + 1)
+    n = len(NON_BMP)
+    assert (13, 6, round(2 * n / (2 * n + 1), 6)) in got
+    assert not any(s == 12 or r == 5 or r is None for s, r, _ in got)
 
 
 @pytest.mark.parametrize("off", ["use_exact", "use_path", "use_minhash"])
