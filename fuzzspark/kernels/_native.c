@@ -5,8 +5,11 @@
  * rapidfuzz-rs (see fuzzspark/kernels/_bitpar.py for the pure-Python
  * reference implementations these are tested against).
  *
- * Batch layout: flattened uint32 code points + int64 offsets
+ * Batch layout: flattened code points + int64 offsets
  * (offsets[i]..offsets[i+1] is sequence i), one call scores n pairs.
+ * Drivers with an elem_size argument (batch_metric_bounded_es,
+ * batch_affix, batch_minhash) take 1-byte elements when the whole
+ * buffer is ASCII and uint32 otherwise; the rest take uint32 only.
  * Compiled on demand by _native.py:  gcc -O3 -shared -fPIC.
  */
 
@@ -42,8 +45,8 @@ typedef struct {            /* reused across every pair in a batch */
     uint32_t  cap_max;      /* power of two >= 2 * max_m */
 } PMArena;
 
-/* element accessor: the batch_metric family accepts 1-byte (ASCII
- * fast path — no python-side widening copy, 4x less input traffic) or
+/* element accessor: the elem_size drivers accept 1-byte (ASCII fast
+ * path — no python-side widening copy, 4x less input traffic) or
  * 4-byte code-point input; the es==1 test is perfectly predicted. */
 static inline uint32_t elem_at(const void *b, int64_t i, int es) {
     return es == 1 ? (uint32_t)((const uint8_t *)b)[i]
@@ -194,7 +197,6 @@ static int64_t lev_one(int64_t m,
     VP[words - 1] = top;
     uint64_t msb = 1ull << ((m - 1) & 63);
     int64_t dist = m;
-    static const uint64_t ZROW_MAX = 0; (void)ZROW_MAX;
     for (int64_t j = 0; j < n; j++) {
         const uint64_t *M = pm_get(pm, elem_at(txt, j, es));
         uint64_t carry_d0 = 0;     /* carry of (X & VP) + VP */
@@ -283,8 +285,6 @@ static int64_t osa_one(int64_t m,
 }
 
 /* ------------------------- batch drivers ---------------------------- */
-
-typedef int64_t (*scratch2_fn)(void);
 
 static int64_t max_words(const int64_t *off, int64_t n_pairs) {
     int64_t mw = 1;
@@ -380,23 +380,6 @@ int batch_metric_bounded_es(int kind,
     return 0;
 }
 
-int batch_metric_bounded(int kind,
-                         const uint32_t *pat, const int64_t *pat_off,
-                         const uint32_t *txt, const int64_t *txt_off,
-                         int64_t n_pairs, int64_t *out,
-                         const int64_t *bounds) {
-    return batch_metric_bounded_es(kind, pat, pat_off, txt, txt_off,
-                                   n_pairs, out, bounds, 4);
-}
-
-int batch_metric(int kind,
-                 const uint32_t *pat, const int64_t *pat_off,
-                 const uint32_t *txt, const int64_t *txt_off,
-                 int64_t n_pairs, int64_t *out) {
-    return batch_metric_bounded_es(kind, pat, pat_off, txt, txt_off,
-                                   n_pairs, out, NULL, 4);
-}
-
 /* ------------------- common affix lengths (round 4) ----------------- */
 /* mode 0 = common prefix, 1 = common suffix; cap > 0 bounds the scan
  * (jaro_winkler's <= 4-char prefix boost).  Replaces the last per-row
@@ -424,329 +407,6 @@ int batch_affix(int mode, int64_t cap,
         }
         out[p] = k;
     }
-    return 0;
-}
-
-/* -------- Levenshtein, hint-seeded Ukkonen band (round 4) ----------- */
-/* A classical diagonal-band DP (cells with |j - i| <= k only; exact
- * whenever the true distance is <= k) seeded from score_hint and
- * retried with doubling when the hint was too small — the reference's
- * iterative band-growth strategy (src/distance/levenshtein.rs
- * :1069-1089) on a classical band.  Per text char this costs
- * (2k+1) ~6-op cells vs ceil(m/64) ~18-op words for the full
- * bit-parallel kernel, so a tight hint on a long string wins big;
- * pairs where the band cannot beat the full kernel return the -2
- * marker and the caller routes them to batch_metric_bounded_es.
- * Returned values are always EXACT distances; pairs proven above
- * `bounds` return -1 (the bounded kernel's abandonment contract). */
-
-static int64_t lev_band_pass(const char *a, int64_t m, const char *b,
-                             int64_t n, int es, int64_t k,
-                             int32_t *prev, int32_t *cur) {
-    const int32_t INF = 1 << 29;
-    for (int64_t d = -k; d <= k; d++)
-        prev[d + k] = (d >= 0 && d <= n) ? (int32_t)d : INF;
-    for (int64_t i = 1; i <= m; i++) {
-        uint32_t ca = elem_at(a, i - 1, es);
-        for (int64_t d = -k; d <= k; d++) {
-            int64_t j = i + d;
-            if (j < 0 || j > n) { cur[d + k] = INF; continue; }
-            if (j == 0) { cur[d + k] = (int32_t)i; continue; }
-            /* diag D[i-1][j-1] -> prev[d]; up D[i-1][j] -> prev[d+1];
-             * left D[i][j-1] -> cur[d-1] */
-            int32_t v = prev[d + k]
-                + (ca != elem_at(b, j - 1, es) ? 1 : 0);
-            if (d + 1 <= k && prev[d + k + 1] + 1 < v)
-                v = prev[d + k + 1] + 1;
-            if (d - 1 >= -k && cur[d + k - 1] + 1 < v)
-                v = cur[d + k - 1] + 1;
-            cur[d + k] = v;
-        }
-        int32_t *tmp = prev; prev = cur; cur = tmp;
-    }
-    int32_t res = prev[(n - m) + k];  /* after final swap prev = row m */
-    return (res <= k) ? (int64_t)res : -1;
-}
-
-/* Banded OSA pass: same diagonal band soundness as levenshtein (every
- * edit op changes j - i by at most 1 per unit cost; the adjacent
- * transposition leaves j - i unchanged), with the OSA transposition
- * term from the row-before-previous: D[i-2][j-2] sits at the SAME
- * diagonal offset d.  Exact if the true OSA distance <= k, else -1. */
-static int64_t osa_band_pass(const char *a, int64_t m, const char *b,
-                             int64_t n, int es, int64_t k,
-                             int32_t *p2, int32_t *p1, int32_t *cur) {
-    const int32_t INF = 1 << 29;
-    for (int64_t d = -k; d <= k; d++) {
-        p1[d + k] = (d >= 0 && d <= n) ? (int32_t)d : INF;
-        p2[d + k] = INF;
-    }
-    for (int64_t i = 1; i <= m; i++) {
-        uint32_t ca = elem_at(a, i - 1, es);
-        for (int64_t d = -k; d <= k; d++) {
-            int64_t j = i + d;
-            if (j < 0 || j > n) { cur[d + k] = INF; continue; }
-            if (j == 0) { cur[d + k] = (int32_t)i; continue; }
-            uint32_t cb = elem_at(b, j - 1, es);
-            int32_t v = p1[d + k] + (ca != cb ? 1 : 0);
-            if (d + 1 <= k && p1[d + k + 1] + 1 < v)
-                v = p1[d + k + 1] + 1;
-            if (d - 1 >= -k && cur[d + k - 1] + 1 < v)
-                v = cur[d + k - 1] + 1;
-            if (i > 1 && j > 1
-                && ca == elem_at(b, j - 2, es)
-                && elem_at(a, i - 2, es) == cb
-                && p2[d + k] + 1 < v)
-                v = p2[d + k] + 1;
-            cur[d + k] = v;
-        }
-        int32_t *tmp = p2; p2 = p1; p1 = cur; cur = tmp;
-    }
-    int32_t res = p1[(n - m) + k];  /* p1 = row m after rotation */
-    return (res <= k) ? (int64_t)res : -1;
-}
-
-int batch_osa_banded_es(const void *pat, const int64_t *pat_off,
-                        const void *txt, const int64_t *txt_off,
-                        int64_t n_pairs, int64_t *out,
-                        const int64_t *hints, const int64_t *bounds,
-                        int64_t elem_size) {
-    /* same driver contract as batch_lev_hinted_es: exact values, -1 =
-     * proven above bounds, -2 = band unprofitable (caller uses the
-     * full bit-parallel OSA kernel).  NOTE: affix stripping is safe
-     * for OSA too — a shared prefix/suffix is matched for free by any
-     * optimal alignment and transpositions never straddle it
-     * profitably (the reference strips at osa.rs:255). */
-    const int es = (int)elem_size;
-    int64_t cap = 0;
-    int32_t *p2 = NULL, *p1 = NULL, *cur = NULL;
-    for (int64_t i = 0; i < n_pairs; i++) {
-        const char *p = (const char *)pat + pat_off[i] * es;
-        int64_t m = pat_off[i + 1] - pat_off[i];
-        const char *t = (const char *)txt + txt_off[i] * es;
-        int64_t n = txt_off[i + 1] - txt_off[i];
-        int64_t lim = m < n ? m : n;
-        int64_t pre = 0;
-        while (pre < lim && elem_at(p, pre, es) == elem_at(t, pre, es)) pre++;
-        int64_t suf = 0;
-        while (suf < lim - pre
-               && elem_at(p, m - 1 - suf, es) == elem_at(t, n - 1 - suf, es))
-            suf++;
-        const char *ps = p + pre * es;
-        const char *ts = t + pre * es;
-        int64_t ms = m - pre - suf;
-        int64_t ns = n - pre - suf;
-        if (ms == 0 || ns == 0) { out[i] = ms == 0 ? ns : ms; continue; }
-        if (ms > ns) {
-            const char *tp = ps; ps = ts; ts = tp;
-            int64_t tl = ms; ms = ns; ns = tl;
-        }
-        int64_t bound = bounds ? bounds[i] : -1;
-        int64_t k = hints ? hints[i] : -1;
-        int64_t mind = ns - ms;
-        if (k < mind) k = mind;
-        if (k < 1) k = 1;
-        if (2 * k + 1 > ms / 4) { out[i] = -2; continue; }
-        for (;;) {
-            if (2 * k + 3 > cap) {
-                free(p2); free(p1); free(cur);
-                cap = 2 * k + 3;
-                p2 = (int32_t *)malloc((size_t)cap * sizeof(int32_t));
-                p1 = (int32_t *)malloc((size_t)cap * sizeof(int32_t));
-                cur = (int32_t *)malloc((size_t)cap * sizeof(int32_t));
-                if (!p2 || !p1 || !cur) {
-                    free(p2); free(p1); free(cur);
-                    return -1;
-                }
-            }
-            int64_t r = osa_band_pass(ps, ms, ts, ns, es, k, p2, p1, cur);
-            if (r >= 0) { out[i] = r; break; }
-            if (bound >= 0 && k >= bound) { out[i] = -1; break; }
-            k <<= 1;
-            if (2 * k + 1 > ms / 2) { out[i] = -2; break; }
-        }
-    }
-    free(p2); free(p1); free(cur);
-    return 0;
-}
-
-int batch_lev_hinted_es(const void *pat, const int64_t *pat_off,
-                        const void *txt, const int64_t *txt_off,
-                        int64_t n_pairs, int64_t *out,
-                        const int64_t *hints, const int64_t *bounds,
-                        int64_t elem_size) {
-    const int es = (int)elem_size;
-    int64_t cap = 0;
-    int32_t *prev = NULL, *cur = NULL;
-    for (int64_t i = 0; i < n_pairs; i++) {
-        const char *p = (const char *)pat + pat_off[i] * es;
-        int64_t m = pat_off[i + 1] - pat_off[i];
-        const char *t = (const char *)txt + txt_off[i] * es;
-        int64_t n = txt_off[i + 1] - txt_off[i];
-        /* strip common prefix + suffix (distance-invariant) */
-        int64_t lim = m < n ? m : n;
-        int64_t pre = 0;
-        while (pre < lim && elem_at(p, pre, es) == elem_at(t, pre, es)) pre++;
-        int64_t suf = 0;
-        while (suf < lim - pre
-               && elem_at(p, m - 1 - suf, es) == elem_at(t, n - 1 - suf, es))
-            suf++;
-        const char *ps = p + pre * es;
-        const char *ts = t + pre * es;
-        int64_t ms = m - pre - suf;
-        int64_t ns = n - pre - suf;
-        if (ms == 0 || ns == 0) { out[i] = ms == 0 ? ns : ms; continue; }
-        if (ms > ns) {  /* symmetric: shorter side as rows */
-            const char *tp = ps; ps = ts; ts = tp;
-            int64_t tl = ms; ms = ns; ns = tl;
-        }
-        int64_t bound = bounds ? bounds[i] : -1;
-        int64_t k = hints ? hints[i] : -1;
-        int64_t mind = ns - ms;
-        if (k < mind) k = mind;
-        if (k < 1) k = 1;
-        /* profitability gate (with headroom for one doubling) */
-        if (2 * k + 1 > ms / 4) { out[i] = -2; continue; }
-        for (;;) {
-            if (2 * k + 3 > cap) {
-                free(prev); free(cur);
-                cap = 2 * k + 3;
-                prev = (int32_t *)malloc((size_t)cap * sizeof(int32_t));
-                cur = (int32_t *)malloc((size_t)cap * sizeof(int32_t));
-                if (!prev || !cur) { free(prev); free(cur); return -1; }
-            }
-            int64_t r = lev_band_pass(ps, ms, ts, ns, es, k, prev, cur);
-            if (r >= 0) { out[i] = r; break; }
-            if (bound >= 0 && k >= bound) { out[i] = -1; break; }
-            k <<= 1;
-            if (2 * k + 1 > ms / 2) { out[i] = -2; break; }
-        }
-    }
-    free(prev); free(cur);
-    return 0;
-}
-
-/* --------- indel, hint-seeded band (round 6, VERDICT r5 item 8) ---- */
-/* Banded DP for the INDEL distance (insert/delete only — the metric
- * under fuzz::ratio and the indel module; dist = m + n - 2*LCS).  Each
- * unit-cost op changes j - i by exactly 1, so any path with cost <= k
- * stays inside |j - i| <= k: the band is exact whenever the true
- * distance is <= k (the reference's indel band algebra,
- * src/distance/indel.rs:84-104, as an explicit diagonal band).  A
- * match is free along the diagonal; there is NO substitution move. */
-
-static int64_t indel_band_pass(const char *a, int64_t m, const char *b,
-                               int64_t n, int es, int64_t k,
-                               int32_t *prev, int32_t *cur) {
-    const int32_t INF = 1 << 29;
-    for (int64_t d = -k; d <= k; d++)
-        prev[d + k] = (d >= 0 && d <= n) ? (int32_t)d : INF;
-    for (int64_t i = 1; i <= m; i++) {
-        uint32_t ca = elem_at(a, i - 1, es);
-        int32_t rowmin = INF;
-        for (int64_t d = -k; d <= k; d++) {
-            int64_t j = i + d;
-            if (j < 0 || j > n) { cur[d + k] = INF; continue; }
-            if (j == 0) { cur[d + k] = (int32_t)i; continue; }
-            /* diag (match only) D[i-1][j-1] -> prev[d]; up D[i-1][j]
-             * -> prev[d+1]; left D[i][j-1] -> cur[d-1] */
-            int32_t v = INF;
-            if (ca == elem_at(b, j - 1, es)) v = prev[d + k];
-            if (d + 1 <= k && prev[d + k + 1] + 1 < v)
-                v = prev[d + k + 1] + 1;
-            if (d - 1 >= -k && cur[d + k - 1] + 1 < v)
-                v = cur[d + k - 1] + 1;
-            cur[d + k] = v;
-            if (v < rowmin) rowmin = v;
-        }
-        /* Ukkonen early termination: the row minimum is non-decreasing
-         * (every cell derives from a previous-row cell via +0/+1
-         * moves), so once it exceeds k the final value must too —
-         * failing pairs cost O(k^2) instead of O(m*k) */
-        if (rowmin > (int32_t)k) return -1;
-        int32_t *tmp = prev; prev = cur; cur = tmp;
-    }
-    int32_t res = prev[(n - m) + k];  /* after final swap prev = row m */
-    return (res <= k) ? (int64_t)res : -1;
-}
-
-int batch_indel_banded_es(const void *pat, const int64_t *pat_off,
-                          const void *txt, const int64_t *txt_off,
-                          int64_t n_pairs, int64_t *out,
-                          const int64_t *hints, const int64_t *bounds,
-                          int64_t elem_size) {
-    /* same driver contract as batch_lev_hinted_es: exact indel
-     * distances, -1 = proven above bounds, -2 = band unprofitable
-     * (caller uses the full bit-parallel LCS kernel).  Affix stripping
-     * is distance-invariant (a shared affix is matched free on the
-     * diagonal). */
-    const int es = (int)elem_size;
-    int64_t cap = 0;
-    int32_t *prev = NULL, *cur = NULL;
-    for (int64_t i = 0; i < n_pairs; i++) {
-        const char *p = (const char *)pat + pat_off[i] * es;
-        int64_t m = pat_off[i + 1] - pat_off[i];
-        const char *t = (const char *)txt + txt_off[i] * es;
-        int64_t n = txt_off[i + 1] - txt_off[i];
-        int64_t lim = m < n ? m : n;
-        int64_t pre = 0;
-        while (pre < lim && elem_at(p, pre, es) == elem_at(t, pre, es)) pre++;
-        int64_t suf = 0;
-        while (suf < lim - pre
-               && elem_at(p, m - 1 - suf, es) == elem_at(t, n - 1 - suf, es))
-            suf++;
-        const char *ps = p + pre * es;
-        const char *ts = t + pre * es;
-        int64_t ms = m - pre - suf;
-        int64_t ns = n - pre - suf;
-        if (ms == 0 || ns == 0) { out[i] = ms == 0 ? ns : ms; continue; }
-        if (ms > ns) {  /* symmetric: shorter side as rows */
-            const char *tp = ps; ps = ts; ts = tp;
-            int64_t tl = ms; ms = ns; ns = tl;
-        }
-        int64_t bound = bounds ? bounds[i] : -1;
-        int64_t k = hints ? hints[i] : -1;
-        int64_t mind = ns - ms;
-        if (k < mind) k = mind;
-        if (k < 1) k = 1;
-        /* cutoff bound below the length difference: suppressed for
-         * free (dist >= |n - m| always) */
-        if (bound >= 0 && bound < mind) { out[i] = -1; continue; }
-        /* profitability: the full bit-parallel LCS kernel runs at
-         * ~0.007 ns/DP-cell effective (64 cells per ~0.5 ns word op),
-         * so a classical band only wins in the VERY tight regime —
-         * measured break-even is a band of ~25-30 cells.  Engage only
-         * when the DECIDING band (the cutoff bound if set, else the
-         * hint) is that narrow; everything else goes straight to the
-         * bit-parallel kernel (-2).  With a bound, failing pairs then
-         * abort in O(k^2) via the row-min check — the big win. */
-        {
-            int64_t deciding = bound >= 0 ? bound : k;
-            if (2 * deciding + 1 > 33 || 2 * deciding + 1 > ms / 8) {
-                out[i] = -2; continue;
-            }
-        }
-        if (bound >= 0 && k > bound) k = bound;
-        for (;;) {
-            if (2 * k + 3 > cap) {
-                free(prev); free(cur);
-                cap = 2 * k + 3;
-                prev = (int32_t *)malloc((size_t)cap * sizeof(int32_t));
-                cur = (int32_t *)malloc((size_t)cap * sizeof(int32_t));
-                if (!prev || !cur) { free(prev); free(cur); return -1; }
-            }
-            int64_t r = indel_band_pass(ps, ms, ts, ns, es, k, prev, cur);
-            if (r >= 0) { out[i] = r; break; }
-            if (bound >= 0 && k >= bound) { out[i] = -1; break; }
-            k <<= 1;
-            if (bound >= 0) {
-                if (k > bound) k = bound;  /* final, deciding pass */
-            } else if (2 * k + 1 > 33) {
-                out[i] = -2; break;  /* past the winning regime */
-            }
-        }
-    }
-    free(prev); free(cur);
     return 0;
 }
 
@@ -950,13 +610,11 @@ int batch_jaro(const uint32_t *pat, const int64_t *pat_off,
  * (m+2)x(n+2) matrix, so arbitrarily long inputs need O(n + sigma)
  * working memory — no cell cap, no caller fallback.  Same cost model
  * as the reference kernel (src/distance/damerau_levenshtein.rs:111-168,
- * the same published algorithm).  max_cells is kept in the signature
- * for ABI stability but is unused. */
+ * the same published algorithm). */
 
 int batch_damerau(const uint32_t *pat, const int64_t *pat_off,
                   const uint32_t *txt, const int64_t *txt_off,
-                  int64_t n_pairs, int64_t *out, int64_t max_cells) {
-    (void)max_cells;
+                  int64_t n_pairs, int64_t *out) {
     int64_t mmax = 0, nmax = 0;
     for (int64_t i = 0; i < n_pairs; i++) {
         int64_t m = pat_off[i + 1] - pat_off[i];

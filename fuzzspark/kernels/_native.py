@@ -102,20 +102,6 @@ def get_lib():
         return None
     try:
         lib = ctypes.CDLL(_compile())
-        lib.batch_metric.restype = ctypes.c_int
-        lib.batch_metric.argtypes = [
-            ctypes.c_int,
-            np.ctypeslib.ndpointer(np.uint32, flags="C_CONTIGUOUS"),
-            np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-            np.ctypeslib.ndpointer(np.uint32, flags="C_CONTIGUOUS"),
-            np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-            ctypes.c_int64,
-            np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-        ]
-        lib.batch_metric_bounded.restype = ctypes.c_int
-        lib.batch_metric_bounded.argtypes = \
-            lib.batch_metric.argtypes + [
-                np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS")]
         # es-aware core: code buffers as raw pointers (uint8 or uint32)
         lib.batch_metric_bounded_es.restype = ctypes.c_int
         lib.batch_metric_bounded_es.argtypes = [
@@ -141,33 +127,6 @@ def get_lib():
             np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
             ctypes.c_int64,
         ]
-        lib.batch_osa_banded_es.restype = ctypes.c_int
-        lib.batch_osa_banded_es.argtypes = [
-            ctypes.c_void_p,
-            np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-            ctypes.c_void_p,
-            np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-            ctypes.c_int64,
-            np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-            ctypes.c_void_p,
-            ctypes.c_void_p,
-            ctypes.c_int64,
-        ]
-        lib.batch_lev_hinted_es.restype = ctypes.c_int
-        lib.batch_lev_hinted_es.argtypes = [
-            ctypes.c_void_p,
-            np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-            ctypes.c_void_p,
-            np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-            ctypes.c_int64,
-            np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-            ctypes.c_void_p,
-            ctypes.c_void_p,
-            ctypes.c_int64,
-        ]
-        lib.batch_indel_banded_es.restype = ctypes.c_int
-        lib.batch_indel_banded_es.argtypes = \
-            lib.batch_lev_hinted_es.argtypes
         lib.batch_jaro.restype = ctypes.c_int
         lib.batch_jaro.argtypes = [
             np.ctypeslib.ndpointer(np.uint32, flags="C_CONTIGUOUS"),
@@ -194,7 +153,6 @@ def get_lib():
             np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
             ctypes.c_int64,
             np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS"),
-            ctypes.c_int64,
         ]
         lib.batch_minhash.restype = ctypes.c_int
         lib.batch_minhash.argtypes = [
@@ -277,6 +235,23 @@ def _flatten_raw(strs: list[str], lens: np.ndarray | None = None):
                 off, 4)
 
 
+def _flatten_pair(pat_strs: list[str], txt_strs: list[str],
+                  pat_lens: np.ndarray | None = None,
+                  txt_lens: np.ndarray | None = None):
+    """(pat, pat_off, txt, txt_off, elem_size): both sides flattened
+    by :func:`_flatten_raw` to ONE element size — when only one side is
+    ASCII it is widened to uint32 (an ASCII byte equals its code
+    point, so the widening is exact)."""
+    pat, pat_off, p_es = _flatten_raw(pat_strs, pat_lens)
+    txt, txt_off, t_es = _flatten_raw(txt_strs, txt_lens)
+    if p_es != t_es:
+        if p_es == 1:
+            pat = pat.astype(np.uint32)
+        else:
+            txt = txt.astype(np.uint32)
+    return pat, pat_off, txt, txt_off, max(p_es, t_es)
+
+
 def native_batch(kind: int, pat_strs: list[str], txt_strs: list[str],
                  bounds: np.ndarray | None = None,
                  pat_lens: np.ndarray | None = None,
@@ -290,14 +265,8 @@ def native_batch(kind: int, pat_strs: list[str], txt_strs: list[str],
     lib = get_lib()
     if lib is None or not pat_strs:
         return None if lib is None else np.zeros(0, dtype=np.int64)
-    pat, pat_off, p_es = _flatten_raw(pat_strs, pat_lens)
-    txt, txt_off, t_es = _flatten_raw(txt_strs, txt_lens)
-    if p_es != t_es:  # mixed ascii/wide sides: widen the narrow one
-        if p_es == 1:
-            pat = pat.astype(np.uint32)
-        else:
-            txt = txt.astype(np.uint32)
-        p_es = t_es = 4
+    pat, pat_off, txt, txt_off, es = _flatten_pair(pat_strs, txt_strs,
+                                                   pat_lens, txt_lens)
     out = np.empty(len(pat_strs), dtype=np.int64)
     b = (None if bounds is None
          else np.ascontiguousarray(bounds, dtype=np.int64))
@@ -307,7 +276,7 @@ def native_batch(kind: int, pat_strs: list[str], txt_strs: list[str],
         txt.ctypes.data_as(ctypes.c_void_p), txt_off,
         len(pat_strs), out,
         None if b is None else b.ctypes.data_as(ctypes.c_void_p),
-        p_es)
+        es)
     if rc != 0:  # pragma: no cover (allocation failure)
         return None
     return out
@@ -320,61 +289,13 @@ def native_affix(mode: int, pat_strs: list[str], txt_strs: list[str],
     lib = get_lib()
     if lib is None or not pat_strs:
         return None if lib is None else np.zeros(0, dtype=np.int64)
-    pat, pat_off, p_es = _flatten_raw(pat_strs)
-    txt, txt_off, t_es = _flatten_raw(txt_strs)
-    if p_es != t_es:
-        if p_es == 1:
-            pat = pat.astype(np.uint32)
-        else:
-            txt = txt.astype(np.uint32)
-        p_es = t_es = 4
+    pat, pat_off, txt, txt_off, es = _flatten_pair(pat_strs, txt_strs)
     out = np.empty(len(pat_strs), dtype=np.int64)
     rc = lib.batch_affix(
         mode, cap,
         pat.ctypes.data_as(ctypes.c_void_p), pat_off,
         txt.ctypes.data_as(ctypes.c_void_p), txt_off,
-        len(pat_strs), out, p_es)
-    return out if rc == 0 else None
-
-
-def native_banded(kind: str, pat_strs: list[str], txt_strs: list[str],
-                  hint, bounds: np.ndarray | None = None
-                  ) -> np.ndarray | None:
-    """Hint/cutoff-seeded banded kernels (exact results), kind in
-    {'levenshtein', 'osa', 'indel'}: per pair the diagonal band starts
-    at ``hint`` (a scalar raw distance or a per-pair int64 array) and
-    doubles until the distance is found.  -2 entries mark pairs where
-    banding cannot beat the full bit-parallel kernel (caller recomputes
-    those via native_batch); -1 entries mark pairs proven above
-    ``bounds`` (the bounded kernel's abandonment contract).  None when
-    no compiler is available."""
-    lib = get_lib()
-    if lib is None or not pat_strs:
-        return None if lib is None else np.zeros(0, dtype=np.int64)
-    pat, pat_off, p_es = _flatten_raw(pat_strs)
-    txt, txt_off, t_es = _flatten_raw(txt_strs)
-    if p_es != t_es:
-        if p_es == 1:
-            pat = pat.astype(np.uint32)
-        else:
-            txt = txt.astype(np.uint32)
-        p_es = t_es = 4
-    out = np.empty(len(pat_strs), dtype=np.int64)
-    hints = (np.ascontiguousarray(hint, dtype=np.int64)
-             if isinstance(hint, np.ndarray)
-             else np.full(len(pat_strs), int(hint), dtype=np.int64))
-    b = (None if bounds is None
-         else np.ascontiguousarray(bounds, dtype=np.int64))
-    fn = {"levenshtein": lib.batch_lev_hinted_es,
-          "osa": lib.batch_osa_banded_es,
-          "indel": lib.batch_indel_banded_es}[kind]
-    rc = fn(
-        pat.ctypes.data_as(ctypes.c_void_p), pat_off,
-        txt.ctypes.data_as(ctypes.c_void_p), txt_off,
-        len(pat_strs), out,
-        hints.ctypes.data_as(ctypes.c_void_p),
-        None if b is None else b.ctypes.data_as(ctypes.c_void_p),
-        p_es)
+        len(pat_strs), out, es)
     return out if rc == 0 else None
 
 
@@ -467,11 +388,10 @@ def union_find_roots(du: np.ndarray, dv: np.ndarray,
     return p
 
 
-def native_damerau(pat_strs: list[str], txt_strs: list[str],
-                   max_cells: int = 1 << 24) -> np.ndarray | None:
+def native_damerau(pat_strs: list[str], txt_strs: list[str]
+                   ) -> np.ndarray | None:
     """Zhao-Sahni linear-space DL kernel: any input length, O(n + sigma)
-    working memory.  max_cells is retained for ABI stability but unused
-    (the old full-matrix kernel's -1 oversized marker is gone)."""
+    working memory."""
     lib = get_lib()
     if lib is None:
         return None
@@ -481,5 +401,5 @@ def native_damerau(pat_strs: list[str], txt_strs: list[str],
     txt, txt_off = _flatten(txt_strs)
     out = np.empty(len(pat_strs), dtype=np.int64)
     rc = lib.batch_damerau(pat, pat_off, txt, txt_off, len(pat_strs),
-                           out, max_cells)
+                           out)
     return out if rc == 0 else None

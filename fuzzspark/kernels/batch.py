@@ -4,7 +4,7 @@ This is the engine under the Spark pandas UDFs: one call scores an
 entire Arrow batch.  Strategy per pair family:
 
 * ``levenshtein`` (uniform) / ``lcs_seq`` / ``indel`` / ``osa`` /
-  ``ratio``: the C batch kernel (affix stripping, bounds and banding
+  ``ratio``: the C batch kernel (affix stripping and cutoff bounds
   inside).  Without a compiler: strip the common affix
   (src/details/common.rs:79-108), then run the big-int bit-parallel
   cores with pattern masks built once per distinct pattern — the
@@ -18,6 +18,7 @@ entire Arrow batch.  Strategy per pair family:
 
 Outputs are float64 arrays with NaN for NULL inputs or cutoff-
 suppressed scores (reference ``Option::None``, src/common.rs:33-86).
+``score_hint`` is accepted and ignored: results never depend on it.
 """
 
 from __future__ import annotations
@@ -188,8 +189,7 @@ def _bitpar_family_distances(kind: str, pairs: list[tuple[str, str]],
 
 
 def _ratio_sims(pairs: list[tuple[str, str]],
-                sim_cutoff: Optional[float] = None,
-                sim_hint: Optional[float] = None) -> np.ndarray:
+                sim_cutoff: Optional[float] = None) -> np.ndarray:
     """indel normalized_similarity (= fuzz.ratio) per raw pair.
 
     ``sim_cutoff`` drives kernel-level early abandonment: a pair passes
@@ -197,14 +197,6 @@ def _ratio_sims(pairs: list[tuple[str, str]],
     abandoned pairs (-1 from the kernel) yield a NEGATIVE similarity,
     which the caller's final cutoff comparison suppresses — exactly the
     rows full computation would have suppressed.
-
-    ``sim_hint`` (round 6, VERDICT r5 item 8): expected similarity —
-    seeds the hint-banded indel kernel (diagonal band at the implied
-    distance, doubling retry; reference band algebra
-    src/distance/indel.rs:84-104).  Results are bit-identical with or
-    without it: banded values are exact, unprofitable pairs (-2) rerun
-    on the full bit-parallel kernel, and abandonment (-1) fires only
-    against the cutoff-derived bound the full kernel also honors.
 
     Hot path: ONE python pass builds pattern/text sides and both length
     columns together (instead of separate passes for pat, txt, lens per
@@ -232,56 +224,10 @@ def _ratio_sims(pairs: list[tuple[str, str]],
         if sim_cutoff is not None and sim_cutoff > 0:
             min_lcs = np.ceil(sim_cutoff * total / 2.0 - 1e-7).astype(np.int64)
             bounds = np.where(min_lcs > 0, min_lcs, np.int64(-1))
-        if sim_hint is not None and bounds is not None:
-            # banded engagement is BOUNDED-ONLY and python-pre-gated
-            # (round 6, measured): the bit-parallel kernel runs at
-            # ~0.007 ns/DP-cell effective, so the classical band wins
-            # only when the cutoff-derived distance bound is tiny —
-            # failing pairs then abort in O(k^2) (2.7x on tight-cutoff
-            # candidate mixes).  Everything else goes straight to the
-            # full kernel with no detour.
-            d_bound = np.where(bounds > 0, total - 2 * bounds,
-                               np.int64(-1))
-            el = np.flatnonzero((d_bound >= 0) & (2 * d_bound + 1 <= 33)
-                                & (2 * d_bound + 1 <= plens // 8))
-            if len(el):
-                d_hint = np.maximum(
-                    np.ceil((1.0 - float(sim_hint)) * total[el] - 1e-7),
-                    0.0).astype(np.int64)
-                banded = _native.native_banded(
-                    "indel", [pat[j] for j in el], [txt[j] for j in el],
-                    d_hint, d_bound[el])
-                if banded is not None:
-                    lcs_full = np.empty(n, dtype=np.int64)
-                    # dist -> LCS (total - dist is even by parity); -1
-                    # (proven above the cutoff bound) keeps the same -1
-                    # sentinel the full kernel's abandonment uses
-                    lcs_full[el] = np.where(banded >= 0,
-                                            (total[el] - banded) // 2,
-                                            np.int64(-1))
-                    redo = el[banded == -2]
-                    rest = np.concatenate([
-                        np.setdiff1d(np.arange(n, dtype=np.int64), el,
-                                     assume_unique=False), redo])
-                    if len(rest):
-                        sub = _native_reordered(
-                            lambda p, t, bd, pln=None, tln=None:
-                            _native.native_batch(0, p, t, bounds=bd,
-                                                 pat_lens=pln,
-                                                 txt_lens=tln),
-                            [pat[j] for j in rest],
-                            [txt[j] for j in rest],
-                            aux=bounds[rest],
-                            lens=(plens[rest], tlens[rest]))
-                        if sub is None:  # lib vanished: full fallback
-                            lcs_full = None
-                        else:
-                            lcs_full[rest] = sub
-        if lcs_full is None:
-            lcs_full = _native_reordered(
-                lambda p, t, bd, pln=None, tln=None: _native.native_batch(
-                    0, p, t, bounds=bd, pat_lens=pln, txt_lens=tln),
-                pat, txt, aux=bounds, lens=(plens, tlens))
+        lcs_full = _native_reordered(
+            lambda p, t, bd, pln=None, tln=None: _native.native_batch(
+                0, p, t, bounds=bd, pat_lens=pln, txt_lens=tln),
+            pat, txt, aux=bounds, lens=(plens, tlens))
     if lcs_full is None:  # no compiler: exact fallback path
         total = np.fromiter((len(a) + len(b) for a, b in pairs),
                             dtype=np.int64, count=n)
@@ -319,8 +265,7 @@ def _partial_ratio_batch(pairs: list[tuple[str, str]]) -> np.ndarray:
 def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
                weights=None, pad=False, prefix_weight=0.1,
                errors: str = "null", form: Optional[str] = None,
-               score_cutoff: Optional[float] = None,
-               score_hint: Optional[int] = None
+               score_cutoff: Optional[float] = None
                ) -> tuple[np.ndarray, np.ndarray]:
     """Exact raw canonical score per pair (distance for usize metrics,
     similarity for jaro family / composites).  Returns (raw, valid).
@@ -329,8 +274,7 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
     high-traffic paths (ratio-family similarity cutoffs, lev/osa
     distance cutoffs): abandoned pairs surface as values the final
     cutoff comparison provably suppresses — observable results are
-    identical to full computation.  ``score_hint`` (raw distance) seeds
-    the banded levenshtein kernel; it never changes results."""
+    identical to full computation."""
     n = len(s1)
     raw = np.full(n, np.nan)
     idx = np.flatnonzero(valid)
@@ -347,57 +291,10 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
             vals[got < 0] = np.floor(score_cutoff) + 1.0
         return vals
 
-    def _banded_or_none(kind):
-        """Hint/cutoff-seeded banded kernel path (reference band-
-        doubling trick, src/distance/levenshtein.rs:1069-1089): exact
-        values; -2 marks pairs where the full bit-parallel kernel is
-        cheaper (recomputed here).  Non-distance-form hints convert to
-        per-pair raw distances via the usual cutoff algebra — any
-        monotone conversion is safe because the band only seeds, never
-        decides.  A CUTOFF with no hint also rides the band: one pass
-        at band = max passing distance either returns the exact value
-        (<= band) or proves suppression (-1), which is precisely the
-        bounded kernel's abandonment contract.  Returns None when
-        banding does not apply (caller uses the full kernel)."""
-        bounds = _dist_bounds()
-        if ((score_hint is None and bounds is None) or not len(idx)
-                or _native.get_lib() is None):
-            return None, bounds
-        a = [s1[k] for k in idx]
-        b = [s2[k] for k in idx]
-        if score_hint is None:
-            hints = bounds  # distance form only (bounds != None)
-        elif form == "distance":
-            hints = np.full(len(idx), max(0, int(score_hint)),
-                            dtype=np.int64)
-        else:
-            l1 = np.fromiter((len(x) for x in a), np.int64, len(idx))
-            l2 = np.fromiter((len(x) for x in b), np.int64, len(idx))
-            mx = np.maximum(l1, l2)
-            if form == "similarity":
-                hints = np.maximum(mx - np.int64(int(score_hint)), 0)
-            elif form == "normalized_distance":
-                hints = np.ceil(mx * float(score_hint)).astype(np.int64)
-            else:  # normalized_similarity
-                hints = np.ceil(mx * (1.0 - float(score_hint))) \
-                    .astype(np.int64)
-        got = _native.native_banded(kind, a, b, hints, bounds)
-        if got is None:
-            return None, bounds
-        redo = np.flatnonzero(got == -2)
-        if len(redo):
-            sub = _bitpar_family_distances(
-                kind, [(a[j], b[j]) for j in redo],
-                bounds=None if bounds is None else bounds[redo])
-            got[redo] = sub
-        return got, bounds
-
     if scorer in ("levenshtein",) and (weights is None or tuple(weights) == (1, 1, 1)):
-        got, bounds = _banded_or_none("levenshtein")
-        if got is None:
-            got = _bitpar_family_distances(
-                "levenshtein", [(s1[k], s2[k]) for k in idx],
-                bounds=bounds)
+        got = _bitpar_family_distances(
+            "levenshtein", [(s1[k], s2[k]) for k in idx],
+            bounds=_dist_bounds())
         raw[idx] = _fix_abandoned(got)
     elif scorer == "levenshtein":
         # batch-level weight reductions (src/distance/levenshtein.rs
@@ -420,22 +317,12 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
                 raw[k] = levenshtein_distance_raw(s1[k], s2[k],
                                                   tuple(weights))
     elif scorer in ("indel", "lcs_seq", "ratio", "token_sort_ratio"):
-        # hint -> expected normalized similarity for the sim-canonical
-        # scorers (any monotone conversion is safe: the band only seeds)
-        sim_hint = None
-        if score_hint is not None and scorer in ("ratio",
-                                                 "token_sort_ratio"):
-            s = (float(score_hint)
-                 if form in ("similarity", "normalized_similarity")
-                 else 1.0 - float(score_hint))
-            sim_hint = min(max(s, 0.0), 1.0)
         if scorer == "ratio" and len(idx) == n:
             # all-valid hot path: zip is a C-speed pairing
             raw[:] = _ratio_sims(
                 list(zip(s1, s2)),
                 sim_cutoff=(score_cutoff
-                            if form == "normalized_similarity" else None),
-                sim_hint=sim_hint)
+                            if form == "normalized_similarity" else None))
             return raw, valid
         if scorer == "token_sort_ratio":
             # tokenize/sort once per DISTINCT string: candidate batches
@@ -454,8 +341,7 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
         if scorer in ("ratio", "token_sort_ratio"):
             sim_cut = (score_cutoff
                        if form == "normalized_similarity" else None)
-            raw[idx] = _ratio_sims(pairs, sim_cutoff=sim_cut,
-                                   sim_hint=sim_hint)
+            raw[idx] = _ratio_sims(pairs, sim_cutoff=sim_cut)
         else:
             lens = np.array([[len(a), len(b)] for a, b in pairs],
                             dtype=np.int64).reshape(-1, 2)
@@ -465,10 +351,8 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
             else:  # lcs_seq: canonical raw = distance = max(len) - lcs
                 raw[idx] = np.maximum(lens[:, 0], lens[:, 1]) - lcs_full
     elif scorer == "osa":
-        got, bounds = _banded_or_none("osa")
-        if got is None:
-            got = _bitpar_family_distances(
-                "osa", [(s1[k], s2[k]) for k in idx], bounds=bounds)
+        got = _bitpar_family_distances(
+            "osa", [(s1[k], s2[k]) for k in idx], bounds=_dist_bounds())
         raw[idx] = _fix_abandoned(got)
     elif scorer == "damerau_levenshtein":
         # Zhao-Sahni linear-space C kernel: O(n + sigma) memory, so no
@@ -505,13 +389,7 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
         tot = int(m.sum())
         mism = np.zeros(len(idx), dtype=np.int64)
         if tot:
-            c1, off1, es1 = _native._flatten_raw(a, l1)
-            c2, off2, es2 = _native._flatten_raw(b, l2)
-            if es1 != es2:  # ASCII byte == code point, widening exact
-                if es1 == 1:
-                    c1 = c1.astype(np.uint32)
-                else:
-                    c2 = c2.astype(np.uint32)
+            c1, off1, c2, off2, _ = _native._flatten_pair(a, b, l1, l2)
             ends = np.cumsum(m)
             if np.array_equal(l1, l2):
                 # equal lengths everywhere (the dominant hamming case):
@@ -739,24 +617,10 @@ def batch_scores(scorer: str, form: str, s1_arr, s2_arr, *,
     ``pad`` default False matches the reference hamming
     ``Args::default()`` (NoPadding -> error on unequal lengths,
     src/distance/hamming.rs:32-40); with ``errors='null'`` the error
-    becomes a NaN/NULL row.  ``score_hint`` is a pure performance knob
-    (reference semantics, src/distance/levenshtein.rs:1069-1089): for
-    uniform levenshtein/osa it seeds the banded kernel's initial band
-    (all four forms; non-distance hints convert to per-pair raw
-    distances), retried with doubling; for ratio/token_sort_ratio
-    (round 6, band algebra src/distance/indel.rs:84-104) a
-    normalized_similarity hint + cutoff engages the bounded indel band
-    — failing pairs abort in O(k^2) — in the tight-cutoff regime where
-    it measurably beats the bit-parallel kernel.  Results are always
-    identical with or without a hint; other scorers accept and ignore
-    it."""
-    hint = None
-    if score_hint is not None and scorer in (
-            "levenshtein", "osa", "ratio", "token_sort_ratio"):
-        try:
-            hint = float(score_hint)
-        except (TypeError, ValueError):
-            hint = None
+    becomes a NaN/NULL row.  ``score_hint`` is reference API parity
+    (a pure performance knob there, src/distance/levenshtein.rs
+    :1069-1089): accepted and ignored, results never depend on it."""
+    del score_hint
     if form not in FORMS:
         raise ValueError(f"unknown form {form!r}")
     s1 = _clean(s1_arr)
@@ -779,8 +643,7 @@ def batch_scores(scorer: str, form: str, s1_arr, s2_arr, *,
                                           weights, prefix_weight=prefix_weight)
     raw, valid = _raw_batch(scorer, s1, s2, valid, weights=weights, pad=pad,
                             prefix_weight=prefix_weight, errors=errors,
-                            form=form, score_cutoff=score_cutoff,
-                            score_hint=hint)
+                            form=form, score_cutoff=score_cutoff)
     out = np.full(n, np.nan)
     idx = np.flatnonzero(valid)
     if len(idx) == 0:

@@ -137,8 +137,7 @@ def make_forms(distance_fn, maximum_fn, *, integral: bool = True):
     ``score_hint`` and the kernel's ``**extra`` args, with reference
     cutoff semantics.  ``score_hint`` is reference API parity
     (src/distance/levenshtein.rs:1069-1089): a pure performance hint
-    there; accepted and ignored here (our kernels pick band widths from
-    the cutoff directly).
+    there; accepted and ignored here, results never depend on it.
     """
 
     def distance(s1: str, s2: str, *, score_cutoff=None, score_hint=None, **extra):

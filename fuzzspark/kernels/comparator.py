@@ -16,7 +16,6 @@ from typing import Optional, Sequence
 import numpy as np
 
 from .batch import FORMS, batch_scores
-from ._bitpar import pattern_masks
 from .metrics import ALL_METRICS
 
 __all__ = ["BatchComparator", "RatioBatchComparator"]
@@ -25,9 +24,9 @@ __all__ = ["BatchComparator", "RatioBatchComparator"]
 class BatchComparator:
     """``BatchComparator('pattern', scorer='levenshtein')``.
 
-    Scalar calls (``.distance(s2)``) reuse cached pattern masks where
-    the metric supports it; list calls (``.distances(seq)``) go through
-    the vectorized batch engine.
+    Scalar calls (``.distance(s2)``) score one pair through the metric
+    module; list calls (``.distances(seq)``) go through the vectorized
+    batch engine, which builds the pattern masks once per batch.
     """
 
     def __init__(self, s1: str, scorer: str = "levenshtein", **extra):
@@ -36,11 +35,9 @@ class BatchComparator:
         self.s1 = s1
         self.scorer = scorer
         self.extra = extra
-        self._masks = (pattern_masks(s1)
-                       if scorer in ("levenshtein", "lcs_seq", "osa") else None)
 
     # -- scalar 4-form surface (mirrors the module functions; score_hint
-    # is reference API parity — accepted, pure perf hint) --------------
+    # is reference API parity — accepted and ignored) ------------------
     def _form(self, form: str, s2: str, score_cutoff=None):
         if self.scorer == "ratio":
             from . import fuzz

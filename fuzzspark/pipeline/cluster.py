@@ -165,7 +165,6 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
 def connected_components(edges: DataFrame, max_iter: int = 20,
                          driver_finish_edges: int | None = None,
                          stats: dict | None = None,
-                         checkpoint: str = "auto",
                          pre_contract: bool = True,
                          upper_bound_edges: int | None = None) -> DataFrame:
     """edges(left_id, right_id) -> (id, cluster_id) with cluster_id =
@@ -185,15 +184,15 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     scale tier; the stats round_edges series in the stage manifest
     still shows the per-round sizes for manual override.
 
-    ``checkpoint``: ``'reliable'`` truncates per-round lineage with
-    ``df.checkpoint()`` (files under the SparkContext checkpoint dir —
+    Per-round lineage is truncated with a RELIABLE ``df.checkpoint()``
+    iff the SparkContext has a checkpoint dir (run_pipeline sets one
+    under the stage workdir), else with ``localCheckpoint``; the mode
+    is ``stats["checkpoint_mode"]``.  Reliable checkpoints are files —
     fault-tolerant: a lost/evicted block is re-read from disk, which is
     what an iterative job needs both under single-JVM memory pressure
     and on a real cluster that loses executors; ``localCheckpoint``
     blocks are UNRECOVERABLE once lost because the lineage is already
-    truncated).  ``'local'`` keeps localCheckpoint;
-    ``'auto'`` (default) uses reliable iff a checkpoint dir is
-    configured — run_pipeline sets one under the stage workdir.
+    truncated.
 
     ``pre_contract`` (default True) runs TWO union-find contraction
     passes before the first star round (results identical — spanning
@@ -235,12 +234,11 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     if stats is None:
         stats = {}
     sc = edges.sparkSession.sparkContext
-    if checkpoint == "auto":
-        try:
-            has_dir = sc._jsc.sc().getCheckpointDir().isDefined()
-        except Exception:  # pragma: no cover — py4j API drift
-            has_dir = False
-        checkpoint = "reliable" if has_dir else "local"
+    try:
+        has_dir = sc._jsc.sc().getCheckpointDir().isDefined()
+    except Exception:  # pragma: no cover — py4j API drift
+        has_dir = False
+    checkpoint = "reliable" if has_dir else "local"
 
     keep_refs: list[DataFrame] = []  # pin rounds: a python-GC'd round
 

@@ -6,8 +6,10 @@ and the 04_scores manifest carries the backend (``query.match_plan``
 is checked in test_stream_index.py).
 """
 
+import inspect
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -82,3 +84,23 @@ def test_scores_manifest_records_backend_and_path(spark, tmp_path, gate,
         extra = json.load(f)["extra"]
     assert extra == {"kernel_backend": _native.backend()["backend"],
                      "score_path": path}
+
+
+def test_every_exported_kernel_is_declared_and_called():
+    """Each non-static function _native.c defines is called from
+    _native.py as ``lib.<name>(`` and has ``argtypes`` and ``restype``
+    declared in ``get_lib``: the library exports no dead entry point,
+    and none is called through ctypes' int-only default signature."""
+    with open(_native._SRC) as f:
+        c_src = f.read()
+    exported = re.findall(
+        r"^(?!static\b|typedef\b)[A-Za-z_][\w \t*]*?\b(\w+)\s*\(",
+        c_src, flags=re.MULTILINE)
+    assert exported, "no function definitions found in _native.c"
+    with open(_native.__file__) as f:
+        py_src = f.read()
+    loader = inspect.getsource(_native.get_lib)
+    for name in exported:
+        assert f"lib.{name}(" in py_src, f"{name} is never called"
+        assert f"lib.{name}.argtypes = " in loader, f"{name}: no argtypes"
+        assert f"lib.{name}.restype = " in loader, f"{name}: no restype"

@@ -226,13 +226,41 @@ def test_seq_inputs_out_of_range_raises():
                      np.array([[2]], dtype=object))
 
 
-def test_score_hint_accepted_everywhere():
+def test_score_hint_accepted_everywhere(kernel_backend):
+    """score_hint is accepted and ignored: every scorer and form, with
+    and without a cutoff, gives the unhinted output for a numeric and
+    a non-numeric hint."""
+    from fuzzspark.kernels.batch import FORMS, SCORERS
     from fuzzspark.kernels.metrics import levenshtein, jaro_winkler
     assert levenshtein.distance("abc", "abd", score_hint=1) == 1
     assert jaro_winkler.similarity("abc", "abc", score_hint=0.9) == 1.0
     out = batch_scores("ratio", "normalized_similarity",
                        np.array(["ab"]), np.array(["ab"]), score_hint=0.5)
     assert out[0] == 1.0
+
+    rng = random.Random(5)
+    long_a = ["".join(rng.choice("abcdef ") for _ in range(n))
+              for n in (120, 300, 400)]
+    # near pairs pass the cutoffs, the unrelated 400-char pair is
+    # abandoned by the bounded kernel
+    long_b = [s[:40] + "XY" + s[43:] for s in long_a[:2]] + [
+        "".join(rng.choice("abcdef ") for _ in range(400))]
+    s1 = ["kitten", "", "abc", "Иванко", "flaw lawn", None, "abcd",
+          "hello world"] + long_a
+    s2 = ["sitting", "x", "", "Петрунко", "lawn flaw", "q", "abdc",
+          "world hello"] + long_b
+    cutoffs = {"distance": 6, "similarity": 2, "normalized_distance": 0.3,
+               "normalized_similarity": 0.7}
+    for scorer in SCORERS:
+        for form in FORMS:
+            for cutoff in (None, cutoffs[form]):
+                base = batch_scores(scorer, form, s1, s2,
+                                    score_cutoff=cutoff)
+                for hint in (3, 0.5, "fast"):
+                    got = batch_scores(scorer, form, s1, s2,
+                                       score_cutoff=cutoff, score_hint=hint)
+                    assert np.array_equal(base, got, equal_nan=True), \
+                        (scorer, form, cutoff, hint)
 
 
 def test_hamming_default_is_nopad():

@@ -108,10 +108,11 @@ def test_damerau_batch_scalar_parity_long(spark):
 
 # --------------------------------------------------------------- item 6
 def test_score_hint_banded_parity():
-    """score_hint seeds the banded levenshtein kernel; results must be
-    bit-identical to the unhinted path for any hint — too small
-    (doubling retry), exact, absurdly large (profitability gate ->
-    full kernel), with and without a cutoff."""
+    """score_hint is accepted and ignored by levenshtein and osa:
+    results must be bit-identical to the unhinted path for any hint —
+    too small, exact, absurdly large — with and without a cutoff, and
+    a distance cutoff (the bounded kernel's early abandonment) must
+    suppress exactly the pairs above it."""
     import random
     import pandas as pd
     from fuzzspark.kernels.batch import batch_scores
@@ -144,16 +145,15 @@ def test_score_hint_banded_parity():
         got = batch_scores("levenshtein", "distance", sa, sb,
                            score_hint=hint)
         assert np.array_equal(base, got, equal_nan=True), hint
-    # a cutoff with no hint also rides the band now: one pass at
-    # band = cutoff either yields the exact value or proves suppression
+    # a distance cutoff bounds the kernel: a pair either gets its exact
+    # value or is abandoned and suppressed
     cut = batch_scores("levenshtein", "distance", sa, sb, score_cutoff=6)
     expect = np.where(base <= 6, base, np.nan)
     assert np.array_equal(cut, expect, equal_nan=True)
     cut_h = batch_scores("levenshtein", "distance", sa, sb,
                          score_cutoff=6, score_hint=3)
     assert np.array_equal(cut, cut_h, equal_nan=True)
-    # non-distance forms: the hint converts to a per-pair raw distance
-    # and must stay result-identical too
+    # non-distance forms stay result-identical too
     for form, hints in [("similarity", (1900, 0)),
                         ("normalized_distance", (0.002, 0.9)),
                         ("normalized_similarity", (0.998, 0.1))]:
@@ -161,8 +161,7 @@ def test_score_hint_banded_parity():
         for h in hints:
             got_f = batch_scores("levenshtein", form, sa, sb, score_hint=h)
             assert np.array_equal(base_f, got_f, equal_nan=True), (form, h)
-    # OSA rides the same banded path (transposition term from the
-    # row-before-previous at the same diagonal offset)
+    # OSA: same contract on the bounded OSA kernel
     osa_base = batch_scores("osa", "distance", sa, sb)
     for hint in (0, 2, 64, 10**6):
         got_o = batch_scores("osa", "distance", sa, sb, score_hint=hint)

@@ -223,14 +223,14 @@ def test_token_set_distinct_and_dedup_paths_parity():
                             [a], [b])[0] == _fuzz.token_set_ratio(a, b)
 
 
-# -------------------- hint-banded indel family (r6, VERDICT #8)
+# -------------------- score_hint on the indel family (r6, VERDICT #8)
 
 
 def test_indel_family_hint_is_result_invariant():
-    """score_hint on indel / ratio / token_sort_ratio seeds the banded
-    kernel (round 6) — results must be bit-identical for ANY hint, any
-    form, with and without a cutoff (reference hint contract,
-    src/common.rs:3-6 + indel band algebra src/distance/indel.rs:84-104)."""
+    """score_hint on indel / ratio / token_sort_ratio is accepted and
+    ignored — results must be bit-identical for ANY hint, any form,
+    with and without a cutoff (reference hint contract,
+    src/common.rs:3-6)."""
     import numpy as np
 
     from fuzzspark.kernels.batch import batch_scores
@@ -271,39 +271,6 @@ def test_indel_family_hint_is_result_invariant():
             gotc = batch_scores(scorer, "normalized_similarity", s1, s2,
                                 score_cutoff=0.9, score_hint=h)
             assert np.array_equal(basec, gotc, equal_nan=True), (scorer, h)
-
-
-def test_indel_banded_kernel_contract():
-    """Direct native contract: exact values, -1 only above the bound,
-    -2 only as the band-unprofitable marker."""
-    import numpy as np
-
-    from fuzzspark.kernels import _native
-
-    if _native.get_lib() is None:
-        import pytest
-        pytest.skip("no compiler for the native kernels")
-    rng = np.random.default_rng(31)
-    pairs = [("".join(rng.choice(list("abcd"), int(rng.integers(10, 600)))),
-              "".join(rng.choice(list("abcd"), int(rng.integers(10, 600)))))
-             for _ in range(120)]
-    pat = [a if len(a) <= len(b) else b for a, b in pairs]
-    txt = [b if len(a) <= len(b) else a for a, b in pairs]
-    lcs = _native.native_batch(_native.KIND_LCS, pat, txt)
-    total = np.array([len(a) + len(b) for a, b in pairs])
-    truth = total - 2 * lcs
-    for hint in (1, 16, 400):
-        for bnd in (None, 12, 150):
-            bounds = (None if bnd is None
-                      else np.full(len(pairs), bnd, dtype=np.int64))
-            got = _native.native_banded("indel", pat, txt, hint, bounds)
-            for g, t in zip(got, truth):
-                if g == -2:
-                    continue
-                if g == -1:
-                    assert bnd is not None and t > bnd
-                else:
-                    assert g == t
 
 
 # --------------------------- C minhash kernel parity (r6)
