@@ -196,25 +196,6 @@ def backend() -> dict:
             "compile_s": _COMPILE_S}
 
 
-def _flatten(strs: list[str], lens: np.ndarray | None = None):
-    if lens is None:
-        lens = np.fromiter((len(s) for s in strs), dtype=np.int64,
-                           count=len(strs))
-    off = np.zeros(len(strs) + 1, dtype=np.int64)
-    np.cumsum(lens, out=off[1:])
-    joined = "".join(strs)
-    if not joined:
-        return np.zeros(0, dtype=np.uint32), off
-    try:
-        # ASCII fast path: 1-byte encode + numpy widening beats the
-        # 4-byte utf-32 encode for the overwhelmingly common case
-        codes = np.frombuffer(joined.encode("ascii"),
-                              dtype=np.uint8).astype(np.uint32)
-    except UnicodeEncodeError:
-        codes = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
-    return np.ascontiguousarray(codes), off
-
-
 def _flatten_raw(strs: list[str], lens: np.ndarray | None = None):
     """(codes, offsets, elem_size): ASCII batches stay as the raw 1-byte
     encode (no widening copy, 4x less kernel input traffic); anything
@@ -233,6 +214,14 @@ def _flatten_raw(strs: list[str], lens: np.ndarray | None = None):
     except UnicodeEncodeError:
         return (np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32),
                 off, 4)
+
+
+def _flatten(strs: list[str], lens: np.ndarray | None = None):
+    """(codes, offsets) as uint32 code points: :func:`_flatten_raw`,
+    with an ASCII batch widened (an ASCII byte equals its code
+    point)."""
+    codes, off, es = _flatten_raw(strs, lens)
+    return (codes.astype(np.uint32) if es == 1 else codes), off
 
 
 def _flatten_pair(pat_strs: list[str], txt_strs: list[str],

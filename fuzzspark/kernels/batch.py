@@ -255,9 +255,15 @@ def _partial_ratio_batch(pairs: list[tuple[str, str]]) -> np.ndarray:
         if got is not None:
             m = np.fromiter((len(s) for s in shorter), np.int64, count=n)
             nl = np.fromiter((len(s) for s in longer), np.int64, count=n)
+            # an equal-length pair is one window, scored as ``ratio``
+            # scores it (1 - dist/total), so both backends agree bit
+            # for bit
+            total = np.maximum(m + nl, 1)
             with np.errstate(invalid="ignore", divide="ignore"):
                 return np.where(m == 0, np.where(nl == 0, 1.0, 0.0),
-                                got / np.maximum(m, 1))
+                                np.where(m == nl,
+                                         1.0 - (total - 2 * got) / total,
+                                         got / np.maximum(m, 1)))
     return np.fromiter((_fuzz.partial_ratio_raw(a, b) for a, b in pairs),
                        np.float64, count=n)
 

@@ -162,7 +162,6 @@ class StageRunner:
 
     def run(self, stage: str, build: Callable[[], DataFrame], *,
             score_col: str | None = None,
-            repartition: int | None = None,
             extra_manifest: dict | None = None,
             observe: dict | None = None) -> DataFrame:
         """Build + persist a stage, or reload it if already complete.
@@ -183,8 +182,6 @@ class StageRunner:
             return self._read(out_dir, StructType.fromJson(reused["schema"]))
         t0 = time.time()
         df = build()
-        if repartition:
-            df = df.repartition(repartition)
         schema = StructType.fromJson(_as_read_back(df.schema.jsonValue()))
         # lineage metrics RIDE THE WRITE JOB (CollectMetrics node): row
         # count + score histogram cost nothing extra, instead of paying

@@ -59,15 +59,6 @@ class LinkageConfig:
     use_exact: bool = True
     use_path: bool = True
     use_minhash: bool = True
-    cc_max_iter: int = 20
-    # finish CC driver-side once the contracted edge set is this small
-    # (0 = fully-distributed fixpoint; None = auto-size from
-    # spark.driver.memory — 1/16 of the heap as raw 16 B edges with a
-    # 4M floor, see cluster._auto_driver_finish.  Round 6: the manifest
-    # round_edges series showed a fixed default re-tuned at every scale
-    # tier, so the default now derives from the resource that actually
-    # bounds it)
-    cc_driver_finish: int | None = None
     # stage-storage DataSource format (parquet/orc/...; "iceberg" with
     # the runtime jar + catalog configured)
     table_format: str = "parquet"
@@ -278,16 +269,14 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         spark.sparkContext.setCheckpointDir(cc_dir)
         edges = scores.where(F.col("score") >= cfg.threshold) \
                       .select("left_id", "right_id")
-        # round 7: the 04_scores manifest row count (free — already on
-        # disk) upper-bounds the edge count; when it fits the driver-
-        # finish threshold, CC skips its contraction passes, reliable
+        # the 04_scores manifest row count (free — already on disk)
+        # upper-bounds the edge count; when it fits the driver-finish
+        # threshold, CC skips its contraction passes, reliable
         # checkpoint and fingerprint jobs outright (identical labels)
         m = runner.manifest("04_scores") or {}
         ub_edges = int(m["row_count"]) if m.get("complete") else None
-        labels = connected_components(
-            edges, max_iter=cfg.cc_max_iter,
-            driver_finish_edges=cfg.cc_driver_finish, stats=cc_stats,
-            upper_bound_edges=ub_edges)
+        labels = connected_components(edges, stats=cc_stats,
+                                      upper_bound_edges=ub_edges)
         # isolated nodes -> singleton clusters
         return (files_ck.select("id").join(labels, "id", "left_outer")
                 .select("id", F.coalesce("cluster_id", "id").alias("cluster_id")))
@@ -301,8 +290,8 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
     except Exception:  # pragma: no cover — py4j API drift
         prev_ck = None
 
-    # cc_stats lands in the 05_clusters manifest: per-round contracted
-    # edge counts size the cc_driver_finish knob at any scale
+    # cc_stats lands in the 05_clusters manifest: which steps CC took
+    # and the per-round contracted edge counts
     clusters = runner.run("05_clusters", _cluster, extra_manifest=cc_stats)
 
     # 05_clusters is persisted, so the CC round checkpoints are dead

@@ -60,10 +60,9 @@ def get_spark(app_name: str = "fuzzspark", cpus: int | None = None,
         # A/B at the 400x tier measured 1.7x less shuffle write and
         # 2.2x less spill at IDENTICAL wall (32.7 vs 32.8 s), and
         # scratch disk is the binding resource at the top smoke tiers
-        # (the r6 3200x attempt died on it).  Env-overridable, never
-        # hard-coded (OPTIMIZATION_r07.md records the A/B)
-        .config("spark.io.compression.codec",
-                os.environ.get("FUZZSPARK_IO_CODEC", "zstd"))
+        # (the r6 3200x attempt died on it; OPTIMIZATION_r07.md records
+        # the A/B).  ``extra_conf`` overrides it, like any conf here
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("FUZZSPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -105,3 +105,40 @@ def kernel_backend(request):
     if request.param == "python":
         request.getfixturevalue("python_kernels")
     return request.param
+
+
+@pytest.fixture
+def driver_finish_at(monkeypatch):
+    """``with driver_finish_at(n):`` forces connected_components'
+    driver-finish threshold to ``n`` edges inside the block.  ``0``
+    keeps any non-empty graph on the distributed star rounds up to the
+    fixpoint."""
+    from fuzzspark.pipeline import cluster
+
+    @contextlib.contextmanager
+    def force(edges: int):
+        with monkeypatch.context() as m:
+            m.setattr(cluster, "_auto_driver_finish", lambda spark: edges)
+            yield
+
+    return force
+
+
+def union_find_labels(edges) -> dict:
+    """Plain-Python oracle for connected_components: {node: min node
+    of its component} over (u, v) pairs.  Self-loops are skipped, so a
+    node whose only edges are self-loops is left out, as there."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        if u == v:
+            continue
+        ru, rv = find(parent.setdefault(u, u)), find(parent.setdefault(v, v))
+        parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}

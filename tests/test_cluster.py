@@ -1,60 +1,92 @@
 """Direct unit tests for large-star/small-star connected components
 (non-vacuous: known graphs with known components).  Every graph runs
-through BOTH paths: the driver-side union-find small-tail finish
-(default) and the fully-distributed star fixpoint (driver_finish=0)."""
+through BOTH paths, chosen by forcing the driver-finish threshold: the
+driver-side union-find small-tail finish and the fully-distributed
+star fixpoint (threshold 0)."""
 
 import pytest
+
+from tests.conftest import union_find_labels
 
 BOTH_PATHS = pytest.mark.parametrize("driver_finish", [1_000_000, 0],
                                      ids=["driver-finish", "distributed"])
 
 
-def _cc(spark, edges, driver_finish):
+def _cc(spark, driver_finish_at, edges, driver_finish):
     from fuzzspark.pipeline import connected_components
     df = spark.createDataFrame(edges, "left_id: long, right_id: long")
-    got = connected_components(df, driver_finish_edges=driver_finish)
-    return {r["id"]: r["cluster_id"] for r in got.collect()}
+    with driver_finish_at(driver_finish):
+        got = connected_components(df).collect()
+    labels = {r["id"]: r["cluster_id"] for r in got}
+    assert labels == union_find_labels(edges)
+    return labels
 
 
 @BOTH_PATHS
-def test_chain(spark, driver_finish):
+def test_chain(spark, driver_finish_at, driver_finish):
     # 1-2-3-4 chain + isolated pair
-    labels = _cc(spark, [(1, 2), (2, 3), (3, 4), (10, 11)], driver_finish)
+    labels = _cc(spark, driver_finish_at,
+                 [(1, 2), (2, 3), (3, 4), (10, 11)], driver_finish)
     assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
 @BOTH_PATHS
-def test_star_and_triangle(spark, driver_finish):
-    labels = _cc(spark, [(5, 1), (5, 2), (5, 3), (7, 8), (8, 9), (7, 9)],
+def test_star_and_triangle(spark, driver_finish_at, driver_finish):
+    labels = _cc(spark, driver_finish_at,
+                 [(5, 1), (5, 2), (5, 3), (7, 8), (8, 9), (7, 9)],
                  driver_finish)
     assert labels == {1: 1, 2: 1, 3: 1, 5: 1, 7: 7, 8: 7, 9: 7}
 
 
 @BOTH_PATHS
-def test_long_path_exceeds_one_round(spark, driver_finish):
+def test_long_path_exceeds_one_round(spark, driver_finish_at, driver_finish):
     # path of 33 nodes: star-contraction needs several rounds
     edges = [(i, i + 1) for i in range(32)]
-    labels = _cc(spark, edges, driver_finish)
+    labels = _cc(spark, driver_finish_at, edges, driver_finish)
     assert set(labels.values()) == {0}
     assert len(labels) == 33
 
 
 @BOTH_PATHS
-def test_duplicate_and_reversed_edges(spark, driver_finish):
-    labels = _cc(spark, [(2, 1), (1, 2), (2, 3), (3, 2), (2, 3)],
-                 driver_finish)
+def test_duplicate_and_reversed_edges(spark, driver_finish_at, driver_finish):
+    labels = _cc(spark, driver_finish_at,
+                 [(2, 1), (1, 2), (2, 3), (3, 2), (2, 3)], driver_finish)
     assert labels == {1: 1, 2: 1, 3: 1}
 
 
-def test_driver_finish_kicks_in_mid_contraction(spark):
+def test_driver_finish_kicks_in_mid_contraction(spark, driver_finish_at):
     """threshold between the initial and contracted edge counts: the
     star rounds run first, then the union-find finishes the tail —
     labels must still be the component minimum."""
-    from fuzzspark.pipeline import connected_components
     edges = [(i, i + 1) for i in range(40)] + [(100, 101), (101, 102)]
-    df = spark.createDataFrame(edges, "left_id: long, right_id: long")
     # symmetrized+distinct initial count = 84 edges > 30 threshold
-    got = connected_components(df, driver_finish_edges=30)
-    labels = {r["id"]: r["cluster_id"] for r in got.collect()}
+    labels = _cc(spark, driver_finish_at, edges, 30)
     assert set(labels.values()) == {0, 100}
     assert len(labels) == 44
+
+
+def test_unconverged_star_rounds_raise(spark, driver_finish_at, monkeypatch):
+    """When the star-round guard is reached before the fixpoint, CC
+    raises instead of labelling an unconverged graph.  AQE coalescing
+    is off so the co-partitioned contraction keeps its 8 partitions and
+    leaves a graph that needs several star rounds."""
+    from fuzzspark.pipeline import cluster
+
+    edges = [(i, i + 1) for i in range(64)]
+    df = spark.createDataFrame(edges, "left_id: long, right_id: long") \
+        .repartition(8)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with driver_finish_at(0):
+            stats: dict = {}
+            got = cluster.connected_components(df, stats=stats).collect()
+            assert {r.id: r.cluster_id for r in got} \
+                == union_find_labels(edges)
+            assert len(stats["round_edges"]) > 2, stats
+            monkeypatch.setattr(cluster, "_MAX_STAR_ROUNDS", 1)
+            with pytest.raises(RuntimeError, match="round_edges"):
+                cluster.connected_components(df)
+    finally:
+        spark.conf.set(key, prev)

@@ -104,3 +104,22 @@ def test_every_exported_kernel_is_declared_and_called():
         assert f"lib.{name}(" in py_src, f"{name} is never called"
         assert f"lib.{name}.argtypes = " in loader, f"{name}: no argtypes"
         assert f"lib.{name}.restype = " in loader, f"{name}: no restype"
+
+
+def test_partial_ratio_equals_ratio_on_equal_lengths(kernel_backend):
+    """An equal-length pair is a single window, so its ``partial_ratio``
+    is its ``ratio`` bit for bit, on either backend."""
+    import random
+
+    from fuzzspark.kernels.batch import batch_scores
+
+    rng = random.Random(3)
+    s1, s2 = ["hello world", "kitten", "ünïcode", ""], \
+        ["world hello", "sittin", "unicöde", ""]
+    for n in (1, 7, 63, 64, 65, 130):
+        for _ in range(8):
+            s1.append("".join(rng.choice("abcde ") for _ in range(n)))
+            s2.append("".join(rng.choice("abcde ") for _ in range(n)))
+    got = batch_scores("partial_ratio", "similarity", s1, s2)
+    want = batch_scores("ratio", "similarity", s1, s2)
+    assert got.tolist() == want.tolist()

@@ -88,7 +88,7 @@ def test_fuzzy_topk_blocked_plan_no_nested_loop(spark, near_dup_frames):
             or "CartesianProduct" in exact_plan)
 
 
-def test_cc_stats_surfaced(spark, tmp_path):
+def test_cc_stats_surfaced(spark, tmp_path, driver_finish_at):
     """connected_components fills the stats dict (round-by-round
     contracted edge counts + driver-finish point) and run_pipeline
     lands it in the 05_clusters manifest."""
@@ -105,7 +105,8 @@ def test_cc_stats_surfaced(spark, tmp_path):
     assert len(labels) == 7
 
     stats2: dict = {}
-    connected_components(edges, driver_finish_edges=0, stats=stats2).count()
+    with driver_finish_at(0):
+        connected_components(edges, stats=stats2).count()
     assert stats2["driver_finish_at_edges"] is None
     assert len(stats2["round_edges"]) >= 2       # ran distributed rounds
 
@@ -116,18 +117,17 @@ def test_cc_stats_surfaced(spark, tmp_path):
     out = run_pipeline(spark, files, str(tmp_path / "wd"),
                        LinkageConfig(threshold=0.85))
     m = json.load(open(out["runner"].manifest_path("05_clusters")))
-    # round 7: when the free 04_scores-manifest bound already fits the
+    # when the free 04_scores-manifest bound already fits the
     # driver-finish threshold, CC legitimately skips every contraction
     # round (round_edges empty) and records the short-circuit instead
     assert m["extra"]["round_edges"] or (
         m["extra"].get("upper_bound_short_circuit") is True
         and m["extra"]["driver_finish_at_edges"] > 0), m
-    # round 6: the default derives from spark.driver.memory (4M floor)
-    # instead of a fixed constant — assert against the same derivation
+    # the threshold derives from spark.driver.memory (4M floor) —
+    # assert against the same derivation
     from fuzzspark.pipeline.cluster import _auto_driver_finish
     assert m["extra"]["driver_finish_threshold"] == _auto_driver_finish(spark)
     assert m["extra"]["driver_finish_threshold"] >= 4_000_000
-    assert m["extra"].get("driver_finish_auto") is True
 
 
 def test_native_uint8_path_parity():

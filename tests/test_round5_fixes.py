@@ -13,11 +13,13 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from tests.conftest import union_find_labels
+
 # ---------------------------------------------------------------- CC
 
 
 def _labels(df):
-    return sorted((r["id"], r["cluster_id"]) for r in df.collect())
+    return {r["id"]: r["cluster_id"] for r in df.collect()}
 
 
 def test_union_find_roots_matches_bfs():
@@ -61,15 +63,12 @@ def test_pre_contract_preserves_components(spark):
                              rng.integers(0, 400, 900)) if a != b]
     df = spark.createDataFrame(edges, "left_id: long, right_id: long") \
               .repartition(6)
-    contracted = _pre_contract(df)
+    contracted = _pre_contract(df).collect()
     # sparsification: never more output edges than input, same components
-    assert contracted.count() <= df.count()
-    base = connected_components(df, pre_contract=False)
-    via = connected_components(
-        contracted.withColumnRenamed("u", "left_id")
-                  .withColumnRenamed("v", "right_id"),
-        pre_contract=False)
-    assert _labels(base) == _labels(via)
+    assert len(contracted) <= df.count()
+    want = union_find_labels(edges)
+    assert union_find_labels(map(tuple, contracted)) == want
+    assert _labels(connected_components(df)) == want
 
 
 # ----------------------------------------------------------- pipeline
@@ -279,7 +278,8 @@ def test_cc_pre_contract_empty_and_single(spark):
 
 
 @pytest.mark.parametrize("driver_finish", [0, 1_000_000])
-def test_cc_pre_contract_identical_labels(spark, driver_finish):
+def test_cc_pre_contract_identical_labels(spark, driver_finish_at,
+                                          driver_finish):
     from fuzzspark.pipeline.cluster import connected_components
 
     rng = np.random.default_rng(5)
@@ -288,12 +288,11 @@ def test_cc_pre_contract_identical_labels(spark, driver_finish):
                              rng.integers(0, 1500, 2500)) if a != b]
     df = spark.createDataFrame(edges, "left_id: long, right_id: long") \
               .repartition(8)
-    s_on, s_off = {}, {}
-    on = connected_components(df, driver_finish_edges=driver_finish,
-                              stats=s_on, pre_contract=True)
-    off = connected_components(df, driver_finish_edges=driver_finish,
-                               stats=s_off, pre_contract=False)
-    assert _labels(on) == _labels(off)
-    assert s_on["pre_contract"] and not s_off["pre_contract"]
-    # contraction never inflates the first-shuffle edge count
-    assert s_on["round_edges"][0] <= s_off["round_edges"][0]
+    stats: dict = {}
+    with driver_finish_at(driver_finish):
+        got = _labels(connected_components(df, stats=stats))
+    assert got == union_find_labels(edges)
+    # contraction never inflates the edge count entering the first star
+    # round beyond the symmetrized distinct input
+    sym = {(a, b) for a, b in edges} | {(b, a) for a, b in edges}
+    assert stats["round_edges"][0] <= len(sym)

@@ -5,8 +5,8 @@
    emit lit(True) — score_pairs must not drop perfect matches.
 2. score_pairs splits exact-duplicate rows off BEFORE the scorer UDF
    (plan-level union, not a when() over the UDF column) (ADVICE r5).
-3. connected_components drops self-loops consistently in both the
-   pre-contracted and plain paths (ADVICE r5).
+3. connected_components drops self-loops consistently on the
+   driver-finish and distributed paths (ADVICE r5).
 4. run_pipeline leaves the CC checkpoint dir in place when the caller
    had no checkpoint dir configured (ADVICE r5).
 """
@@ -16,6 +16,8 @@ from __future__ import annotations
 import pytest
 
 from pyspark.sql import functions as F
+
+from tests.conftest import union_find_labels
 
 
 # ------------------------------------------------- length_prefilter
@@ -83,29 +85,33 @@ def _labels(df):
     return sorted((r["id"], r["cluster_id"]) for r in df.collect())
 
 
-@pytest.mark.parametrize("pre", [True, False])
-def test_cc_self_loop_only_node_consistent(spark, pre):
+@pytest.mark.parametrize("distributed", [True, False])
+def test_cc_self_loop_only_node_consistent(spark, driver_finish_at,
+                                           distributed):
     from fuzzspark.pipeline.cluster import connected_components
 
     edges = spark.createDataFrame([(1, 1), (2, 3), (9, 9)],
                                   "left_id: long, right_id: long")
-    out = connected_components(edges, pre_contract=pre)
-    # self-loop-only nodes (1, 9) count as isolated in BOTH paths
-    assert _labels(out) == [(2, 2), (3, 2)]
+    with driver_finish_at(0 if distributed else 1_000_000):
+        out = _labels(connected_components(edges))
+    # self-loop-only nodes (1, 9) count as isolated on BOTH paths
+    assert out == [(2, 2), (3, 2)]
 
 
-@pytest.mark.parametrize("pre", [True, False])
-def test_cc_all_self_loops_empty(spark, pre):
+@pytest.mark.parametrize("distributed", [True, False])
+def test_cc_all_self_loops_empty(spark, driver_finish_at, distributed):
     from fuzzspark.pipeline.cluster import connected_components
 
     edges = spark.createDataFrame([(4, 4)], "left_id: long, right_id: long")
-    assert connected_components(edges, pre_contract=pre).count() == 0
+    with driver_finish_at(0 if distributed else 1_000_000):
+        assert connected_components(edges).count() == 0
 
 
 # ------------------------- CC co-partitioned pre-contraction (r6)
 
 
-def test_cc_copartition_contracts_cross_partition_redundancy(spark):
+def test_cc_copartition_contracts_cross_partition_redundancy(
+        spark, driver_finish_at):
     """Dense clusters scattered across partitions (the real match-graph
     shape — every near-dup cluster is near-all-pairs): phase-1 local
     contraction still leaves ~one edge per (node, partition); the
@@ -136,18 +142,16 @@ def test_cc_copartition_contracts_cross_partition_redundancy(spark):
     assert c2 == 2 * 19 * 50, (c1, c2)
     assert c2 <= 0.7 * c1, (c1, c2)
 
-    # labels identical across: no pre-contract / full pre-contract,
-    # driver finish / distributed fixpoint
-    want = _labels(connected_components(df, pre_contract=False))
+    # labels equal the union-find oracle's on both the driver-finish
+    # and the distributed path
+    want = sorted(union_find_labels(edges).items())
     assert len({cid for _i, cid in want}) == 50
-    got = _labels(connected_components(df, pre_contract=True))
-    assert got == want
-    got_dist = _labels(connected_components(df, pre_contract=True,
-                                            driver_finish_edges=0))
-    assert got_dist == want
+    assert _labels(connected_components(df)) == want
+    with driver_finish_at(0):
+        assert _labels(connected_components(df)) == want
 
 
-def test_cc_restores_arrow_batch_conf(spark):
+def test_cc_restores_arrow_batch_conf(spark, driver_finish_at):
     """connected_components scopes a larger Arrow batch size to its own
     computation (16-byte edge rows vs the session's text-sized 2048)
     and must restore the caller's value on every exit path."""
@@ -159,11 +163,12 @@ def test_cc_restores_arrow_batch_conf(spark):
                                   "left_id: long, right_id: long")
     connected_components(edges).count()                      # driver finish
     assert spark.conf.get(key) == before
-    connected_components(edges, driver_finish_edges=0).count()  # distributed
+    with driver_finish_at(0):
+        connected_components(edges).count()                  # distributed
     assert spark.conf.get(key) == before
 
 
-def test_cc_driver_finish_auto_sizing(spark):
+def test_cc_auto_sized_driver_finish(spark):
     from fuzzspark.pipeline.cluster import (_DRIVER_FINISH_FLOOR,
                                             _auto_driver_finish,
                                             connected_components)
@@ -177,13 +182,6 @@ def test_cc_driver_finish_auto_sizing(spark):
     stats: dict = {}
     connected_components(edges, stats=stats).count()
     assert stats["driver_finish_threshold"] == want
-    assert stats["driver_finish_auto"] is True
-
-    # explicit values still respected, 0 = fully distributed
-    stats2: dict = {}
-    connected_components(edges, driver_finish_edges=123, stats=stats2).count()
-    assert stats2["driver_finish_threshold"] == 123
-    assert "driver_finish_auto" not in stats2
 
 
 # --------------------------- token_set all-distinct fast path (r6)

@@ -23,7 +23,7 @@ from pyspark.sql import Window, functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, union_find_labels
 
 
 def _q_ann_old(spark, sf_dir):
@@ -109,17 +109,18 @@ def test_topk_block_split_invariance():
         assert got == want
 
 
-def test_cc_upper_bound_short_circuit_identical_labels(spark):
+def test_cc_upper_bound_short_circuit_identical_labels(spark,
+                                                       driver_finish_at):
     from fuzzspark.pipeline.cluster import connected_components
     rng = np.random.default_rng(11)
     edges = [(int(a), int(b)) for a, b in rng.integers(0, 300, (500, 2))]
     edges.append((5, 5))  # self loop must stay dropped on both paths
     df = spark.createDataFrame(edges, "left_id: long, right_id: long")
     s_full, s_short = {}, {}
-    full = connected_components(df, stats=s_full,
-                                driver_finish_edges=0).collect()
-    short = connected_components(df, stats=s_short, upper_bound_edges=500 + 1,
-                                 driver_finish_edges=10 ** 9).collect()
+    with driver_finish_at(0):
+        full = connected_components(df, stats=s_full).collect()
+    short = connected_components(df, stats=s_short,
+                                 upper_bound_edges=500 + 1).collect()
     assert s_short.get("upper_bound_short_circuit") is True
     assert "upper_bound_short_circuit" not in s_full
     assert sorted((r.id, r.cluster_id) for r in short) \
@@ -200,14 +201,15 @@ def test_minhash_fallback_no_runtime_warning(monkeypatch):
     assert out[3] is None and len(out) == 5
 
 
-def test_cc_phase2_loop_identical_labels(spark):
+def test_cc_phase2_loop_identical_labels(spark, driver_finish_at):
     """Round 7 (second pass, VERDICT r6 item 7): the looped
     co-partitioned contraction must leave labels identical to the
-    un-contracted fixpoint on graphs that actually engage the loop —
+    union-find oracle's on graphs that actually engage the loop —
     a long cross-partition chain (worst case for contraction: each
     pass shortens pointer chains like pointer jumping) plus dense
-    clusters plus random junk.  driver_finish_edges=0 forces the
-    fully-distributed path so both the loop and the star rounds run."""
+    clusters plus random junk.  A driver-finish threshold of 0 forces
+    the fully-distributed path so both the loop and the star rounds
+    run."""
     from fuzzspark.pipeline.cluster import connected_components
     rng = np.random.default_rng(23)
     edges = [(i, i + 1) for i in range(0, 4000)]            # one chain
@@ -217,17 +219,14 @@ def test_cc_phase2_loop_identical_labels(spark):
               for a, b in rng.integers(0, 20_000, (1000, 2))]
     df = spark.createDataFrame(edges, "left_id: long, right_id: long") \
         .repartition(8)
-    s_loop, s_plain = {}, {}
-    loop = connected_components(df, stats=s_loop,
-                                driver_finish_edges=0).collect()
-    plain = connected_components(df, stats=s_plain, pre_contract=False,
-                                 driver_finish_edges=0).collect()
+    s_loop = {}
+    with driver_finish_at(0):
+        loop = connected_components(df, stats=s_loop).collect()
     assert s_loop.get("phase2_edges"), s_loop
-    assert sorted((r.id, r.cluster_id) for r in loop) \
-        == sorted((r.id, r.cluster_id) for r in plain)
+    assert {r.id: r.cluster_id for r in loop} == union_find_labels(edges)
 
 
-def test_cc_phase2_loop_with_driver_finish(spark):
+def test_cc_phase2_loop_with_driver_finish(spark, driver_finish_at):
     """Loop + driver-finish interplay on a pathological chain: labels
     must stay correct whether the loop's 2n <= threshold early-exit
     fires or the star rounds finish the job."""
@@ -236,8 +235,8 @@ def test_cc_phase2_loop_with_driver_finish(spark):
     df = spark.createDataFrame(edges, "left_id: long, right_id: long") \
         .repartition(8)
     s = {}
-    out = connected_components(df, stats=s,
-                               driver_finish_edges=100).collect()
+    with driver_finish_at(100):
+        out = connected_components(df, stats=s).collect()
     # a 3000-node chain has one component with min id 0
     assert {r.cluster_id for r in out} == {0}
     assert len(out) == 3001
