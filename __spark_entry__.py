@@ -1161,9 +1161,8 @@ def _linkage_oracle_sql() -> str:
     floating point; only the undecided band pays the exact blocked
     bit-parallel LCS, where the oracle evaluates the kernel's exact
     formula 1 - (L - 2*LCS)/L."""
-    from fuzzspark.pipeline import LinkageConfig
-    cfg = LinkageConfig(threshold=0.85)
-    t, max_block, window = cfg.threshold, cfg.max_block, cfg.window
+    from fuzzspark.pipeline.blocking import MAX_BLOCK, WINDOW
+    t, max_block, window = 0.85, MAX_BLOCK, WINDOW
     half = max(1, window // 2)
     nb_e, pm_e = _sql_lcs_prep("pat")
     lcs = _sql_lcs_blocked("pat", "txt")

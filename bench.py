@@ -73,9 +73,6 @@ def main() -> None:
 
     spark = get_spark("fuzzspark-bench", cpus=CPUS, shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    # single-box local mode: python-worker throughput saturates below
-    # the vCPU count (BENCH_SCALING.md controls); cap UDF-stage width
-    spark.conf.set("fuzzspark.python.parallelism", str(min(CPUS, 16)))
 
     timings: dict[str, float] = {}   # per-query MEDIAN over RUNS
     mins: dict[str, float] = {}      # per-query best run

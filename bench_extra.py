@@ -32,7 +32,6 @@ def main() -> None:
     spark = get_spark("fuzzspark-bench-extra", cpus=CPUS,
                       shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("fuzzspark.python.parallelism", str(min(CPUS, 16)))
 
     # same warm-up as bench.py
     spark.read.parquet(f"{SF_DIR}/documents.parquet").count()

@@ -730,7 +730,7 @@ int batch_union_find(const int64_t *us, const int64_t *vs, int64_t m,
 
 /* --------------------- MinHash band keys (round 6) ------------------ */
 /* Whole-batch MinHash-LSH band-key computation: the C twin of
- * pipeline/blocking.py::make_minhash_compute, BIT-EXACT with the numpy
+ * pipeline/blocking.py::make_minhash_matrix, BIT-EXACT with its numpy
  * reference (which remains the no-compiler fallback and the
  * DuckDB-oracle parity definition).  Per document: k-gram polynomial
  * shingle hashes over code points (uint64 wrap, x1000003), then for

@@ -321,8 +321,8 @@ def native_jaro(pat_strs: list[str], txt_strs: list[str]) -> np.ndarray | None:
 def native_minhash(strs: list[str], k: int, A: np.ndarray, B: np.ndarray,
                    n_bands: int, rows_per_band: int) -> np.ndarray | None:
     """MinHash-LSH band keys for a batch of (already truncated,
-    non-null) strings — bit-exact with blocking.make_minhash_compute's
-    numpy reference.  Returns (n_docs, n_bands) int64, or None when no
+    non-null) strings — bit-exact with the numpy loop of
+    ``blocking.make_minhash_matrix``.  Returns (n_docs, n_bands) int64, or None when no
     compiler is available."""
     lib = get_lib()
     if lib is None:

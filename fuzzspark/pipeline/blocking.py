@@ -21,11 +21,40 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from fuzzspark.kernels import _native
+
 __all__ = ["normalize_content", "block_key_columns", "block_keys",
            "defuse_skew", "minhash_key_rows"]
 
+# The blocking scheme (BASELINE.json north_star), defined once for the
+# batch pipeline and the stream.  MinHash-LSH: N_BANDS bands of
+# ROWS_PER_BAND rows over SHINGLE-char shingles of the first MAX_CHARS
+# chars, hash family drawn from SEED.  Blocks of more than MAX_BLOCK
+# members are windowed by WINDOW (batch, :func:`defuse_skew`) or
+# dropped (the stream's reference index).  run_pipeline's lineage hash
+# covers every value (:func:`scheme`)
+N_BANDS = 8
+ROWS_PER_BAND = 4
+SHINGLE = 5
+MAX_CHARS = 2000
+SEED = 1729
+MAX_BLOCK = 200
+WINDOW = 20
+
 # large 63-bit primes for the affine minhash family
 _MERSENNE = (1 << 61) - 1
+
+
+def minhash_params() -> dict:
+    """The MinHash constants as :func:`make_minhash_matrix` arguments,
+    read when called."""
+    return dict(n_bands=N_BANDS, rows_per_band=ROWS_PER_BAND,
+                shingle=SHINGLE, max_chars=MAX_CHARS, seed=SEED)
+
+
+def scheme() -> dict:
+    """Every blocking constant by name, read when called."""
+    return dict(minhash_params(), max_block=MAX_BLOCK, window=WINDOW)
 
 
 def _hash_family(n_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -35,17 +64,22 @@ def _hash_family(n_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def make_minhash_matrix(n_bands: int = 8, rows_per_band: int = 4,
-                        shingle: int = 5, max_chars: int = 2000,
-                        seed: int = 1729):
+def make_minhash_matrix(n_bands: int = N_BANDS,
+                        rows_per_band: int = ROWS_PER_BAND,
+                        shingle: int = SHINGLE, max_chars: int = MAX_CHARS,
+                        seed: int = SEED):
     """MinHash band keys in PRE-EXPLODE matrix form: texts (may contain
     None) -> (idx, keys) where ``idx`` lists the non-null positions and
-    ``keys`` is the (len(idx), n_bands) int64 key matrix.  This is the
-    computation :func:`make_minhash_compute` wraps — the matrix form
-    exists so :func:`minhash_key_rows` can emit already-exploded
-    (id, bk) Arrow rows without building a per-doc Python list of keys
-    (round 7: that list churn plus the JVM ``explode`` was most of the
-    key-generation stage's cost — guide §4.2)."""
+    ``keys`` is the (len(idx), n_bands) int64 key matrix.
+
+    MinHash over character shingles of the first ``max_chars`` chars
+    (content prefix shingles per BASELINE.json north_star).  Band key =
+    hash of the band's row signature, offset by band index so keys from
+    different bands never collide.  The matrix form lets
+    :func:`minhash_key_rows` emit already-exploded (id, bk) Arrow rows
+    without building a per-doc Python list of keys (round 7: that list
+    churn plus the JVM ``explode`` was most of the key-generation
+    stage's cost — guide §4.2)."""
     n_hashes = n_bands * rows_per_band
     A, B = _hash_family(n_hashes, seed)
     Au = A.astype(np.uint64)[:, None]
@@ -65,15 +99,10 @@ def make_minhash_matrix(n_bands: int = 8, rows_per_band: int = 4,
         # big win is the compile-time-constant Mersenne modulus
         # (strength-reduced to multiply-high; numpy pays a runtime-
         # divisor division per element) plus zero per-doc python.
-        try:
-            from fuzzspark.kernels._native import native_minhash
-        except Exception:  # pragma: no cover — partial install
-            native_minhash = None
-        if native_minhash is not None:
-            keys = native_minhash(texts, shingle, A, B,
-                                  n_bands, rows_per_band)
-            if keys is not None:
-                return idx, keys
+        keys = _native.native_minhash(texts, shingle, A, B,
+                                      n_bands, rows_per_band)
+        if keys is not None:
+            return idx, keys
         rows = np.empty((len(texts), n_bands), dtype=np.int64)
         for pos, t in enumerate(texts):
             if len(t) < shingle:
@@ -113,40 +142,17 @@ def make_minhash_matrix(n_bands: int = 8, rows_per_band: int = 4,
     return matrix
 
 
-def make_minhash_compute(n_bands: int = 8, rows_per_band: int = 4,
-                         shingle: int = 5, max_chars: int = 2000,
-                         seed: int = 1729):
-    """Plain-python MinHash band-key computation (no Spark dependency;
-    the parity reference for :func:`minhash_key_rows`).
-
-    MinHash over character shingles of the first ``max_chars`` chars
-    (content prefix shingles per BASELINE.json north_star).  Band key =
-    hash of the band's row signature, offset by band index so keys from
-    different bands never collide.  Per-doc list form of
-    :func:`make_minhash_matrix` (None for null texts)."""
-    matrix = make_minhash_matrix(n_bands, rows_per_band, shingle,
-                                 max_chars, seed)
-
-    def compute(content) -> list:
-        idx, keys = matrix(content)
-        out = [None] * len(content)
-        for pos, i in enumerate(idx):
-            out[i] = keys[pos].tolist()
-        return out
-
-    return compute
-
-
 def minhash_key_rows(df: DataFrame, *, id_col: str = "id",
                      text_col: str = "__mh_norm",
                      carry: tuple[str, ...] = (),
-                     n_bands: int = 8, rows_per_band: int = 4,
-                     shingle: int = 5, max_chars: int = 2000,
-                     seed: int = 1729) -> DataFrame:
+                     n_bands: int = N_BANDS,
+                     rows_per_band: int = ROWS_PER_BAND,
+                     shingle: int = SHINGLE, max_chars: int = MAX_CHARS,
+                     seed: int = SEED) -> DataFrame:
     """Pre-exploded MinHash key rows: ``df`` (with an already-normalized
     ``text_col``) -> (id_col, *carry, bk:long), one row per (doc, band).
 
-    The rows are :func:`make_minhash_compute`'s per-doc keys, exploded:
+    The rows are :func:`make_minhash_matrix`'s key matrix, exploded:
     same kernel, same keys, no row for a null text.  They leave the
     Python worker as one flat Arrow int64 column (``matrix.ravel()`` +
     ``np.repeat`` of the carried columns), with no per-doc Python list
@@ -178,10 +184,26 @@ def normalize_content(col):
     return F.lower(F.regexp_replace(col, r"\s+", " "))
 
 
-def block_key_columns(*, use_exact: bool = True, use_path: bool = True,
-                      use_minhash: bool = True) -> dict:
-    """The enabled key families as column expressions over (content,
-    path, lang) — the ONE definition that :func:`block_keys` and the
+def _path_key():
+    stem = F.regexp_extract(F.element_at(F.split(F.col("path"), "/"), -1),
+                            r"^([A-Za-z_]+)", 1)
+    return F.concat(F.lit("p:"), F.col("lang"), F.lit("/"), F.lower(stem))
+
+
+# key family -> builder of its column over (content, path, lang).  A
+# caller builds only the families it keys: each column is several py4j
+# round trips, paid on every call
+_FAMILY_COLUMNS = {
+    "exact": lambda: F.concat(F.lit("x:"),
+                              F.sha2(F.col("content").cast("binary"), 256)),
+    "path": _path_key,
+    "minhash": lambda: normalize_content(F.col("content")),
+}
+
+
+def block_key_columns() -> dict:
+    """The key families as column expressions over (content, path,
+    lang) — the ONE definition that :func:`block_keys` and the
     streaming reference index (``fuzzspark.streaming.index``) both
     evaluate, so batch and stream keys cannot drift:
 
@@ -192,44 +214,33 @@ def block_key_columns(*, use_exact: bool = True, use_path: bool = True,
       (:func:`make_minhash_matrix`); its block keys are
       ``'m:' || band_key``.
     """
-    cols = {}
-    if use_exact:
-        cols["exact"] = F.concat(
-            F.lit("x:"), F.sha2(F.col("content").cast("binary"), 256))
-    if use_path:
-        stem = F.regexp_extract(F.element_at(F.split(F.col("path"), "/"), -1),
-                                r"^([A-Za-z_]+)", 1)
-        cols["path"] = F.concat(F.lit("p:"), F.col("lang"), F.lit("/"),
-                                F.lower(stem))
-    if use_minhash:
-        cols["minhash"] = normalize_content(F.col("content"))
-    return cols
+    return {fam: build() for fam, build in _FAMILY_COLUMNS.items()}
 
 
 def block_keys(files: DataFrame, *, use_exact: bool = True,
-               use_path: bool = True, use_minhash: bool = True,
-               n_bands: int = 8, rows_per_band: int = 4,
-               shingle: int = 5, max_chars: int = 2000) -> DataFrame:
-    """(id, block_key:string) relation — union over key families.
+               use_path: bool = True, use_minhash: bool = True) -> DataFrame:
+    """(id, block_key:string) relation — union over the chosen key
+    families of :func:`block_key_columns` (the pipeline keys the exact
+    and path families and the MinHash family off different inputs; a
+    table without ``path``/``lang`` takes the exact and MinHash
+    families only).
 
     When ``files`` carries ``content_len``, the key rows carry it too
     (+8 B/row): :func:`defuse_skew` orders oversized blocks by it and
     :func:`~fuzzspark.pipeline.pairs.candidate_pairs` reads both pair
     lengths off its join sides.  Both require it."""
     carry = ["content_len"] if "content_len" in files.columns else []
-    cols = block_key_columns(use_exact=use_exact, use_path=use_path,
-                             use_minhash=use_minhash)
-    parts = [files.select("id", cols[fam].alias("block_key"), *carry)
-             for fam in ("exact", "path") if fam in cols]
-    if "minhash" in cols:
+    parts = [files.select("id", _FAMILY_COLUMNS[fam]().alias("block_key"),
+                          *carry)
+             for fam, on in (("exact", use_exact), ("path", use_path)) if on]
+    if use_minhash:
         # round 7: pre-exploded Arrow rows straight from the kernel's
         # key matrix (see minhash_key_rows) — same keys, no per-doc
         # Python list + JVM explode
         rows = minhash_key_rows(
-            files.select("id", *carry, cols["minhash"].alias("__mh_norm")),
-            carry=tuple(carry), n_bands=n_bands,
-            rows_per_band=rows_per_band, shingle=shingle,
-            max_chars=max_chars)
+            files.select("id", *carry,
+                         _FAMILY_COLUMNS["minhash"]().alias("__mh_norm")),
+            carry=tuple(carry), **minhash_params())
         parts.append(
             rows.select("id", F.concat(F.lit("m:"),
                                        F.col("bk").cast("string"))
@@ -240,17 +251,16 @@ def block_keys(files: DataFrame, *, use_exact: bool = True,
     return out
 
 
-def defuse_skew(blocks: DataFrame, *, max_block: int = 200,
-                window: int = 20) -> DataFrame:
+def defuse_skew(blocks: DataFrame) -> DataFrame:
     """Bound pair blow-up of oversized blocks.
 
     ``blocks``: (id, block_key, content_len) key rows, as
     :func:`block_keys` emits them from a ``files`` with ``content_len``.
-    Blocks with <= max_block members pass through.  Larger blocks are
+    Blocks with <= MAX_BLOCK members pass through.  Larger blocks are
     sorted by content length (near-dups have near-equal lengths — the
     length-difference prune would reject far-apart pairs anyway) and
-    re-keyed into overlapping windows of ``window`` members with 50%
-    overlap: pairs per member bounded by ~2*window instead of n.  A
+    re-keyed into overlapping windows of WINDOW members with 50%
+    overlap: pairs per member bounded by ~2*WINDOW instead of n.  A
     NULL length (NULL content) sorts first and ties break by id, so
     ranks stay deterministic and no key row loses its block.
     """
@@ -266,18 +276,18 @@ def defuse_skew(blocks: DataFrame, *, max_block: int = 200,
     # census.
     wc = Window.partitionBy("block_key")
     wr = wc.orderBy("content_len", "id")
-    half = max(1, window // 2)
+    half = max(1, WINDOW // 2)
     c = (blocks
          .withColumn("_rank", F.row_number().over(wr) - 1)
          .withColumn("_bsize", F.count("*").over(wc)))
     keys = F.when(
-        F.col("_bsize") <= max_block,
+        F.col("_bsize") <= MAX_BLOCK,
         F.array(F.col("block_key"))
     ).otherwise(F.array(
         F.concat(F.col("block_key"), F.lit("#w"),
-                 (F.col("_rank") / window).cast("long").cast("string")),
+                 (F.col("_rank") / WINDOW).cast("long").cast("string")),
         F.concat(F.col("block_key"), F.lit("#v"),
-                 ((F.col("_rank") + half) / window).cast("long")
+                 ((F.col("_rank") + half) / WINDOW).cast("long")
                  .cast("string"))))
     return c.select("id", F.explode(keys).alias("block_key"),
                     "content_len")

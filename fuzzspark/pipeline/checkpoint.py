@@ -25,6 +25,7 @@ stage from the first, never only some of them.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -232,22 +233,19 @@ class StageRunner:
           Spark jobs and zero data scanned — the scalable answer at
           100 TB); kind ``output_files``.  The glob is flat — a future
           partitionBy subdirectory layout would need a recursive glob.
-        * other formats: one-pass census keyed by the READ-BACK
+        * other formats, or a parquet stage with no local file (a
+          remote filesystem): one-pass census keyed by the READ-BACK
           ``spark_partition_id()`` (splits/merges per
           maxPartitionBytes, so keys are not comparable to the file
           view); kind ``read_partitions``.
         """
-        if self.table_format == "parquet":
-            try:
-                import duckdb
-                rows = duckdb.sql(
-                    "SELECT file_name, num_rows FROM parquet_file_metadata("
-                    f"'{out_dir}/*.parquet')").fetchall()
-                if rows:
-                    return ({i: int(nr) for i, (_fn, nr)
-                             in enumerate(sorted(rows))}, "output_files")
-            except Exception:  # pragma: no cover — fall back to the scan
-                pass
+        files = (sorted(glob.glob(os.path.join(glob.escape(out_dir),
+                                               "*.parquet")))
+                 if self.table_format == "parquet" else [])
+        if files:
+            import pyarrow.parquet as pq
+            return ({i: pq.read_metadata(f).num_rows
+                     for i, f in enumerate(files)}, "output_files")
         part_counts = (persisted.groupBy(F.spark_partition_id().alias("pid"))
                        .count().collect())
         return ({int(r["pid"]): int(r["count"]) for r in part_counts},

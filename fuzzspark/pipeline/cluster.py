@@ -194,11 +194,13 @@ def connected_components(edges: DataFrame, *, stats: dict | None = None,
     duplicates).
 
     The contraction loop repartitions the symmetrized edges on ``u``,
-    so the local union-find sees every edge incident to its nodes; it
-    stops when the symmetrized set fits the driver finish (2n ≤
-    threshold), when a pass stops contracting ≥2×, or after 4 passes
-    (a chain graph halves slowly — the star rounds finish it).  The
-    star rounds stop at the fixpoint of the edge set's fingerprint or
+    so the local union-find sees every edge incident to its nodes.  A
+    pass's output replaces its input unless it has more edges; the
+    loop stops on the first pass that has, when the symmetrized set
+    fits the driver finish (2n ≤ threshold), when a later pass stops
+    contracting ≥2×, or after 4 passes (a chain graph halves slowly —
+    the star rounds finish it).  The star rounds stop at the fixpoint
+    of the edge set's fingerprint or
     at the driver finish.  After ``_MAX_STAR_ROUNDS`` rounds without
     either, ``RuntimeError`` is raised: labels are never built from an
     unconverged graph.
@@ -215,9 +217,12 @@ def connected_components(edges: DataFrame, *, stats: dict | None = None,
 
     ``stats`` (optional dict) is filled with what the plan did (and
     run_pipeline lands it in the 05_clusters manifest):
-    ``driver_finish_threshold``; ``phase2_edges``, the edge count after
-    each co-partitioned pass; ``round_edges``, the symmetrized distinct
-    edge count entering the star rounds and then after each round;
+    ``driver_finish_threshold``; ``contract_edges_in``, the edge count
+    entering the co-partitioned passes; ``phase2_edges``, the edge count
+    after each pass kept; ``phase2_dropped_edges``, the output of a pass
+    dropped for growing the graph; ``round_edges``, the symmetrized
+    distinct edge count entering the star rounds and then after each
+    round;
     ``driver_finish_at_edges``, the edge count the driver finish took
     (None when the star rounds reached the fixpoint); and
     ``upper_bound_short_circuit`` when the short-circuit was taken."""
@@ -273,19 +278,27 @@ def connected_components(edges: DataFrame, *, stats: dict | None = None,
             stats["driver_finish_at_edges"] = upper_bound_edges
             stats["upper_bound_short_circuit"] = True
             return _driver_union_find(_as_uv(edges))
-        e0 = _pre_contract(edges)
+        e0 = _ck(_pre_contract(edges))
+        n_in = stats["contract_edges_in"] = e0.count()
         # each pass is one int64-pair shuffle + local union-find, far
         # cheaper per edge than a star round's groupBy+join over the
         # symmetrized set; checkpointed so the per-pass count is one
-        # cheap scan and lineage stays flat
-        n_prev = None
-        for _ in range(4):
-            e0 = _ck(_pre_contract(_symmetrize(e0).repartition("u")))
-            n = e0.count()
-            stats.setdefault("phase2_edges", []).append(n)
-            if 2 * n <= finish_at or (n_prev is not None and 2 * n > n_prev):
+        # cheap scan and lineage stays flat.  A pass whose partitions
+        # split a neighbourhood emits an edge per neighbour per
+        # partition, up to twice its input: such an output is dropped
+        # and the loop ends on the input.  An output of the input's size
+        # is kept: a chain becomes a star of as many edges
+        for k in range(4):
+            e1 = _ck(_pre_contract(_symmetrize(e0).repartition("u")))
+            n = e1.count()
+            if n > n_in:
+                stats["phase2_dropped_edges"] = n
                 break
-            n_prev = n
+            e0 = e1
+            stats.setdefault("phase2_edges", []).append(n)
+            if 2 * n <= finish_at or (k and 2 * n > n_in):
+                break
+            n_in = n
         e = _ck(_symmetrize(e0).distinct())
         prev_fp = _fingerprint(e)
         stats["round_edges"].append(prev_fp[0])

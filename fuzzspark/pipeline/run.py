@@ -13,11 +13,11 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from fuzzspark.functions import sha256_column
+from fuzzspark.pipeline import blocking
 from fuzzspark.pipeline.blocking import block_keys, defuse_skew
 from fuzzspark.kernels import _native
 from fuzzspark.kernels.content import ContentTable
@@ -48,17 +48,11 @@ def _dir_bytes(path: str) -> int | None:
 
 @dataclass
 class LinkageConfig:
+    """What a linkage run chooses: the scorer, its threshold and the
+    stage storage.  The blocking scheme is the constants of
+    :mod:`fuzzspark.pipeline.blocking`."""
     scorer: str = "ratio"
     threshold: float = 0.9
-    n_bands: int = 8
-    rows_per_band: int = 4
-    shingle: int = 5
-    max_chars: int = 2000
-    max_block: int = 200
-    window: int = 20
-    use_exact: bool = True
-    use_path: bool = True
-    use_minhash: bool = True
     # stage-storage DataSource format (parquet/orc/...; "iceberg" with
     # the runtime jar + catalog configured)
     table_format: str = "parquet"
@@ -119,25 +113,22 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
     ``files`` must have columns (id, repo, path, commit, lang, content).
     """
     cfg = config or LinkageConfig()
-    # stage reuse keys on the input as well as the config: linking a
-    # different corpus into the same workdir reruns every stage
+    # stage reuse keys on the input and the blocking constants as well
+    # as the config: linking a different corpus, or retuning the
+    # blocking scheme, reruns the stages built from them
     runner = StageRunner(spark, workdir,
-                         params=dict(cfg.as_dict(),
+                         params=dict(cfg.as_dict(), **blocking.scheme(),
                                      input=input_fingerprint(files)),
                          table_format=cfg.table_format)
 
     def widen(df: DataFrame, input_bytes: int | None = None) -> DataFrame:
         """Guarantee a UDF-heavy stage gets enough tasks even when its
-        input is a small persisted stage (single parquet split).  Width
-        is tunable via spark conf ``fuzzspark.python.parallelism``
-        (single-box local mode saturates memory bandwidth well below
-        the vCPU count — see BENCH_SCALING.md).  When the on-disk
-        ``input_bytes`` alone yield >= target scan splits (bytes /
-        maxPartitionBytes) the repartition is skipped: at 100 TB it
-        would re-shuffle the corpus for parallelism the splits give."""
-        default = spark.sparkContext.defaultParallelism
-        target = int(spark.conf.get("fuzzspark.python.parallelism",
-                                    str(default)))
+        input is a small persisted stage (single parquet split): one
+        per default-parallelism slot.  When the on-disk ``input_bytes``
+        alone yield >= that many scan splits (bytes / maxPartitionBytes)
+        the repartition is skipped: at 100 TB it would re-shuffle the
+        corpus for parallelism the splits give."""
+        target = spark.sparkContext.defaultParallelism
         if input_bytes is not None:
             mpb = _parse_bytes(spark.conf.get(
                 "spark.sql.files.maxPartitionBytes", "134217728"))
@@ -188,20 +179,11 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         # exchange of the whole content.  defuse_skew is a single
         # subtree (one census exchange), so the key rows have exactly
         # one consumer and need no persist.
-        mh = dict(n_bands=cfg.n_bands, rows_per_band=cfg.rows_per_band,
-                  shingle=cfg.shingle, max_chars=cfg.max_chars)
-        parts = []
-        if cfg.use_exact or cfg.use_path:
-            parts.append(block_keys(files_ck, use_exact=cfg.use_exact,
-                                    use_path=cfg.use_path, use_minhash=False,
-                                    **mh))
-        if cfg.use_minhash:
-            wide = widen(files_ck.select("id", "content_len", "content"),
-                         input_bytes=_dir_bytes(runner._dir("01_files")))
-            parts.append(block_keys(wide, use_exact=False, use_path=False,
-                                    use_minhash=True, **mh))
-        return defuse_skew(reduce(DataFrame.unionByName, parts),
-                           max_block=cfg.max_block, window=cfg.window)
+        wide = widen(files_ck.select("id", "content_len", "content"),
+                     input_bytes=_dir_bytes(runner._dir("01_files")))
+        return defuse_skew(
+            block_keys(files_ck, use_minhash=False).unionByName(
+                block_keys(wide, use_exact=False, use_path=False)))
 
     blocks = runner.run("02_blocks", _blocks)
 

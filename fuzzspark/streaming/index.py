@@ -40,27 +40,21 @@ def source_name(family: str) -> str:
 
 
 def doc_keys(batch, matrix) -> tuple:
-    """Block keys of every row of an Arrow batch (or table) carrying
-    ``source_name`` columns: ``((str_keys, str_rows), (band_keys,
-    band_rows))`` — string keys as a numpy bytes array, MinHash band keys
-    as int64, each with the row it came from.  NULL sources yield no
-    key, just as a NULL ``block_key`` joins nothing.  ``matrix`` is a
-    :func:`make_minhash_matrix` instance, or None when the family is
-    off."""
-    names = set(batch.schema.names)
+    """Block keys of every row of an Arrow batch (or table) carrying a
+    ``source_name`` column per key family: ``((str_keys, str_rows),
+    (band_keys, band_rows))`` — string keys as a numpy bytes array,
+    MinHash band keys as int64, each with the row it came from.  NULL
+    sources yield no key, just as a NULL ``block_key`` joins nothing.
+    ``matrix`` is a :func:`make_minhash_matrix` instance."""
     skeys, srows = [], []
     for fam in STRING_FAMILIES:
-        if source_name(fam) in names:
-            for i, v in enumerate(batch.column(source_name(fam)).to_pylist()):
-                if v is not None:
-                    skeys.append(v.encode())
-                    srows.append(i)
-    strs = (np.array(skeys, dtype=bytes), np.array(srows, dtype=np.int64))
-    bands = (np.empty(0, np.int64), np.empty(0, np.int64))
-    if matrix is not None and source_name("minhash") in names:
-        idx, keys = matrix(batch.column(source_name("minhash")).to_pylist())
-        bands = (keys.ravel(), np.repeat(idx, keys.shape[1]))
-    return strs, bands
+        for i, v in enumerate(batch.column(source_name(fam)).to_pylist()):
+            if v is not None:
+                skeys.append(v.encode())
+                srows.append(i)
+    idx, keys = matrix(batch.column(source_name("minhash")).to_pylist())
+    return ((np.array(skeys, dtype=bytes), np.array(srows, dtype=np.int64)),
+            (keys.ravel(), np.repeat(idx, keys.shape[1])))
 
 
 @dataclass
@@ -74,15 +68,14 @@ class KeyCSR:
 
     @classmethod
     def build(cls, keys: np.ndarray, refs: np.ndarray,
-              max_block: int | None) -> tuple["KeyCSR", int]:
+              max_block: int) -> tuple["KeyCSR", int]:
         """Group ``refs`` by ``keys``; keys carried by more than
-        ``max_block`` rows are dropped (None/0 keeps all).  Returns the
-        index and the number of keys dropped."""
+        ``max_block`` rows are dropped.  Returns the index and the
+        number of keys dropped."""
         order = np.argsort(keys, kind="stable")
         keys, refs = keys[order], refs[order]
         uniq, counts = np.unique(keys, return_counts=True)
-        keep = (counts <= max_block if max_block
-                else np.ones(len(uniq), dtype=bool))
+        keep = counts <= max_block
         offsets = np.zeros(int(keep.sum()) + 1, dtype=np.int64)
         np.cumsum(counts[keep], out=offsets[1:])
         return (cls(uniq[keep], offsets, refs[np.repeat(keep, counts)]),
@@ -118,7 +111,7 @@ class RefIndex:
     hot_keys_dropped: int
 
     @classmethod
-    def build(cls, table, matrix, max_block: int | None) -> "RefIndex":
+    def build(cls, table, matrix, max_block: int) -> "RefIndex":
         """``table``: Arrow table of (id, content, source columns)."""
         content, table = ContentTable.from_arrow(table)
         (sk, sr), (bk, br) = doc_keys(table, matrix)

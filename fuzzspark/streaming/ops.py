@@ -5,13 +5,13 @@ from __future__ import annotations
 import logging
 import os
 import time
-from typing import Optional
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from fuzzspark.functions import sha256_column
 from fuzzspark.kernels import _native
+from fuzzspark.pipeline import blocking
 from fuzzspark.pipeline.blocking import (block_key_columns, block_keys,
                                          make_minhash_matrix)
 from fuzzspark.pipeline.util import broadcast_fits, content_bytes, join_scores
@@ -49,29 +49,26 @@ def _key_sources(df: DataFrame, key_cols: dict) -> DataFrame:
                       for fam, c in key_cols.items()]))
 
 
-def _index_matcher(reference: DataFrame, scorer: str, threshold: float,
-                   blocking_kwargs: dict, max_block: int | None):
+def _index_matcher(reference: DataFrame, scorer: str, threshold: float):
     """Reference side built ONCE on the driver (one collect, MinHash
     keys by the same kernel, hot keys dropped) and broadcast as a
     :class:`RefIndex`; each micro-batch is then one Arrow map that
     probes it and scores the distinct candidates against its content
     table (the kernel's own length prune stands in for
     ``length_prefilter``).  Returns (run, release, stats)."""
-    families = {k: v for k, v in blocking_kwargs.items()
-                if k.startswith("use_")}
-    mh = {k: v for k, v in blocking_kwargs.items() if k not in families}
-    key_cols = block_key_columns(**families)
-    use_mh = "minhash" in key_cols
+    # read on the driver: the executors key the arrivals with the same
+    # MinHash constants as the reference
+    mh = blocking.minhash_params()
+    key_cols = block_key_columns()
     index = RefIndex.build(_key_sources(reference, key_cols).toArrow(),
-                           make_minhash_matrix(**mh) if use_mh else None,
-                           max_block)
+                           make_minhash_matrix(**mh), blocking.MAX_BLOCK)
     bcv = reference.sparkSession.sparkContext.broadcast(index)
 
     def match(batches):
         import pyarrow as pa
         idx = bcv.value
         t = idx.table
-        matrix = make_minhash_matrix(**mh) if use_mh else None
+        matrix = make_minhash_matrix(**mh)
         for batch in batches:
             rows, refs = idx.candidates(batch, matrix)
             ids = batch.column("id").to_numpy()
@@ -93,25 +90,21 @@ def _index_matcher(reference: DataFrame, scorer: str, threshold: float,
                                     index_bytes=index.nbytes)
 
 
-def _join_matcher(reference: DataFrame, scorer: str, threshold: float,
-                  blocking_kwargs: dict, max_block: int | None):
+def _join_matcher(reference: DataFrame, scorer: str, threshold: float):
     """The join plan, for references above the broadcast gate: the
     reference's block keys and content projection are persisted once
     and every micro-batch joins its own keys against them.  Returns
     (run, release, stats)."""
-    ref_blocks = block_keys(reference, **blocking_kwargs) \
-        .withColumnRenamed("id", "ref_id")
-    if max_block:
-        # skew defusal: a reference key shared by > max_block docs
-        # makes every arrival carrying it a candidate of the whole block
-        # (at the 50x smoke, 20M candidate rows per 312-doc batch).  Hot
-        # keys carry no signal; near-dups still meet through their
-        # minhash band keys (recall floor: tools/skew_recall.py)
-        hot = (ref_blocks.groupBy("block_key").count()
-               .where(F.col("count") > max_block).select("block_key"))
-        ref_blocks = ref_blocks.join(F.broadcast(hot), "block_key",
-                                     "left_anti")
-    ref_blocks = ref_blocks.persist()
+    ref_blocks = block_keys(reference).withColumnRenamed("id", "ref_id")
+    # skew defusal: a reference key shared by > MAX_BLOCK docs makes
+    # every arrival carrying it a candidate of the whole block (at the
+    # 50x smoke, 20M candidate rows per 312-doc batch).  Hot keys carry
+    # no signal; near-dups still meet through their minhash band keys
+    # (recall floor: tools/skew_recall.py)
+    hot = (ref_blocks.groupBy("block_key").count()
+           .where(F.col("count") > blocking.MAX_BLOCK).select("block_key"))
+    ref_blocks = ref_blocks.join(F.broadcast(hot), "block_key",
+                                 "left_anti").persist()
     # pre-partition the cached reference content on the join key (round
     # 6): every micro-batch's content-attach join then reuses this
     # partitioning and shuffles ONLY the batch-sized candidate side —
@@ -122,8 +115,8 @@ def _join_matcher(reference: DataFrame, scorer: str, threshold: float,
                    .repartition("ref_id").persist())
 
     def run(batch_df: DataFrame) -> DataFrame:
-        new_blocks = block_keys(batch_df, **blocking_kwargs) \
-            .withColumnRenamed("id", "stream_id")
+        new_blocks = block_keys(batch_df).withColumnRenamed("id",
+                                                            "stream_id")
         new_content = batch_df.select(F.col("id").alias("stream_id"),
                                       F.col("content").alias("s1"))
         # micro-batches are small vs the corpus: broadcast the stream
@@ -146,8 +139,7 @@ def _join_matcher(reference: DataFrame, scorer: str, threshold: float,
                               index_bytes=None)
 
 
-def _match_batch(reference: DataFrame, scorer: str, threshold: float,
-                 blocking_kwargs: dict, max_block: int | None = 200):
+def _match_batch(reference: DataFrame, scorer: str, threshold: float):
     """Build the per-micro-batch matcher: batch_df (id, content, ...) ->
     match edges (stream_id, ref_id, score).
 
@@ -165,8 +157,7 @@ def _match_batch(reference: DataFrame, scorer: str, threshold: float,
     ref_bytes = int(agg["b"] or 0)
     use_index, gate = broadcast_fits(reference.sparkSession, ref_bytes)
     build = _index_matcher if use_index else _join_matcher
-    run, release, stats = build(reference, scorer, threshold,
-                                blocking_kwargs, max_block)
+    run, release, stats = build(reference, scorer, threshold)
     if use_index:  # the broadcast carries the content too
         stats["index_bytes"] += ref_bytes
 
@@ -188,9 +179,7 @@ def _match_batch(reference: DataFrame, scorer: str, threshold: float,
 def streaming_fuzzy_match(stream: DataFrame, reference: DataFrame, *,
                           scorer: str = "ratio", threshold: float = 0.9,
                           sink_dir: str, checkpoint_dir: str,
-                          blocking_kwargs: Optional[dict] = None,
-                          trigger_once: bool = True,
-                          max_block: int | None = 200):
+                          trigger_once: bool = True):
     """Fuzzy-match a stream of (id, repo, path, commit, lang, content)
     records against a static reference corpus; append match edges to a
     parquet sink.  Returns the StreamingQuery.
@@ -203,14 +192,11 @@ def streaming_fuzzy_match(stream: DataFrame, reference: DataFrame, *,
     reference block keys.  ``query.match_plan`` reports the path taken
     and is logged once at start (a warning on the join path).
 
-    ``max_block`` drops reference block keys shared by more than that
-    many reference docs (hot keys have no discriminative signal and
-    amplify every arrival into whole-block candidates; None keeps
-    all keys)."""
-    blocking_kwargs = blocking_kwargs or dict(use_exact=True, use_path=True,
-                                              use_minhash=True)
-    matcher = _match_batch(reference, scorer, threshold, blocking_kwargs,
-                           max_block=max_block)
+    Keys are the batch pipeline's (:mod:`fuzzspark.pipeline.blocking`).
+    Reference block keys shared by more than its ``MAX_BLOCK`` reference
+    docs are dropped: hot keys have no discriminative signal and amplify
+    every arrival into whole-block candidates."""
+    matcher = _match_batch(reference, scorer, threshold)
     (_log.warning if matcher.plan["path"] == "join" else _log.info)(
         "streaming_fuzzy_match plan: %s", matcher.plan)
 
@@ -239,9 +225,7 @@ def streaming_ingest_linkage(spark, source_dir: str, reference: DataFrame, *,
                              workdir: str, scorer: str = "ratio",
                              threshold: float = 0.9,
                              schema=None,
-                             max_files_per_trigger: int | None = None,
-                             blocking_kwargs: Optional[dict] = None,
-                             max_block: int | None = 200):
+                             max_files_per_trigger: int | None = None):
     """End-to-end incremental linkage: watch ``source_dir`` for new
     corpus parquet files, fuzzy-match arrivals against ``reference``,
     append edges under ``workdir/edges`` (checkpoint
@@ -254,10 +238,7 @@ def streaming_ingest_linkage(spark, source_dir: str, reference: DataFrame, *,
     reference index (or, above the broadcast gate, a join of the
     batch's block keys against the persisted reference keys), so
     batches may grow with the arrival rate; the cap bounds the latency
-    of a single batch.
-
-    ``blocking_kwargs`` / ``max_block`` forward to
-    :func:`streaming_fuzzy_match`."""
+    of a single batch."""
     reader = spark.readStream.schema(schema or reference.schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger",
@@ -266,8 +247,7 @@ def streaming_ingest_linkage(spark, source_dir: str, reference: DataFrame, *,
     return streaming_fuzzy_match(
         stream, reference, scorer=scorer, threshold=threshold,
         sink_dir=os.path.join(workdir, "edges"),
-        checkpoint_dir=os.path.join(workdir, "_checkpoint"),
-        blocking_kwargs=blocking_kwargs, max_block=max_block)
+        checkpoint_dir=os.path.join(workdir, "_checkpoint"))
 
 
 def streaming_windowed_agg(stream: DataFrame, *, ts_col: str = "ts",

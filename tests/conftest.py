@@ -124,6 +124,23 @@ def driver_finish_at(monkeypatch):
     return force
 
 
+@pytest.fixture
+def blocking_constants(monkeypatch):
+    """``with blocking_constants(max_block=2, window=2):`` overrides the
+    blocking scheme's constants (``fuzzspark.pipeline.blocking``,
+    named in lower case) inside the block."""
+    from fuzzspark.pipeline import blocking
+
+    @contextlib.contextmanager
+    def override(**values):
+        with monkeypatch.context() as m:
+            for name, value in values.items():
+                m.setattr(blocking, name.upper(), value)
+            yield
+
+    return override
+
+
 def union_find_labels(edges) -> dict:
     """Plain-Python oracle for connected_components: {node: min node
     of its component} over (u, v) pairs.  Self-loops are skipped, so a

@@ -9,13 +9,14 @@ from fuzzspark.pipeline.blocking import defuse_skew
 from fuzzspark.pipeline.pairs import candidate_pairs
 
 
-def test_defuse_skew_bounds_pairs(spark):
+def test_defuse_skew_bounds_pairs(spark, blocking_constants):
     n = 1000
     # content lengths: near-dups i and i+1 have adjacent lengths
     rows = [(i, "hot", 100 + i) for i in range(n)]
     blocks = spark.createDataFrame(
         rows, "id: long, block_key: string, content_len: long")
-    out = defuse_skew(blocks, max_block=100, window=20)
+    with blocking_constants(max_block=100, window=20):
+        out = defuse_skew(blocks)
     sizes = {r["block_key"]: r["cnt"] for r in
              out.groupBy("block_key").agg(F.count("*").alias("cnt")).collect()}
     assert max(sizes.values()) <= 20            # windowed
@@ -31,16 +32,17 @@ def test_defuse_skew_bounds_pairs(spark):
     assert paired >= (n - 1) * 0.95
 
 
-def test_small_blocks_pass_through(spark):
+def test_small_blocks_pass_through(spark, blocking_constants):
     blocks = spark.createDataFrame(
         [(1, "k1", 5), (2, "k1", 6), (3, "k2", 7)],
         "id: long, block_key: string, content_len: long")
-    out = defuse_skew(blocks, max_block=100, window=10)
+    with blocking_constants(max_block=100, window=10):
+        out = defuse_skew(blocks)
     assert sorted((r["id"], r["block_key"]) for r in out.collect()) == \
         [(1, "k1"), (2, "k1"), (3, "k2")]
 
 
-def test_defuse_skew_keeps_rows_with_null_length(spark):
+def test_defuse_skew_keeps_rows_with_null_length(spark, blocking_constants):
     """NULL content still gets a path key, so a key row can carry a
     NULL content_len.  It keeps its block membership: in a windowed
     block NULL lengths rank first, ties broken by id."""
@@ -48,7 +50,8 @@ def test_defuse_skew_keeps_rows_with_null_length(spark):
             + [(99, "small", None), (98, "small", 5)])
     blocks = spark.createDataFrame(
         rows, "id: long, block_key: string, content_len: long")
-    out = defuse_skew(blocks, max_block=10, window=10)
+    with blocking_constants(max_block=10, window=10):
+        out = defuse_skew(blocks)
     assert {r["id"] for r in out.collect()} == {r[0] for r in rows}
     small = sorted(r["id"] for r in out.where("block_key = 'small'")
                    .collect())
@@ -87,14 +90,13 @@ def test_candidate_pairs_dedup_and_prefilter(spark):
 
 @pytest.mark.parametrize("families", [
     dict(use_exact=True, use_path=True, use_minhash=True),
-    dict(use_exact=True, use_path=True, use_minhash=False),
-    dict(use_exact=False, use_path=False, use_minhash=True),
-], ids=["all", "no_minhash", "minhash_only"])
+], ids=["all"])
 def test_pipeline_blocks_equal_one_block_keys_call(spark, tmp_path,
+                                                   blocking_constants,
                                                    families):
     """run_pipeline builds the exact/path keys and the MinHash keys from
     different inputs; its 02_blocks rows must equal one block_keys call
-    over 01_files through defuse_skew.  A low max_block makes some
+    over 01_files through defuse_skew.  A low MAX_BLOCK makes some
     blocks window."""
     from fuzzspark.pipeline import (LinkageConfig, corpus_to_spark,
                                     generate_corpus, run_pipeline)
@@ -102,24 +104,20 @@ def test_pipeline_blocks_equal_one_block_keys_call(spark, tmp_path,
 
     corpus = generate_corpus(n_clusters=12, seed=19, threshold=0.9)
     files, _, _ = corpus_to_spark(spark, corpus)
-    cfg = LinkageConfig(threshold=0.9, max_block=2, window=2, **families)
-    out = run_pipeline(spark, files, str(tmp_path / "wd"), cfg)
-    files_ck = out["files"]
-    want = defuse_skew(
-        block_keys(files_ck, n_bands=cfg.n_bands,
-                   rows_per_band=cfg.rows_per_band, shingle=cfg.shingle,
-                   max_chars=cfg.max_chars, **families),
-        max_block=cfg.max_block, window=cfg.window)
-    got = sorted(tuple(r) for r in out["blocks"].collect())
-    assert got == sorted(tuple(r) for r in want.collect())
+    with blocking_constants(max_block=2, window=2):
+        out = run_pipeline(spark, files, str(tmp_path / "wd"),
+                           LinkageConfig(threshold=0.9))
+        want = defuse_skew(block_keys(out["files"], **families))
+        got = sorted(tuple(r) for r in out["blocks"].collect())
+        assert got == sorted(tuple(r) for r in want.collect())
     assert any("#w" in r[1] for r in got)
 
 
 def test_minhash_key_rows_equal_exploded_per_doc_keys(spark):
-    """minhash_key_rows emits make_minhash_compute's per-doc keys,
+    """minhash_key_rows emits make_minhash_matrix's per-doc keys,
     exploded: one (id, bk) row per band of every non-null text, none for
     a null text."""
-    from fuzzspark.pipeline.blocking import (make_minhash_compute,
+    from fuzzspark.pipeline.blocking import (make_minhash_matrix,
                                              minhash_key_rows)
 
     texts = [None, "", "abc", "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 😀 text beyond the BMP 𐍈𐍈",
@@ -130,9 +128,9 @@ def test_minhash_key_rows_equal_exploded_per_doc_keys(spark):
         docs, "id: long, tag: string, __mh_norm: string").repartition(3)
     got = sorted(tuple(r) for r in minhash_key_rows(
         df, carry=("tag",)).collect())
-    keys = make_minhash_compute()([t for _i, _tag, t in docs])
-    want = sorted((i, tag, k) for (i, tag, _t), ks in zip(docs, keys)
-                  if ks is not None for k in ks)
+    idx, keys = make_minhash_matrix()([t for _i, _tag, t in docs])
+    want = sorted((docs[i][0], docs[i][1], k)
+                  for i, ks in zip(idx.tolist(), keys.tolist()) for k in ks)
     assert len(want) == 8 * (len(texts) - 1)
     assert got == want
 
@@ -164,7 +162,7 @@ def test_exact_equal_is_content_sha_equality(spark, tmp_path):
                          for c in ("id", "repo", "path", "commit", "lang",
                                    "content")])
     files = spark.createDataFrame(rows, schema)
-    cfg = LinkageConfig(threshold=0.9, use_exact=True)
+    cfg = LinkageConfig(threshold=0.9)
     out = run_pipeline(spark, files, str(tmp_path / "wd"), cfg)
 
     x_blocks = out["blocks"].where(F.col("block_key").startswith("x:"))

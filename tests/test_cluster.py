@@ -4,7 +4,10 @@ through BOTH paths, chosen by forcing the driver-finish threshold: the
 driver-side union-find small-tail finish and the fully-distributed
 star fixpoint (threshold 0)."""
 
+import contextlib
+
 import pytest
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from tests.conftest import union_find_labels
 
@@ -90,3 +93,68 @@ def test_unconverged_star_rounds_raise(spark, driver_finish_at, monkeypatch):
                 cluster.connected_components(df)
     finally:
         spark.conf.set(key, prev)
+
+
+def _path(n):
+    return [(i, i + 1) for i in range(n)]
+
+
+def _grid(w, h):
+    return ([(y * w + x, y * w + x + 1) for y in range(h) for x in range(w - 1)]
+            + [(y * w + x, (y + 1) * w + x) for y in range(h - 1)
+               for x in range(w)])
+
+
+GRAPHS = st.one_of(
+    st.integers(1, 80).map(_path),
+    st.integers(1, 40).map(lambda n: [(0, i) for i in range(1, n + 1)]),
+    st.tuples(st.integers(2, 8), st.integers(2, 8)).map(lambda t: _grid(*t)),
+    # random graphs, self-loops included
+    st.lists(st.tuples(st.integers(0, 60), st.integers(0, 60)),
+             min_size=1, max_size=120),
+    st.tuples(st.integers(1, 30), st.lists(st.integers(0, 40), max_size=10))
+    .map(lambda t: _path(t[0]) + [(x, x) for x in t[1]]),
+)
+
+
+@contextlib.contextmanager
+def _conf(spark, **values):
+    prev = {k: spark.conf.get(k) for k in values}
+    for k, v in values.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(edges=GRAPHS, partitions=st.sampled_from([1, 3, 8]),
+       coalesce=st.booleans(), finish=st.sampled_from([0, 1_000_000]))
+@example(edges=_path(64), partitions=8, coalesce=False, finish=0)
+def test_contraction_never_grows_the_graph(spark, driver_finish_at, edges,
+                                           partitions, coalesce, finish):
+    """Every step of the plan keeps the labels of the union-find oracle
+    and never grows the graph it was given: no kept co-partitioned
+    pass has more edges than entered it, and the star rounds start
+    from no more than the symmetrized input.  Without coalescing, a
+    pass over several partitions can emit an edge per neighbour per
+    partition (a 64-edge path on 8 partitions grew to 404 edges)."""
+    from fuzzspark.pipeline.cluster import connected_components
+
+    sym = {(u, v) for a, b in edges if a != b for u, v in ((a, b), (b, a))}
+    with _conf(spark, **{
+            "spark.sql.shuffle.partitions": str(partitions),
+            "spark.sql.adaptive.coalescePartitions.enabled": str(coalesce)
+            .lower()}), driver_finish_at(finish):
+        df = spark.createDataFrame(edges, "left_id: long, right_id: long") \
+            .repartition(partitions)
+        stats: dict = {}
+        got = connected_components(df, stats=stats).collect()
+    assert {r.id: r.cluster_id for r in got} == union_find_labels(edges)
+    kept = stats.get("phase2_edges", [])
+    for entered, n in zip([stats["contract_edges_in"], *kept], kept):
+        assert n <= entered, stats
+    assert stats["round_edges"][0] <= len(sym), stats

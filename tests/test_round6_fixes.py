@@ -276,7 +276,7 @@ def test_indel_family_hint_is_result_invariant():
 
 def test_native_minhash_bit_exact_with_numpy_reference():
     """The C batch minhash kernel must be BIT-EXACT with the numpy
-    reference in make_minhash_compute (which defines oracle parity) —
+    loop in make_minhash_matrix (which defines oracle parity) —
     including unicode, short (< shingle), empty and None docs."""
     import numpy as np
 
@@ -291,24 +291,25 @@ def test_native_minhash_bit_exact_with_numpy_reference():
             for _ in range(300)]
     docs += ["", "ab", "abcd", None, "κόσμος και άλλα",
              "日本語テキスト " * 40, "a" * 5, " ", "q" * 2500]
-    compute = BL.make_minhash_compute()
-    got = compute(docs)
+    got_idx, got = BL.make_minhash_matrix()(docs)
     real = _native.native_minhash
     try:
         _native.native_minhash = lambda *a, **k: None  # force numpy path
-        want = BL.make_minhash_compute()(docs)
+        want_idx, want = BL.make_minhash_matrix()(docs)
     finally:
         _native.native_minhash = real
-    assert got == want
+    assert np.array_equal(got_idx, want_idx)
+    assert np.array_equal(got, want)
 
 
 # ------------------- streaming matcher hot-key defusal (r6)
 
 
-def _hot_key_defusal_case(spark, max_bytes: str, path: str) -> None:
+def _hot_key_defusal_case(spark, blocking_constants, max_bytes: str,
+                          path: str) -> None:
     """A reference block key shared by every doc (the degenerate
     path-stem shape) must not amplify each arrival into whole-corpus
-    candidates: with max_block set the hot key is dropped at build
+    candidates: with a low MAX_BLOCK the hot key is dropped at build
     time, and true near-dups still match via their minhash keys.
     ``max_bytes`` sets the broadcast gate, so the case runs on the
     matcher ``path`` it selects."""
@@ -329,11 +330,12 @@ def _hot_key_defusal_case(spark, max_bytes: str, path: str) -> None:
     n_ref = ref.count()
     assert n_ref > 50
     batch = ref.limit(40).cache()
-    bk = dict(use_exact=True, use_path=True, use_minhash=True)
 
     with broadcast_gate(spark, max_bytes):
-        m_defused = _match_batch(ref, "ratio", 0.9, bk, max_block=50)
-        m_full = _match_batch(ref, "ratio", 0.9, bk, max_block=None)
+        with blocking_constants(max_block=50):
+            m_defused = _match_batch(ref, "ratio", 0.9)
+        with blocking_constants(max_block=n_ref):  # keeps every key
+            m_full = _match_batch(ref, "ratio", 0.9)
     assert m_defused.plan["path"] == m_full.plan["path"] == path
     if path == "broadcast_index":
         assert m_defused.plan["hot_keys_dropped"] >= 1
@@ -346,14 +348,16 @@ def _hot_key_defusal_case(spark, max_bytes: str, path: str) -> None:
     assert len(got) >= 40  # every doc at least matches itself
 
 
-def test_streaming_matcher_hot_key_defused(spark):
+def test_streaming_matcher_hot_key_defused(spark, blocking_constants):
     """Hot-key defusal on the broadcast-index matcher (default gate)."""
-    _hot_key_defusal_case(spark, "64m", "broadcast_index")
+    _hot_key_defusal_case(spark, blocking_constants, "64m",
+                          "broadcast_index")
 
 
-def test_streaming_matcher_hot_key_defused_join_path(spark):
+def test_streaming_matcher_hot_key_defused_join_path(spark,
+                                                     blocking_constants):
     """Hot-key defusal on the join matcher (gate forced off)."""
-    _hot_key_defusal_case(spark, "0", "join")
+    _hot_key_defusal_case(spark, blocking_constants, "0", "join")
 
 
 # ---------------------- streaming state is watermark-bounded (r6)

@@ -12,6 +12,7 @@ the 01_files files on disk."""
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -39,6 +40,36 @@ def test_fresh_narrow_stage_is_one_job_and_reuse_none(spark, tmp_path):
     assert reused.jobs == 0
     assert again.schema == df.schema
     assert again.count() == 200
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_partition_rows_under_a_quoted_path(spark, tmp_path, fmt):
+    """Per-partition row counts of a stage whose path holds a quote: a
+    parquet stage reads them from its file footers with no job beyond
+    the write (the quote used to break the metadata query, and the stage
+    fell back to a census job without a word); another format counts
+    the read-back partitions."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    runner = StageRunner(spark, str(tmp_path / "it's wd"), table_format=fmt)
+    with count_jobs(spark) as fresh:
+        runner.run("s", lambda: spark.range(0, 100, 1, 3))
+    with open(runner.manifest_path("s")) as f:
+        m = json.load(f)
+    assert sum(m["partition_rows"].values()) == 100
+    if fmt != "parquet":
+        assert m["partition_rows_kind"] == "read_partitions"
+        return
+    assert fresh.jobs == 1
+    assert m["partition_rows_kind"] == "output_files"
+    files = sorted(glob.glob(os.path.join(
+        glob.escape(os.path.dirname(runner.manifest_path("s"))),
+        "*.parquet")))
+    assert len(files) == 3
+    assert m["partition_rows"] == {str(i): pq.read_metadata(f).num_rows
+                                   for i, f in enumerate(files)}
 
 
 def test_score_histogram_bins(spark, tmp_path):

@@ -1,7 +1,9 @@
-"""Stage reuse keys on the input, not only on the config: linking a
-different corpus into a workdir that holds another corpus's stages
-reruns every stage, and only a genuine resume skips."""
+"""Stage reuse keys on the input and the blocking constants, not only
+on the config: linking a different corpus into a workdir that holds
+another corpus's stages, or retuning the blocking scheme, reruns the
+stages, and only a genuine resume skips."""
 
+import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from fuzzspark.pipeline import run_pipeline
@@ -48,3 +50,26 @@ def test_path_input_resumes_until_the_files_change(spark, tmp_path):
     out = run_pipeline(spark, spark.read.parquet(src), wd)
     assert out["runner"].stages_skipped == []
     assert _cluster_ids(out) == [10, 11]
+
+
+@pytest.mark.parametrize("constant, value, keys_like, before", [
+    ("n_bands", 4, "m:%", 2 * 8),   # a key per doc and band
+    ("max_block", 1, "%#w%", 0),    # a shared block of 2 now windows
+])
+def test_blocking_constant_change_rebuilds_blocks_onward(
+        spark, tmp_path, blocking_constants, constant, value, keys_like,
+        before):
+    """The lineage hash covers the blocking constants: retuning one
+    rebuilds 02_blocks through 05_clusters instead of resuming them
+    stale (01_files too: the params are one hash for every stage), and
+    the rebuilt keys follow the new value."""
+    def keys(out):
+        return out["blocks"].where(f"block_key LIKE '{keys_like}'").count()
+
+    src, wd = str(tmp_path / "src"), str(tmp_path / "wd")
+    _corpus(spark, [1, 2]).write.mode("overwrite").parquet(src)
+    assert keys(run_pipeline(spark, spark.read.parquet(src), wd)) == before
+    with blocking_constants(**{constant: value}):
+        out = run_pipeline(spark, spark.read.parquet(src), wd)
+    assert set(STAGES[1:]) <= set(out["runner"].stages_run)
+    assert keys(out) != before

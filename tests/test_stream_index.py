@@ -3,8 +3,8 @@ plan and the DuckDB oracle.
 
 * ``q_streaming_match`` equals its DuckDB oracle edge for edge, score
   for score, on both sides of the broadcast gate.
-* Edge cases (no key hit, empty reference, NULL content/path, a key
-  family turned off) give the join plan's edges on the index path.
+* Edge cases (no key hit, empty reference, NULL content/path, retuned
+  MinHash constants) give the join plan's edges on the index path.
 * ``KeyCSR`` probes equal a brute-force key match.
 """
 
@@ -60,13 +60,12 @@ def test_streaming_match_oracle_exact(spark, sf_dir, gate, monkeypatch,
     pd.testing.assert_frame_equal(s, o, check_dtype=False, rtol=0, atol=0)
 
 
-def _edges_both_paths(spark, ref, batch, blocking=None, threshold=0.8):
+def _edges_both_paths(spark, ref, batch, threshold=0.8):
     """Edges of each matcher path; asserts each gate picked its path."""
-    bk = blocking or dict(use_exact=True, use_path=True, use_minhash=True)
     out = {}
     for gate, path in PATHS.items():
         with broadcast_gate(spark, gate):
-            m = _match_batch(ref, "ratio", threshold, bk)
+            m = _match_batch(ref, "ratio", threshold)
         try:
             assert m.plan["path"] == path
             assert m.plan["kernel_backend"] == _native.backend()["backend"]
@@ -128,17 +127,16 @@ def test_null_content_and_path_rows(spark):
     assert not any(s == 12 or r == 5 or r is None for s, r, _ in got)
 
 
-@pytest.mark.parametrize("off", ["use_exact", "use_path", "use_minhash"])
-def test_one_key_family_off(spark, off):
+def test_minhash_constants_reach_the_executors(spark, blocking_constants):
+    """The arrivals are keyed on the executors with the MinHash
+    constants the driver keyed the reference with: under a retuned band
+    shape, a near-duplicate that shares only MinHash keys (no path, no
+    exact key) still matches on both paths."""
     ref = _docs(spark, REF_ROWS)
-    batch = _docs(spark, [
-        (10, "src/alpha.py", "the quick brown fox jumps over the lazy dog"),
-        (11, "other/beta.py", "lorem ipsum dolor sit amet consectetur elit!"),
-        (12, "lib/gamma.py", "pack my box with five dozen liquor jugs"),
-    ])
-    bk = dict(use_exact=True, use_path=True, use_minhash=True)
-    bk[off] = False
-    assert _edges_both_paths(spark, ref, batch, blocking=bk)
+    batch = _docs(spark, [(10, "x/other.rs", REF_ROWS[0][2] + "!")])
+    with blocking_constants(n_bands=16, rows_per_band=2):
+        got = _edges_both_paths(spark, ref, batch)
+    assert [(s, r) for s, r, _ in got] == [(10, 1)]
 
 
 def test_key_csr_probe_matches_brute_force():
@@ -147,10 +145,10 @@ def test_key_csr_probe_matches_brute_force():
     refs = rng.integers(0, 120, 300)
     probe = rng.integers(0, 50, 80)
     rows = np.arange(80)
-    for max_block in (None, 6):
+    for max_block in (len(keys), 6):
         csr, hot = KeyCSR.build(keys, refs, max_block)
         counts = {k: int((keys == k).sum()) for k in set(keys.tolist())}
-        keep = {k for k, c in counts.items() if not max_block or c <= max_block}
+        keep = {k for k, c in counts.items() if c <= max_block}
         assert hot == len(counts) - len(keep)
         want = sorted((int(r), int(f)) for r, k in zip(rows, probe) if k in keep
                       for f in refs[keys == k])
@@ -160,7 +158,7 @@ def test_key_csr_probe_matches_brute_force():
 
 def test_key_csr_bytes_keys_of_any_width():
     keys = np.array([b"x:ab", b"p:en/foo", b"x:ab", b"p:en/"], dtype=bytes)
-    csr, _ = KeyCSR.build(keys, np.array([0, 1, 2, 3]), None)
+    csr, _ = KeyCSR.build(keys, np.array([0, 1, 2, 3]), len(keys))
     probe = np.array([b"x:abc", b"p:en/foo", b"x:ab", b"p:en"], dtype=bytes)
     r, f = csr.probe(probe, np.arange(4))
     assert sorted(zip(r.tolist(), f.tolist())) == [(1, 1), (2, 0), (2, 2)]

@@ -85,7 +85,6 @@ def main() -> None:
                           "spark.eventLog.rolling.enabled": "false",
                       })
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("fuzzspark.python.parallelism", "16")
     sc = spark.sparkContext
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")

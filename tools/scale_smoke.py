@@ -30,7 +30,6 @@ def main() -> None:
     spark = get_spark("scale-smoke", cpus=32,
                       shuffle_partitions=SHUFFLE_PARTITIONS)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("fuzzspark.python.parallelism", "16")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     # one crossJoin with a replica range instead of a REPLICAS-way
     # union loop (round 6): identical rows, but the logical plan stays

@@ -5,8 +5,9 @@ sorted by content length and re-keyed into overlapping windows, so
 same-cluster members can only pair if their length ranks fall within one
 window.  This experiment plants a WORST CASE: a synthetic labeled corpus
 whose every row lands in ONE hot block, then measures truth-pair recall
-and candidate-pair cost across (max_block, window) settings, against the
-defusal-off baseline (full O(n^2) block, recall 1.0 by construction).
+and candidate-pair cost across trial values of the blocking constants
+MAX_BLOCK and WINDOW, against the defusal-off baseline (full O(n^2)
+block, recall 1.0 by construction).
 
 Usage: python tools/skew_recall.py [n_clusters]
 Prints a markdown table (appended to BENCH_SCALING.md by hand/driver).
@@ -23,6 +24,7 @@ from pyspark.sql import functions as F
 
 
 def run_experiment(spark, n_clusters: int = 400, seed: int = 17):
+    from fuzzspark.pipeline import blocking
     from fuzzspark.pipeline.blocking import defuse_skew
     from fuzzspark.pipeline.corpus import corpus_to_spark, generate_corpus
 
@@ -49,11 +51,17 @@ def run_experiment(spark, n_clusters: int = 400, seed: int = 17):
     rows = []
     base_pairs = n * (n - 1) // 2
     rows.append(("off", "-", base_pairs, 1.0))
-    for mb, w in [(200, 20), (200, 40), (100, 20), (100, 40), (50, 10)]:
-        cand = pairs_of(defuse_skew(blocks, max_block=mb, window=w))
-        n_cand = cand.count()
-        hit = truth.join(cand, ["left_id", "right_id"]).count()
-        rows.append((str(mb), str(w), n_cand, hit / n_truth))
+    # each setting is a trial value of the engine's blocking constants
+    saved = blocking.MAX_BLOCK, blocking.WINDOW
+    try:
+        for mb, w in [(200, 20), (200, 40), (100, 20), (100, 40), (50, 10)]:
+            blocking.MAX_BLOCK, blocking.WINDOW = mb, w
+            cand = pairs_of(defuse_skew(blocks))
+            n_cand = cand.count()
+            hit = truth.join(cand, ["left_id", "right_id"]).count()
+            rows.append((str(mb), str(w), n_cand, hit / n_truth))
+    finally:
+        blocking.MAX_BLOCK, blocking.WINDOW = saved
     return n, n_truth, rows
 
 
