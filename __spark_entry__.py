@@ -889,7 +889,7 @@ def _minhash_cte() -> str:
     band offset are all re-derived in integer SQL (HUGEINT
     intermediates, 32-bit split for the 128-bit-overflowing fold
     multiply)."""
-    from fuzzspark.pipeline.blocking import _hash_family
+    from fuzzspark.kernels.minhash import _hash_family
     A, B = _hash_family(32, 1729)
     GOLD = 0x9E3779B97F4A7C15
     W = "18446744073709551616"  # 2^64

@@ -1,8 +1,9 @@
-"""Pure scorer kernels (no Spark dependency).
+"""Pure kernels (no Spark or pandas dependency).
 
-Scalar semantic ground truth in :mod:`fuzzspark.kernels.metrics` and
-:mod:`fuzzspark.kernels.fuzz`; Arrow-batch engine in
-:mod:`fuzzspark.kernels.batch`.
+Scalar semantic ground truth in ``metrics`` and ``fuzz``; Arrow-batch
+engine in ``batch``, whose every kernel call goes through ``_native``
+(C library or Python, chosen there only); the MinHash blocking kernel
+in ``minhash``; the broadcast tables in ``content`` and ``refindex``.
 """
 
 from .metrics import (  # noqa: F401

@@ -9,9 +9,9 @@ src/distance/lcs_seq.rs:199-341; OSA transposition variant,
 src/distance/osa.rs:84-227) — public algorithms from Myers (1999) and
 Hyyrö (2002/2003).
 
-They are the no-compiler backend: ``batch.py`` calls them when the C
-batch kernel (``_native.c``) is unavailable, and ``comparator.py`` /
-``metrics.py`` use them for scalar calls.
+They are the no-compiler backend: ``_native.py`` runs them when the C
+batch kernel (``_native.c``) is unavailable, and ``metrics.py`` uses
+them for scalar calls.
 """
 
 from __future__ import annotations

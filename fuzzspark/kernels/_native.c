@@ -730,8 +730,8 @@ int batch_union_find(const int64_t *us, const int64_t *vs, int64_t m,
 
 /* --------------------- MinHash band keys (round 6) ------------------ */
 /* Whole-batch MinHash-LSH band-key computation: the C twin of
- * pipeline/blocking.py::make_minhash_matrix, BIT-EXACT with its numpy
- * reference (which remains the no-compiler fallback and the
+ * kernels/_native.py::_minhash_py, BIT-EXACT with that numpy
+ * reference (which remains the Python backend and the
  * DuckDB-oracle parity definition).  Per document: k-gram polynomial
  * shingle hashes over code points (uint64 wrap, x1000003), then for
  * each of n_hashes affine functions min over shingles of

@@ -1,11 +1,18 @@
-"""ctypes loader for the native batch kernels (_native.c).
+"""The kernel seam: every batch kernel, on the C library (_native.c)
+or on Python, and the only place that chooses between them.
 
-Compiles lazily, once per machine, into a shared cache dir keyed by the
-source hash (safe under concurrent python workers via atomic rename).
-When the library cannot be built or loaded, ``get_lib`` warns once,
-naming the cause, and returns None — callers then use the pure-Python
-big-int cores.  :func:`backend` reports which of the two this process
-scores with.  Disable with FUZZSPARK_NO_NATIVE=1.
+Each kernel function runs its C entry point when :func:`get_lib` holds
+the library, and otherwise the Python version beside it, built from
+the scalar definitions (``_bitpar``, ``common``, ``metrics``): the same
+answer either way.  A C entry point that returns non-zero (it could
+not allocate) raises, naming the kernel.
+
+The library compiles lazily, once per machine, into a shared cache dir
+keyed by the source hash (safe under concurrent python workers via
+atomic rename).  When it cannot be built or loaded, ``get_lib`` warns
+once, naming the cause, and returns None.  :func:`backend` reports
+which backend this process scores with.  Disable with
+FUZZSPARK_NO_NATIVE=1.
 """
 
 from __future__ import annotations
@@ -21,6 +28,11 @@ import warnings
 
 import numpy as np
 
+from ._bitpar import lcs_core, levenshtein_core, osa_core, pattern_masks
+from .common import common_prefix_len, common_suffix_len, strip_common_affix
+from .fuzz import partial_lcs_raw
+from .metrics import damerau_distance_raw, jaro_similarity_raw
+
 _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_native.c")
 _LIB = None
 _TRIED = False
@@ -31,6 +43,10 @@ _GCC_TIMEOUT_S = 120
 KIND_LCS = 0
 KIND_LEV = 1
 KIND_OSA = 2
+
+# modulus of the affine MinHash family (a 61-bit Mersenne prime; the C
+# kernel's compile-time constant)
+_MERSENNE = (1 << 61) - 1
 
 
 def _read_source() -> bytes | None:
@@ -241,103 +257,179 @@ def _flatten_pair(pat_strs: list[str], txt_strs: list[str],
     return pat, pat_off, txt, txt_off, max(p_es, t_es)
 
 
+def _checked(kernel: str, rc: int) -> None:
+    """Raise when the C kernel ``kernel`` returned non-zero (it could
+    not allocate its working memory): no caller rescores silently."""
+    if rc != 0:
+        raise RuntimeError(f"native kernel {kernel} failed with code {rc}")
+
+
+def _metric_py(kind: int, pat_strs: list[str],
+               txt_strs: list[str]) -> np.ndarray:
+    """:func:`native_batch` on the big-int cores: the common affix is
+    stripped, then pairs run in pattern order, so equal patterns are
+    adjacent (even as distinct objects) and share their masks — the
+    ``BatchComparator`` analog (src/distance/levenshtein.rs:1636-1657).
+    Exact: there is no bound to abandon at."""
+    core = (lcs_core, levenshtein_core, osa_core)[kind]
+    stripped = [strip_common_affix(a, b) for a, b in zip(pat_strs, txt_strs)]
+    out = np.empty(len(stripped), dtype=np.int64)
+    masks = last = None
+    for k in sorted(range(len(stripped)), key=lambda k: stripped[k][0]):
+        a, b = stripped[k]
+        if a != last:
+            masks, last = pattern_masks(a), a
+        out[k] = core(a, b, masks)
+    if kind == KIND_LCS:  # the stripped affix is common subsequence
+        out += np.fromiter((len(a) - len(a2) for a, (a2, _b)
+                            in zip(pat_strs, stripped)),
+                           dtype=np.int64, count=len(stripped))
+    return out
+
+
 def native_batch(kind: int, pat_strs: list[str], txt_strs: list[str],
                  bounds: np.ndarray | None = None,
                  pat_lens: np.ndarray | None = None,
-                 txt_lens: np.ndarray | None = None) -> np.ndarray | None:
-    """Batch metric via the native kernel, or None if unavailable.
+                 txt_lens: np.ndarray | None = None) -> np.ndarray:
+    """Full-string metric per pair, common affix stripped inside.
     kind 0: LCS similarity; 1: levenshtein distance; 2: OSA distance.
     ``bounds`` (optional int64, -1 = none): per-pair early-abandon
-    bound (min passing LCS / max passing distance); abandoned pairs
-    return -1 (provably outside the cutoff).  ``pat_lens``/``txt_lens``:
-    optional precomputed lengths (skips one python pass per side)."""
+    bound (min passing LCS / max passing distance); the C kernel
+    returns -1 for an abandoned pair (provably outside the cutoff), the
+    Python cores ignore it and compute exactly.  ``pat_lens``/
+    ``txt_lens``: optional precomputed lengths (skips one python pass
+    per side)."""
     lib = get_lib()
     if lib is None or not pat_strs:
-        return None if lib is None else np.zeros(0, dtype=np.int64)
+        return _metric_py(kind, pat_strs, txt_strs)
     pat, pat_off, txt, txt_off, es = _flatten_pair(pat_strs, txt_strs,
                                                    pat_lens, txt_lens)
     out = np.empty(len(pat_strs), dtype=np.int64)
     b = (None if bounds is None
          else np.ascontiguousarray(bounds, dtype=np.int64))
-    rc = lib.batch_metric_bounded_es(
+    _checked("batch_metric_bounded_es", lib.batch_metric_bounded_es(
         kind,
         pat.ctypes.data_as(ctypes.c_void_p), pat_off,
         txt.ctypes.data_as(ctypes.c_void_p), txt_off,
         len(pat_strs), out,
         None if b is None else b.ctypes.data_as(ctypes.c_void_p),
-        es)
-    if rc != 0:  # pragma: no cover (allocation failure)
-        return None
+        es))
     return out
 
 
 def native_affix(mode: int, pat_strs: list[str], txt_strs: list[str],
-                 cap: int = 0) -> np.ndarray | None:
+                 cap: int = 0) -> np.ndarray:
     """Common affix length per pair (mode 0 = prefix, 1 = suffix);
-    cap > 0 bounds the scan.  None when no compiler is available."""
+    cap > 0 bounds the scan."""
     lib = get_lib()
     if lib is None or not pat_strs:
-        return None if lib is None else np.zeros(0, dtype=np.int64)
+        affix = common_prefix_len if mode == 0 else common_suffix_len
+        cut = (slice(None) if cap <= 0 else slice(cap) if mode == 0
+               else slice(-cap, None))
+        return np.fromiter((affix(a[cut], b[cut])
+                            for a, b in zip(pat_strs, txt_strs)),
+                           np.int64, count=len(pat_strs))
     pat, pat_off, txt, txt_off, es = _flatten_pair(pat_strs, txt_strs)
     out = np.empty(len(pat_strs), dtype=np.int64)
-    rc = lib.batch_affix(
+    _checked("batch_affix", lib.batch_affix(
         mode, cap,
         pat.ctypes.data_as(ctypes.c_void_p), pat_off,
         txt.ctypes.data_as(ctypes.c_void_p), txt_off,
-        len(pat_strs), out, es)
-    return out if rc == 0 else None
+        len(pat_strs), out, es))
+    return out
 
 
 def native_partial_lcs(pat_strs: list[str], txt_strs: list[str]
-                       ) -> np.ndarray | None:
-    """max LCS of pat against any equal-length window of txt (pat must
-    be the shorter side), or None when no compiler is available."""
+                       ) -> np.ndarray:
+    """max LCS of pat against any equal-length window of txt
+    (:func:`fuzz.partial_lcs_raw`; pat must be the shorter side)."""
     lib = get_lib()
-    if lib is None:
-        return None
-    if not pat_strs:
-        return np.zeros(0, dtype=np.int64)
+    if lib is None or not pat_strs:
+        return np.fromiter(map(partial_lcs_raw, pat_strs, txt_strs),
+                           np.int64, count=len(pat_strs))
     pat, pat_off = _flatten(pat_strs)
     txt, txt_off = _flatten(txt_strs)
     out = np.empty(len(pat_strs), dtype=np.int64)
-    rc = lib.batch_partial_lcs(pat, pat_off, txt, txt_off,
-                               len(pat_strs), out)
-    return out if rc == 0 else None
+    _checked("batch_partial_lcs", lib.batch_partial_lcs(
+        pat, pat_off, txt, txt_off, len(pat_strs), out))
+    return out
 
 
-def native_jaro(pat_strs: list[str], txt_strs: list[str]) -> np.ndarray | None:
+def native_jaro(pat_strs: list[str], txt_strs: list[str]) -> np.ndarray:
+    """Jaro similarity per pair (:func:`metrics.jaro_similarity_raw`)."""
     lib = get_lib()
-    if lib is None:
-        return None
-    if not pat_strs:
-        return np.zeros(0, dtype=np.float64)
+    if lib is None or not pat_strs:
+        return np.fromiter(map(jaro_similarity_raw, pat_strs, txt_strs),
+                           np.float64, count=len(pat_strs))
     pat, pat_off = _flatten(pat_strs)
     txt, txt_off = _flatten(txt_strs)
     out = np.empty(len(pat_strs), dtype=np.float64)
-    rc = lib.batch_jaro(pat, pat_off, txt, txt_off, len(pat_strs), out)
-    return out if rc == 0 else None
+    _checked("batch_jaro", lib.batch_jaro(
+        pat, pat_off, txt, txt_off, len(pat_strs), out))
+    return out
+
+
+def _minhash_py(strs: list[str], k: int, A: np.ndarray, B: np.ndarray,
+                n_bands: int, rows_per_band: int) -> np.ndarray:
+    """:func:`native_minhash` in numpy, one document at a time: the
+    definition the C kernel is bit-exact with, and the one the DuckDB
+    oracle re-derives."""
+    Au = A.astype(np.uint64)[:, None]
+    Bu = B.astype(np.uint64)[:, None]
+    band_off = np.arange(n_bands, dtype=np.int64) << np.int64(56)
+    rows = np.empty((len(strs), n_bands), dtype=np.int64)
+    for pos, t in enumerate(strs):
+        if len(t) < k:
+            # deterministic short-string hash (Python hash() is
+            # salted).  The uint64 overflow is the INTENDED FNV
+            # wrap — silence numpy's per-doc RuntimeWarning
+            hv = np.uint64(1469598103934665603)
+            with np.errstate(over="ignore"):
+                for ch in t:
+                    hv = (hv * np.uint64(1099511628211)) \
+                        ^ np.uint64(ord(ch))
+            shingles = np.array([np.int64(hv >> np.uint64(1))], dtype=np.int64)
+        else:
+            # vectorized shingle hashing: polynomial over code points
+            codes = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
+            codes = codes.astype(np.uint64)
+            h = np.zeros(len(codes) - k + 1, dtype=np.uint64)
+            for i in range(k):
+                h = h * np.uint64(1000003) + codes[i: len(codes) - k + 1 + i]
+            shingles = np.unique(h).astype(np.int64) & 0x7FFFFFFFFFFFFFFF
+        # minhash: (a*x + b) mod p, min over shingles, per hash fn
+        x = shingles.astype(np.uint64)[None, :]
+        vals = (Au * x + Bu) % np.uint64(_MERSENNE)
+        sig = vals.min(axis=1)  # (n_hashes,)
+        bands = sig.reshape(n_bands, rows_per_band)
+        keys = np.zeros(n_bands, dtype=np.uint64)
+        for r in range(rows_per_band):
+            keys = keys * np.uint64(0x9E3779B97F4A7C15) + bands[:, r]
+        keys = (keys >> np.uint64(1)).astype(np.int64)  # keep positive
+        keys += band_off
+        rows[pos] = keys
+    return rows
 
 
 def native_minhash(strs: list[str], k: int, A: np.ndarray, B: np.ndarray,
-                   n_bands: int, rows_per_band: int) -> np.ndarray | None:
-    """MinHash-LSH band keys for a batch of (already truncated,
-    non-null) strings — bit-exact with the numpy loop of
-    ``blocking.make_minhash_matrix``.  Returns (n_docs, n_bands) int64, or None when no
-    compiler is available."""
+                   n_bands: int, rows_per_band: int) -> np.ndarray:
+    """MinHash-LSH band keys of a batch of (already truncated,
+    non-null) strings over ``k``-char shingles, hash family (A, B) mod
+    ``_MERSENNE``: (n_docs, n_bands) int64, band index in the top byte
+    so bands never collide.  The C kernel strength-reduces the
+    compile-time Mersenne modulus and runs with no per-doc python."""
     lib = get_lib()
-    if lib is None:
-        return None
     n = len(strs)
-    if not n:
-        return np.zeros((0, n_bands), dtype=np.int64)
+    if lib is None or not n:
+        return _minhash_py(strs, k, A, B, n_bands, rows_per_band)
     txt, off, es = _flatten_raw(strs)
     out = np.empty(n * n_bands, dtype=np.int64)
-    rc = lib.batch_minhash(
+    _checked("batch_minhash", lib.batch_minhash(
         txt.ctypes.data_as(ctypes.c_void_p), off, n, es, int(k),
         np.ascontiguousarray(A, dtype=np.uint64),
         np.ascontiguousarray(B, dtype=np.uint64),
-        len(A), int(n_bands), int(rows_per_band), out)
-    return out.reshape(n, n_bands) if rc == 0 else None
+        len(A), int(n_bands), int(rows_per_band), out))
+    return out.reshape(n, n_bands)
 
 
 def union_find_roots(du: np.ndarray, dv: np.ndarray,
@@ -346,18 +438,17 @@ def union_find_roots(du: np.ndarray, dv: np.ndarray,
     (du[i], dv[i]) over ids in [0, n_nodes).  C kernel when available
     (~20 ns/edge), else a python union-find — identical results."""
     lib = get_lib()
-    parent = np.arange(n_nodes, dtype=np.int64)
+    p = np.arange(n_nodes, dtype=np.int64)
     m = len(du)
     if not m:
-        return parent
+        return p
     if lib is not None:
         du = np.ascontiguousarray(du, dtype=np.int64)
         dv = np.ascontiguousarray(dv, dtype=np.int64)
-        if lib.batch_union_find(du, dv, m, n_nodes, parent) == 0:
-            return parent
-    # pure-python union-by-min with path halving (fresh state in case a
-    # failed native call partially wrote into parent)
-    p = np.arange(n_nodes, dtype=np.int64)
+        _checked("batch_union_find",
+                 lib.batch_union_find(du, dv, m, n_nodes, p))
+        return p
+    # pure-python union-by-min with path halving
 
     def find(x: int) -> int:
         while p[x] != x:
@@ -378,17 +469,17 @@ def union_find_roots(du: np.ndarray, dv: np.ndarray,
 
 
 def native_damerau(pat_strs: list[str], txt_strs: list[str]
-                   ) -> np.ndarray | None:
-    """Zhao-Sahni linear-space DL kernel: any input length, O(n + sigma)
-    working memory."""
+                   ) -> np.ndarray:
+    """Unrestricted Damerau-Levenshtein distance per pair
+    (:func:`metrics.damerau_distance_raw`).  The C kernel is Zhao-Sahni
+    linear-space: any input length, O(n + sigma) working memory."""
     lib = get_lib()
-    if lib is None:
-        return None
-    if not pat_strs:
-        return np.zeros(0, dtype=np.int64)
+    if lib is None or not pat_strs:
+        return np.fromiter(map(damerau_distance_raw, pat_strs, txt_strs),
+                           np.int64, count=len(pat_strs))
     pat, pat_off = _flatten(pat_strs)
     txt, txt_off = _flatten(txt_strs)
     out = np.empty(len(pat_strs), dtype=np.int64)
-    rc = lib.batch_damerau(pat, pat_off, txt, txt_off, len(pat_strs),
-                           out)
-    return out if rc == 0 else None
+    _checked("batch_damerau", lib.batch_damerau(
+        pat, pat_off, txt, txt_off, len(pat_strs), out))
+    return out

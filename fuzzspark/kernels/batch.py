@@ -4,17 +4,18 @@ This is the engine under the Spark pandas UDFs: one call scores an
 entire Arrow batch.  Strategy per pair family:
 
 * ``levenshtein`` (uniform) / ``lcs_seq`` / ``indel`` / ``osa`` /
-  ``ratio``: the C batch kernel (affix stripping and cutoff bounds
-  inside).  Without a compiler: strip the common affix
-  (src/details/common.rs:79-108), then run the big-int bit-parallel
-  cores with pattern masks built once per distinct pattern — the
-  ``BatchComparator`` analog (src/distance/levenshtein.rs:1636-1657).
-* ``jaro`` / ``jaro_winkler``: C batch kernel + vectorized prefix boost.
+  ``ratio``: one batch kernel call (affix stripping and cutoff bounds
+  inside), pairs grouped by pattern so equal patterns share masks.
+* ``jaro`` / ``jaro_winkler``: batch kernel + vectorized prefix boost.
 * ``hamming``: one flat element-compare + cumsum segment sums across
   the whole batch (no per-pair loop, no padded matrix).
-* ``prefix`` / ``postfix``: C affix scan.  Weighted ``levenshtein`` /
-  ``damerau_levenshtein``: batch reductions / C kernel; scalar python
-  only as no-compiler fallback.
+* ``prefix`` / ``postfix``: batch affix scan.  Weighted
+  ``levenshtein``: batch reductions onto the edit kernels, scalar DP
+  only for generic weights.  ``damerau_levenshtein``: batch kernel.
+
+Every kernel call goes through :mod:`fuzzspark.kernels._native`, which
+answers on the C library or, without a compiler, on the Python cores
+(the same answers); nothing here chooses a backend.
 
 Outputs are float64 arrays with NaN for NULL inputs or cutoff-
 suppressed scores (reference ``Option::None``, src/common.rs:33-86).
@@ -27,21 +28,9 @@ from typing import Optional
 
 import numpy as np
 
-from . import fuzz as _fuzz
-from ._bitpar import lcs_core, levenshtein_core, osa_core, pattern_masks
 from . import _native
-
-_NATIVE_KIND = {"lcs_seq": _native.KIND_LCS, "levenshtein": _native.KIND_LEV,
-                "osa": _native.KIND_OSA}
 from .common import strip_common_affix
-from .metrics import (
-    HammingError,
-    _lev_maximum,
-    damerau_distance_raw,
-    jaro_similarity_raw,
-    jaro_winkler_similarity_raw,
-    levenshtein_distance_raw,
-)
+from .metrics import HammingError, _lev_maximum, levenshtein_distance_raw
 
 __all__ = ["batch_scores", "SCORERS", "FORMS"]
 
@@ -51,9 +40,6 @@ SCORERS = (
     "partial_ratio", "token_sort_ratio", "token_set_ratio",
 )
 FORMS = ("distance", "similarity", "normalized_distance", "normalized_similarity")
-
-_BITPAR_CORES = {"levenshtein": levenshtein_core, "lcs_seq": lcs_core,
-                 "osa": osa_core}
 
 
 def _seq_to_str(seq) -> str:
@@ -109,8 +95,7 @@ def _native_reordered(kind_fn, pat: list[str], txt: list[str], aux=None,
     when duplicates exist (so the C mask reuse fires), else in natural
     order.  ``aux`` (optional int64 array, e.g. per-pair bounds) and
     ``lens`` (optional (pat_lens, txt_lens) arrays) are reordered
-    alongside.  Returns results in natural order, or None w/o a
-    compiler."""
+    alongside.  Returns results in natural order."""
     n = len(pat)
 
     def call(p, t, a, ln):
@@ -132,60 +117,30 @@ def _native_reordered(kind_fn, pat: list[str], txt: list[str], aux=None,
         got = call([pat[k] for k in order], [txt[k] for k in order],
                    None if aux is None else aux[order],
                    None if lens is None else (lens[0][order], lens[1][order]))
-        if got is None:
-            return None
         out = np.empty(n, dtype=np.int64)
         out[order] = got
         return out
     return call(pat, txt, aux, lens)
 
 
-def _bitpar_family_distances(kind: str, pairs: list[tuple[str, str]],
-                             bounds: Optional[np.ndarray] = None
-                             ) -> np.ndarray:
-    """Exact full-string metric for levenshtein/lcs(core=similarity)/osa
-    over many RAW pairs: for 'lcs_seq' the LCS length of the pair, else
-    the distance.  Common-affix stripping happens inside the kernels
-    (C path) or here (fallback) — callers pass unstripped strings.
+def _edit_batch(kind: int, pairs: list[tuple[str, str]],
+                bounds: Optional[np.ndarray] = None) -> np.ndarray:
+    """Full-string metric over many RAW pairs (``_native.KIND_*``): the
+    LCS length of the pair for ``KIND_LCS``, else the distance.  The
+    kernel strips the common affix, so callers pass unstripped
+    strings.
 
     ``bounds`` (int64, -1 = none): cutoff-derived early-abandon bound
-    per pair (min passing LCS / max passing distance).  Native-path
-    pairs that provably cannot pass come back as -1; callers' cutoff
-    algebra turns -1 into suppression.  The fallback path ignores
-    bounds (computes exactly — identical observable results).
-
-    Fast path: the compiled batch kernel (_native.c) when a compiler is
-    available; else the big-int bit-parallel cores (_bitpar.py), one
-    call per pair."""
-    n = len(pairs)
-    if _native.get_lib() is not None and pairs:
-        # all three metrics are symmetric; the shorter side as pattern
-        # minimizes the word count
-        pat = [a if len(a) <= len(b) else b for a, b in pairs]
-        txt = [b if len(a) <= len(b) else a for a, b in pairs]
-        got = _native_reordered(
-            lambda p, t, bd: _native.native_batch(
-                _NATIVE_KIND[kind], p, t, bounds=bd),
-            pat, txt, aux=bounds)
-        if got is not None:
-            return got
-    core = _BITPAR_CORES[kind]
-    # strip affixes python-side; LCS gets them added back at the end
-    stripped = [strip_common_affix(a, b) for a, b in pairs]
-    out = np.empty(n, dtype=np.int64)
-    # BatchComparator analog: pairs ordered by pattern content, so equal
-    # patterns are adjacent (even as distinct objects) and share masks
-    masks = last = None
-    for k in sorted(range(n), key=lambda k: stripped[k][0]):
-        a, b = stripped[k]
-        if a != last:
-            masks, last = pattern_masks(a), a
-        out[k] = core(a, b, masks)
-    if kind == "lcs_seq":
-        out += np.fromiter(
-            (len(a) - len(a2) for (a, _b), (a2, _b2) in zip(pairs, stripped)),
-            dtype=np.int64, count=n)
-    return out
+    per pair (min passing LCS / max passing distance).  Pairs that
+    provably cannot pass may come back as -1; callers' cutoff algebra
+    turns -1 into suppression."""
+    # all three metrics are symmetric; the shorter side as pattern
+    # minimizes the word count
+    pat = [a if len(a) <= len(b) else b for a, b in pairs]
+    txt = [b if len(a) <= len(b) else a for a, b in pairs]
+    return _native_reordered(
+        lambda p, t, bd: _native.native_batch(kind, p, t, bounds=bd),
+        pat, txt, aux=bounds)
 
 
 def _ratio_sims(pairs: list[tuple[str, str]],
@@ -200,42 +155,31 @@ def _ratio_sims(pairs: list[tuple[str, str]],
 
     Hot path: ONE python pass builds pattern/text sides and both length
     columns together (instead of separate passes for pat, txt, lens per
-    side and the total), feeding the native kernel precomputed lengths."""
-    n = len(pairs)
-    if not n:
+    side and the total), feeding the kernel precomputed lengths."""
+    if not pairs:
         return np.zeros(0)
-    lcs_full = None
-    if _native.get_lib() is not None:
-        pat: list[str] = []
-        txt: list[str] = []
-        pl: list[int] = []
-        tl: list[int] = []
-        ap, at, apl, atl = pat.append, txt.append, pl.append, tl.append
-        for a, b in pairs:
-            la, lb = len(a), len(b)
-            if la <= lb:
-                ap(a), at(b), apl(la), atl(lb)
-            else:
-                ap(b), at(a), apl(lb), atl(la)
-        plens = np.array(pl, dtype=np.int64)
-        tlens = np.array(tl, dtype=np.int64)
-        total = plens + tlens
-        bounds = None
-        if sim_cutoff is not None and sim_cutoff > 0:
-            min_lcs = np.ceil(sim_cutoff * total / 2.0 - 1e-7).astype(np.int64)
-            bounds = np.where(min_lcs > 0, min_lcs, np.int64(-1))
-        lcs_full = _native_reordered(
-            lambda p, t, bd, pln=None, tln=None: _native.native_batch(
-                0, p, t, bounds=bd, pat_lens=pln, txt_lens=tln),
-            pat, txt, aux=bounds, lens=(plens, tlens))
-    if lcs_full is None:  # no compiler: exact fallback path
-        total = np.fromiter((len(a) + len(b) for a, b in pairs),
-                            dtype=np.int64, count=n)
-        bounds = None
-        if sim_cutoff is not None and sim_cutoff > 0:
-            min_lcs = np.ceil(sim_cutoff * total / 2.0 - 1e-7).astype(np.int64)
-            bounds = np.where(min_lcs > 0, min_lcs, np.int64(-1))
-        lcs_full = _bitpar_family_distances("lcs_seq", pairs, bounds=bounds)
+    pat: list[str] = []
+    txt: list[str] = []
+    pl: list[int] = []
+    tl: list[int] = []
+    ap, at, apl, atl = pat.append, txt.append, pl.append, tl.append
+    for a, b in pairs:
+        la, lb = len(a), len(b)
+        if la <= lb:
+            ap(a), at(b), apl(la), atl(lb)
+        else:
+            ap(b), at(a), apl(lb), atl(la)
+    plens = np.array(pl, dtype=np.int64)
+    tlens = np.array(tl, dtype=np.int64)
+    total = plens + tlens
+    bounds = None
+    if sim_cutoff is not None and sim_cutoff > 0:
+        min_lcs = np.ceil(sim_cutoff * total / 2.0 - 1e-7).astype(np.int64)
+        bounds = np.where(min_lcs > 0, min_lcs, np.int64(-1))
+    lcs_full = _native_reordered(
+        lambda p, t, bd, pln=None, tln=None: _native.native_batch(
+            _native.KIND_LCS, p, t, bounds=bd, pat_lens=pln, txt_lens=tln),
+        pat, txt, aux=bounds, lens=(plens, tlens))
     dist = total - 2 * lcs_full
     with np.errstate(invalid="ignore", divide="ignore"):
         return np.where(total == 0, 1.0,
@@ -243,29 +187,22 @@ def _ratio_sims(pairs: list[tuple[str, str]],
 
 
 def _partial_ratio_batch(pairs: list[tuple[str, str]]) -> np.ndarray:
-    """Best window ratio per pair via the native batch kernel (pattern
-    masks shared across all windows of a pair); python fallback."""
+    """Best window ratio per pair (pattern masks shared across all
+    windows of a pair), as ``fuzz.partial_ratio_raw`` gives it."""
     n = len(pairs)
     shorter = [a if len(a) <= len(b) else b for a, b in pairs]
     longer = [b if len(a) <= len(b) else a for a, b in pairs]
-    if _native.get_lib() is not None and n:
-        got = _native_reordered(
-            lambda p, t, _a: _native.native_partial_lcs(p, t),
-            shorter, longer)
-        if got is not None:
-            m = np.fromiter((len(s) for s in shorter), np.int64, count=n)
-            nl = np.fromiter((len(s) for s in longer), np.int64, count=n)
-            # an equal-length pair is one window, scored as ``ratio``
-            # scores it (1 - dist/total), so both backends agree bit
-            # for bit
-            total = np.maximum(m + nl, 1)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                return np.where(m == 0, np.where(nl == 0, 1.0, 0.0),
-                                np.where(m == nl,
-                                         1.0 - (total - 2 * got) / total,
-                                         got / np.maximum(m, 1)))
-    return np.fromiter((_fuzz.partial_ratio_raw(a, b) for a, b in pairs),
-                       np.float64, count=n)
+    got = _native_reordered(
+        lambda p, t, _a: _native.native_partial_lcs(p, t), shorter, longer)
+    m = np.fromiter((len(s) for s in shorter), np.int64, count=n)
+    nl = np.fromiter((len(s) for s in longer), np.int64, count=n)
+    # an equal-length pair is one window, scored as ``ratio`` scores it
+    # (1 - dist/total)
+    total = np.maximum(m + nl, 1)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(m == 0, np.where(nl == 0, 1.0, 0.0),
+                        np.where(m == nl, 1.0 - (total - 2 * got) / total,
+                                 got / np.maximum(m, 1)))
 
 
 def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
@@ -298,9 +235,8 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
         return vals
 
     if scorer in ("levenshtein",) and (weights is None or tuple(weights) == (1, 1, 1)):
-        got = _bitpar_family_distances(
-            "levenshtein", [(s1[k], s2[k]) for k in idx],
-            bounds=_dist_bounds())
+        got = _edit_batch(_native.KIND_LEV, [(s1[k], s2[k]) for k in idx],
+                          bounds=_dist_bounds())
         raw[idx] = _fix_abandoned(got)
     elif scorer == "levenshtein":
         # batch-level weight reductions (src/distance/levenshtein.rs
@@ -312,11 +248,11 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
         if ins == dele and ins == 0:
             raw[idx] = 0.0
         elif ins == dele and sub == ins:
-            raw[idx] = _bitpar_family_distances("levenshtein", pairs) * ins
+            raw[idx] = _edit_batch(_native.KIND_LEV, pairs) * ins
         elif ins == dele and sub >= ins + dele:
             total = np.fromiter((len(a) + len(b) for a, b in pairs),
                                 dtype=np.int64, count=len(pairs))
-            lcs_full = _bitpar_family_distances("lcs_seq", pairs)
+            lcs_full = _edit_batch(_native.KIND_LCS, pairs)
             raw[idx] = (total - 2 * lcs_full) * ins
         else:
             for k in idx:
@@ -351,27 +287,19 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
         else:
             lens = np.array([[len(a), len(b)] for a, b in pairs],
                             dtype=np.int64).reshape(-1, 2)
-            lcs_full = _bitpar_family_distances("lcs_seq", pairs)
+            lcs_full = _edit_batch(_native.KIND_LCS, pairs)
             if scorer == "indel":
                 raw[idx] = lens[:, 0] + lens[:, 1] - 2 * lcs_full
             else:  # lcs_seq: canonical raw = distance = max(len) - lcs
                 raw[idx] = np.maximum(lens[:, 0], lens[:, 1]) - lcs_full
     elif scorer == "osa":
-        got = _bitpar_family_distances(
-            "osa", [(s1[k], s2[k]) for k in idx], bounds=_dist_bounds())
+        got = _edit_batch(_native.KIND_OSA, [(s1[k], s2[k]) for k in idx],
+                          bounds=_dist_bounds())
         raw[idx] = _fix_abandoned(got)
     elif scorer == "damerau_levenshtein":
-        # Zhao-Sahni linear-space C kernel: O(n + sigma) memory, so no
-        # oversized-matrix fallback exists any more; the python DP only
-        # covers the no-compiler environment.
         stripped = [strip_common_affix(s1[k], s2[k]) for k in idx]
-        got = _native.native_damerau([a for a, _ in stripped],
-                                     [b for _, b in stripped])
-        if got is not None:
-            raw[idx] = got
-        else:
-            for k in idx:
-                raw[k] = damerau_distance_raw(s1[k], s2[k])
+        raw[idx] = _native.native_damerau([a for a, _ in stripped],
+                                          [b for _, b in stripped])
     elif scorer == "hamming":
         # vectorized (round 5): ONE flat element-compare over every
         # pair's overlapping prefix + cumsum segment sums — no per-pair
@@ -413,45 +341,24 @@ def _raw_batch(scorer: str, s1: list, s2: list, valid: np.ndarray,
         a = [s1[k] for k in idx]
         b = [s2[k] for k in idx]
         got = _native.native_jaro(a, b)
-        if got is None:
-            fn = (jaro_similarity_raw if scorer == "jaro"
-                  else lambda x, y: jaro_winkler_similarity_raw(
-                      x, y, prefix_weight))
-            for k in idx:
-                raw[k] = fn(s1[k], s2[k])
-        else:
-            if scorer == "jaro_winkler":
-                # prefix boost (src/distance/jaro_winkler.rs:64-101),
-                # vectorized: <=4-char common prefix from the C affix
-                # scan, boost applied across the batch.  Same op order
-                # as the scalar path ((pfx*w)*(1-sim)) -> bit-identical.
-                # (the library is loaded here, and batch_affix cannot fail)
-                pfx = _native.native_affix(0, a, b, cap=4)
-                got = np.where(got > 0.7,
-                               got + (pfx * prefix_weight) * (1.0 - got), got)
-            raw[idx] = got
+        if scorer == "jaro_winkler":
+            # prefix boost (src/distance/jaro_winkler.rs:64-101),
+            # vectorized: <=4-char common prefix from the batch affix
+            # scan, boost applied across the batch.  Same op order as
+            # the scalar path ((pfx*w)*(1-sim)) -> bit-identical.
+            pfx = _native.native_affix(0, a, b, cap=4)
+            got = np.where(got > 0.7,
+                           got + (pfx * prefix_weight) * (1.0 - got), got)
+        raw[idx] = got
     elif scorer in ("prefix", "postfix"):
-        # canonical raw = distance = max(len) - common_affix; the affix
-        # scan is the C batch helper (find_common_prefix/suffix,
-        # src/details/common.rs:39-62), python char loop as fallback
+        # canonical raw = distance = max(len) - common_affix
+        # (find_common_prefix/suffix, src/details/common.rs:39-62)
         a = [s1[k] for k in idx]
         b = [s2[k] for k in idx]
         aff = _native.native_affix(0 if scorer == "prefix" else 1, a, b)
-        if aff is not None:
-            lens = np.array([[len(x), len(y)] for x, y in zip(a, b)],
-                            dtype=np.int64).reshape(-1, 2)
-            raw[idx] = np.maximum(lens[:, 0], lens[:, 1]) - aff
-        else:
-            rev = scorer == "postfix"
-            for pos, k in enumerate(idx):
-                x, y = a[pos], b[pos]
-                it = zip(reversed(x), reversed(y)) if rev else zip(x, y)
-                p = 0
-                for c1, c2 in it:
-                    if c1 != c2:
-                        break
-                    p += 1
-                raw[k] = max(len(x), len(y)) - p
+        lens = np.array([[len(x), len(y)] for x, y in zip(a, b)],
+                        dtype=np.int64).reshape(-1, 2)
+        raw[idx] = np.maximum(lens[:, 0], lens[:, 1]) - aff
     elif scorer == "partial_ratio":
         raw[idx] = _partial_ratio_batch([(s1[k], s2[k]) for k in idx])
     elif scorer == "token_set_ratio":

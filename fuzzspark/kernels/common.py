@@ -27,26 +27,15 @@ from __future__ import annotations
 
 from typing import Optional
 
-import numpy as np
-
 __all__ = [
-    "codepoints",
     "common_prefix_len",
     "common_suffix_len",
     "strip_common_affix",
-    "popcount",
     "norm_dist_from",
     "apply_distance_cutoff",
     "apply_similarity_cutoff",
     "make_forms",
 ]
-
-
-def codepoints(s: str) -> np.ndarray:
-    """Code points of ``s`` as an int64 numpy array (vectorized via UTF-32)."""
-    if not s:
-        return np.empty(0, dtype=np.int64)
-    return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
 
 
 def common_prefix_len(s1: str, s2: str) -> int:
@@ -100,10 +89,6 @@ def strip_common_affix(s1: str, s2: str) -> tuple[str, str]:
         if sfx:
             s1, s2 = s1[:-sfx], s2[:-sfx]
     return s1, s2
-
-
-def popcount(x: int) -> int:
-    return x.bit_count()
 
 
 def norm_dist_from(dist: float, maximum: float) -> float:

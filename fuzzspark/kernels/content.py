@@ -4,7 +4,7 @@ Below the broadcast gate (:func:`fuzzspark.pipeline.util.broadcast_fits`)
 the driver collects the content scored against once, as an Arrow
 ``(id, content)`` table, and broadcasts it as flat arrays: 04_scores
 looks both sides of each pair up in it, and the streaming matcher's
-:class:`~fuzzspark.streaming.index.RefIndex` addresses the reference by
+:class:`~fuzzspark.kernels.refindex.RefIndex` addresses the reference by
 position in it.  Rows whose id is NULL never enter it: no pair or block
 key can name them.
 """

@@ -30,26 +30,30 @@ def ratio(s1: str, s2: str, *, score_cutoff=None) -> float | None:
     return apply_similarity_cutoff(ratio_raw(s1, s2), score_cutoff)
 
 
+def partial_lcs_raw(pat: str, txt: str) -> int:
+    """Best LCS of ``pat`` against any ``len(pat)``-char window of
+    ``txt`` (0 when ``pat`` is empty or longer)."""
+    m = len(pat)
+    best = 0
+    if m:
+        for start in range(len(txt) - m + 1):
+            best = max(best, lcs_similarity_raw(pat, txt[start:start + m]))
+            if best == m:
+                break
+    return best
+
+
 def partial_ratio_raw(s1: str, s2: str) -> float:
     """Best ``ratio`` of the shorter string against any equal-length
     substring window of the longer (published rapidfuzz semantics;
-    extension — no reference vectors, see module docstring)."""
+    extension — no reference vectors, see module docstring): LCS over
+    the window length, the ratio of two equal-length strings."""
     shorter, longer = (s1, s2) if len(s1) <= len(s2) else (s2, s1)
     if not shorter:
         return 1.0 if not longer else 0.0
     if len(shorter) == len(longer):
         return ratio_raw(shorter, longer)
-    m = len(shorter)
-    best = 0.0
-    for start in range(0, len(longer) - m + 1):
-        window = longer[start:start + m]
-        sim = lcs_similarity_raw(shorter, window)
-        score = 2.0 * sim / (2 * m)  # ratio of equal-length strings
-        if score > best:
-            best = score
-            if best == 1.0:
-                break
-    return best
+    return partial_lcs_raw(shorter, longer) / len(shorter)
 
 
 def partial_ratio(s1: str, s2: str, *, score_cutoff=None) -> float | None:

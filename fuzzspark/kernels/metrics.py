@@ -107,13 +107,8 @@ def levenshtein_distance_raw(s1: str, s2: str, weights=(1, 1, 1)) -> int:
 def lcs_similarity_raw(s1: str, s2: str) -> int:
     # common-affix chars are all part of the LCS (src/distance/lcs_seq.rs
     # strips affix before the kernel); stripping keeps bit widths small.
-    p = common_prefix_len(s1, s2)
-    if p:
-        s1, s2 = s1[p:], s2[p:]
-    sfx = common_suffix_len(s1, s2)
-    if sfx:
-        s1, s2 = s1[:-sfx], s2[:-sfx]
-    return p + sfx + lcs_core(s1, s2)
+    a, b = strip_common_affix(s1, s2)
+    return len(s1) - len(a) + lcs_core(a, b)
 
 
 def indel_distance_raw(s1: str, s2: str) -> int:
@@ -226,11 +221,7 @@ def jaro_similarity_raw(s1: str, s2: str) -> float:
 def jaro_winkler_similarity_raw(s1: str, s2: str, prefix_weight: float = 0.1) -> float:
     """Jaro boosted by ≤4-char common prefix when jaro > 0.7
     (src/distance/jaro_winkler.rs:64-101; default weight 0.1, :31-39)."""
-    pfx = 0
-    for c1, c2 in zip(s1[:4], s2[:4]):
-        if c1 != c2:
-            break
-        pfx += 1
+    pfx = common_prefix_len(s1[:4], s2[:4])
     sim = jaro_similarity_raw(s1, s2)
     if sim > 0.7:
         sim += pfx * prefix_weight * (1.0 - sim)

@@ -1,24 +1,25 @@
-"""Driver-built reference index for the streaming matcher.
+"""The streaming matcher's reference index, free of Spark and pandas.
 
 The reference side of a stream match is static, so its block keys are
 computed once, on the driver, and shipped to the executors in ONE
-broadcast with the reference's
-:class:`~fuzzspark.kernels.content.ContentTable`: per key kind a sorted
-unique key array with CSR offsets into the table positions carrying
-each key.  A micro-batch probes it with ``searchsorted`` inside a
-single Arrow map — no per-batch join, exchange or second broadcast.
-Flat arrays rather than a dict of per-key arrays: a pickled numpy array
-loads with one buffer copy, not one object per key.
+broadcast with the reference's :class:`~fuzzspark.kernels.content.
+ContentTable`: per key kind a sorted unique key array with CSR offsets
+into the table positions carrying each key.  A micro-batch probes it
+with ``searchsorted`` inside a single Arrow map — no per-batch join,
+exchange or second broadcast.  Flat arrays rather than a dict of
+per-key arrays: a pickled numpy array loads with one buffer copy, not
+one object per key.  The module imports numpy and the kernels only, so
+an executor that unpickles the broadcast loads neither pyspark.sql nor
+pandas for it.
 
 Keys come from the same expressions as the batch pipeline's
-:func:`~fuzzspark.pipeline.blocking.block_keys` (via
-:func:`~fuzzspark.pipeline.blocking.block_key_columns`): the exact and
-path families arrive as their finished string keys, the MinHash family
-as normalized content that both sides run through the same
-:func:`~fuzzspark.pipeline.blocking.make_minhash_matrix` kernel.  String
-keys are matched as UTF-8 bytes, MinHash keys as the int64 band key that
-``block_keys`` renders as ``'m:' || band_key``, so every key compares
-exactly as its string form would.
+``fuzzspark.pipeline.blocking.block_keys`` (via ``block_key_columns``):
+the exact and path families arrive as their finished string keys, the
+MinHash family as normalized content that both sides run through the
+same :func:`~fuzzspark.kernels.minhash.make_minhash_matrix` kernel.
+String keys are matched as UTF-8 bytes, MinHash keys as the int64 band
+key that ``block_keys`` renders as ``'m:' || band_key``, so every key
+compares exactly as its string form would.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from fuzzspark.kernels.content import ContentTable
+from .content import ContentTable
 
 __all__ = ["KeyCSR", "RefIndex", "doc_keys", "source_name"]
 

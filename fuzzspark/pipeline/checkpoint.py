@@ -17,10 +17,11 @@ Spark job.
 ``StageRunner.run`` skips any stage whose manifest exists and matches
 the stage's lineage hash — a killed run resumes from the last complete
 stage (tests/test_resume.py kills between stages and re-runs).  The
-lineage hash chains: it covers the params (which the pipeline keys on
-its input with :func:`input_fingerprint`) and the lineage hash of the
-stage run before it, so a different input or config invalidates every
-stage from the first, never only some of them.
+lineage hash chains: it covers the stage's own params (the pipeline
+keys its first stage on its input with :func:`input_fingerprint`), the
+table format and the lineage hash of the stage run before it, so a
+changed param invalidates the first stage that reads it and every
+stage after, never a stage before it.
 """
 
 from __future__ import annotations
@@ -112,7 +113,6 @@ class StageRunner:
     ``format("iceberg")``)."""
     spark: SparkSession
     root: str
-    params: dict = field(default_factory=dict)
     stages_run: list = field(default_factory=list)
     stages_skipped: list = field(default_factory=list)
     table_format: str = "parquet"
@@ -143,40 +143,46 @@ class StageRunner:
         except (OSError, ValueError):
             return None
 
-    def _lineage_hash(self, stage: str) -> str:
-        """Hash of what ``stage`` is built from: the params and the
-        lineage hash of the stage run before it on this runner."""
-        return params_hash({"stage": stage, "params": self.params,
+    def _lineage_hash(self, stage: str, params: dict) -> str:
+        """Hash of what ``stage`` is built from: its params, the table
+        format and the lineage hash of the stage run before it on this
+        runner."""
+        return params_hash({"stage": stage, "params": params,
+                            "table_format": self.table_format,
                             "upstream": self._upstream})
 
-    def _reusable_manifest(self, stage: str, observe) -> dict | None:
+    def _reusable_manifest(self, stage: str, lineage: str,
+                           observe) -> dict | None:
         """``stage``'s manifest when its output can be reused: complete,
-        of this lineage, and holding a value for every name in
+        of ``lineage``, and holding a value for every name in
         ``observe`` (a manifest written before a value was observed is
         rebuilt, so no reader of ``extra`` meets a missing name)."""
         m = self.manifest(stage)
-        if (m and m.get("lineage_hash") == self._lineage_hash(stage)
+        if (m and m.get("lineage_hash") == lineage
                 and m.get("complete")
                 and set(observe) <= set(m.get("extra", {}))):
             return m
         return None
 
     def run(self, stage: str, build: Callable[[], DataFrame], *,
+            params: dict | None = None,
             score_col: str | None = None,
             extra_manifest: dict | None = None,
             observe: dict | None = None) -> DataFrame:
         """Build + persist a stage, or reload it if already complete.
 
-        ``extra_manifest``: dict reference merged into the manifest's
-        ``extra`` at write time — ``build`` may populate it during
-        construction (e.g. the CC round-by-round contracted-edge
-        counts).  ``observe``: name -> aggregate Column computed by the
+        ``params``: what ``build`` reads besides the upstream stages
+        (the lineage hash covers them).  ``extra_manifest``: dict
+        reference merged into the manifest's ``extra`` at write time —
+        ``build`` may populate it during construction (e.g. the CC
+        round-by-round contracted-edge counts).  ``observe``: name -> aggregate Column computed by the
         write job itself; each value lands in ``extra`` under its name,
         and a stored stage whose ``extra`` lacks one is rebuilt."""
         observe = observe or {}
+        params = params or {}
         out_dir = self._dir(stage)
-        lineage = self._lineage_hash(stage)
-        reused = self._reusable_manifest(stage, observe)
+        lineage = self._lineage_hash(stage, params)
+        reused = self._reusable_manifest(stage, lineage, observe)
         if reused is not None:
             self.stages_skipped.append(stage)
             self._upstream = lineage
@@ -200,7 +206,7 @@ class StageRunner:
         partition_rows, rows_kind = self._partition_rows(out_dir, persisted)
         manifest = {
             "stage": stage,
-            "params_hash": params_hash(self.params),
+            "params_hash": params_hash(params),
             "lineage_hash": lineage,
             "row_count": int(metrics["rows"]),
             "schema": persisted.schema.jsonValue(),

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from fuzzspark.pipeline.util import parse_bytes
+from fuzzspark.pipeline.util import collect_budget, parse_bytes
 
 __all__ = ["connected_components"]
 
@@ -52,23 +52,18 @@ def _auto_driver_finish(spark) -> int:
     e.g. 8 GiB -> 33.5M edges (~537 MB raw).  Never below the 4M floor
     the 800x smoke validated.
 
-    Also clamp by ``spark.driver.maxResultSize`` (default 1 GiB), which
-    aborts any collect above it regardless of heap — without the clamp,
-    a LARGER driver heap raises the threshold straight into a
-    maxResultSize abort (observed at the 3200x tier with a 24g heap:
-    "Total size of serialized results of 136 tasks (1029.3 MiB) is
-    bigger than spark.driver.maxResultSize").  The Arrow-serialized
-    result runs ~16-17 B/edge; budget 20 B/edge against 80% of the cap.
-    maxResultSize=0 means unlimited."""
+    Also clamp by :func:`~fuzzspark.pipeline.util.collect_budget`
+    (``spark.driver.maxResultSize``) — without the clamp, a LARGER
+    driver heap raises the threshold straight into a maxResultSize
+    abort (observed at the 3200x tier with a 24g heap: "Total size of
+    serialized results of 136 tasks (1029.3 MiB) is bigger than
+    spark.driver.maxResultSize").  The Arrow-serialized result runs
+    ~16-17 B/edge; budget 20 B/edge."""
     mem = parse_bytes(spark.conf.get("spark.driver.memory", "1g"))
     cap = mem // 256
-    try:
-        mrs = parse_bytes(spark.conf.get("spark.driver.maxResultSize",
-                                         "1g"))
-    except Exception:  # pragma: no cover — unparseable custom value
-        mrs = 1 << 30
-    if mrs and mrs > 0:
-        cap = min(cap, (mrs * 4 // 5) // 20)
+    budget = collect_budget(spark)
+    if budget is not None:
+        cap = min(cap, budget // 20)
     return max(_DRIVER_FINISH_FLOOR, cap)
 
 

@@ -28,8 +28,8 @@ from fuzzspark.pipeline.pairs import candidate_pairs
 __all__ = ["LinkageConfig", "run_pipeline"]
 
 
-from fuzzspark.pipeline.util import (broadcast_fits, content_bytes, join_scores,
-                                     parse_bytes as _parse_bytes)
+from fuzzspark.pipeline.util import (arrow_bytes, broadcast_fits, content_bytes,
+                                     join_scores, parse_bytes as _parse_bytes)
 
 
 def _dir_bytes(path: str) -> int | None:
@@ -56,9 +56,6 @@ class LinkageConfig:
     # stage-storage DataSource format (parquet/orc/...; "iceberg" with
     # the runtime jar + catalog configured)
     table_format: str = "parquet"
-
-    def as_dict(self):
-        return dict(self.__dict__)
 
 
 # 04_scores' columns, in order
@@ -113,13 +110,12 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
     ``files`` must have columns (id, repo, path, commit, lang, content).
     """
     cfg = config or LinkageConfig()
-    # stage reuse keys on the input and the blocking constants as well
-    # as the config: linking a different corpus, or retuning the
-    # blocking scheme, reruns the stages built from them
-    runner = StageRunner(spark, workdir,
-                         params=dict(cfg.as_dict(), **blocking.scheme(),
-                                     input=input_fingerprint(files)),
-                         table_format=cfg.table_format)
+    # each stage's reuse keys on what it reads (and, through the
+    # lineage chain, on what its upstream stages read): linking a
+    # different corpus reruns every stage, retuning the blocking scheme
+    # reruns 02_blocks onward, a new threshold 03_pairs onward
+    runner = StageRunner(spark, workdir, table_format=cfg.table_format)
+    link = dict(scorer=cfg.scorer, threshold=cfg.threshold)
 
     def widen(df: DataFrame, input_bytes: int | None = None) -> DataFrame:
         """Guarantee a UDF-heavy stage gets enough tasks even when its
@@ -150,13 +146,16 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
     # recomputed-sha mismatches) instead of paying a second full corpus
     # scan per run.  The uncompressed content bytes that gate the
     # 04_scores broadcast ride it too.
-    files_ck = runner.run("01_files", _files, observe={
+    files_ck = runner.run("01_files", _files,
+                          params=dict(input=input_fingerprint(files)),
+                          observe={
         "sha_mismatch": F.sum((sha256_column("content")
                                != F.col("content_sha256")).cast("long")),
         "content_bytes": content_bytes()})
     # StageRunner reuses a stage only when its manifest holds every
     # observed value, so both are here on a fresh run and a resume alike
-    files_extra = runner.manifest("01_files")["extra"]
+    files_manifest = runner.manifest("01_files")
+    files_extra = files_manifest["extra"]
 
     if "01_files" in runner.stages_run:
         n_drift = int(files_extra["sha_mismatch"] or 0)
@@ -185,16 +184,16 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
             block_keys(files_ck, use_minhash=False).unionByName(
                 block_keys(wide, use_exact=False, use_path=False)))
 
-    blocks = runner.run("02_blocks", _blocks)
+    blocks = runner.run("02_blocks", _blocks, params=blocking.scheme())
 
     # the block rows carry content_len, so candidate_pairs reads both
     # pair lengths off the join sides and decides exact_equal from the
     # x: key family: the pair set shuffles once, length-pruned, for the
     # dedup
     pairs = runner.run(
-        "03_pairs",
-        lambda: candidate_pairs(blocks, scorer=cfg.scorer,
-                                cutoff=cfg.threshold))
+        "03_pairs", lambda: candidate_pairs(blocks, scorer=cfg.scorer,
+                                            cutoff=cfg.threshold),
+        params=link)
 
     # the driver's kernel backend and the scoring path (set by _score)
     # land in the 04_scores manifest
@@ -204,10 +203,13 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         # 03_pairs is id-only (see candidate_pairs): content attaches by
         # id here, and exact pairs (a shared x: key) score 1.0 without
         # the scorer.  The gate reads the bytes the 01_files write
-        # measured.  Above it the shuffle joins spread the output over
+        # measured, and the driver collects it as (id, content).  Above
+        # it the shuffle joins spread the output over
         # spark.sql.shuffle.partitions: a post-join widen() would
         # re-shuffle every text-attached row (~100 GB at the 200x tier)
-        fits, _ = broadcast_fits(spark, files_extra["content_bytes"])
+        nbytes = files_extra["content_bytes"]
+        fits, _ = broadcast_fits(spark, nbytes, arrow_bytes(
+            files_manifest["row_count"], nbytes or 0, 2))
         score_info["score_path"] = "broadcast" if fits else "shuffle"
         if fits:
             # the corpus ships once per executor and only the 17 B id
@@ -236,7 +238,7 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
         return (scored.select(*SCORE_COLS)
                 .unionByName(exact.select(*SCORE_COLS)))
 
-    scores = runner.run("04_scores", _score, score_col="score",
+    scores = runner.run("04_scores", _score, params=link, score_col="score",
                         extra_manifest=score_info)
 
     cc_stats: dict = {}
@@ -274,7 +276,9 @@ def run_pipeline(spark: SparkSession, files: DataFrame, workdir: str,
 
     # cc_stats lands in the 05_clusters manifest: which steps CC took
     # and the per-round contracted edge counts
-    clusters = runner.run("05_clusters", _cluster, extra_manifest=cc_stats)
+    clusters = runner.run("05_clusters", _cluster,
+                          params=dict(threshold=cfg.threshold),
+                          extra_manifest=cc_stats)
 
     # 05_clusters is persisted, so the CC round checkpoints are dead
     # weight — delete them (they'd otherwise accumulate for the life of

@@ -7,7 +7,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from fuzzspark.functions import length_prefilter, scorer_column
 
-__all__ = ["broadcast_fits", "content_bytes", "join_scores", "parse_bytes"]
+__all__ = ["arrow_bytes", "broadcast_fits", "collect_budget",
+           "content_bytes", "join_scores", "parse_bytes"]
 
 
 def parse_bytes(v: str) -> int:
@@ -26,17 +27,38 @@ def parse_bytes(v: str) -> int:
         return 0
 
 
-def broadcast_fits(spark: SparkSession,
-                   nbytes: int | None) -> tuple[bool, int]:
+def collect_budget(spark: SparkSession) -> int | None:
+    """Bytes a driver-side collect may return: 80% of
+    ``spark.driver.maxResultSize`` (default 1 GiB), which aborts any
+    collect above it whatever the heap.  None when the setting is 0
+    (unlimited)."""
+    cap = parse_bytes(spark.conf.get("spark.driver.maxResultSize", "1g"))
+    return cap * 4 // 5 if cap > 0 else None
+
+
+def arrow_bytes(rows: int, string_bytes: int, columns: int) -> int:
+    """Upper estimate of an Arrow collect of ``rows`` rows and
+    ``columns`` columns whose strings hold ``string_bytes``: 8 B per
+    value (an int64, or a string's offset and validity bit) on top of
+    the string bytes."""
+    return string_bytes + 8 * columns * rows
+
+
+def broadcast_fits(spark: SparkSession, nbytes: int | None,
+                   collect_bytes: int) -> tuple[bool, int]:
     """The broadcast gate of 04_scores and the streaming matcher: is
     content of ``nbytes`` uncompressed bytes (:func:`content_bytes`; None
-    counts as 0) broadcast as a ``ContentTable`` rather than scored by
-    :func:`join_scores`?  Yes when it is at most ``fuzzspark.broadcast.
-    content.max_bytes`` (<= 0 turns the broadcast off).  Returns the
+    counts as 0), which the driver collects as ``collect_bytes``
+    (:func:`arrow_bytes`), broadcast as a ``ContentTable`` rather than
+    scored by :func:`join_scores`?  Yes when it is at most
+    ``fuzzspark.broadcast.content.max_bytes`` (<= 0 turns the broadcast
+    off) and the collect fits :func:`collect_budget`.  Returns the
     answer and that limit."""
     limit = parse_bytes(spark.conf.get(
         "fuzzspark.broadcast.content.max_bytes", "64m"))
-    return 0 < limit and (nbytes or 0) <= limit, limit
+    budget = collect_budget(spark)
+    return (0 < limit and (nbytes or 0) <= limit
+            and (budget is None or collect_bytes <= budget)), limit
 
 
 def content_bytes(col: str = "content") -> Column:

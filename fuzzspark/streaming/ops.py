@@ -11,11 +11,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from fuzzspark.functions import sha256_column
 from fuzzspark.kernels import _native
+from fuzzspark.kernels.minhash import make_minhash_matrix
+from fuzzspark.kernels.refindex import RefIndex, source_name
 from fuzzspark.pipeline import blocking
-from fuzzspark.pipeline.blocking import (block_key_columns, block_keys,
-                                         make_minhash_matrix)
-from fuzzspark.pipeline.util import broadcast_fits, content_bytes, join_scores
-from fuzzspark.streaming.index import RefIndex, source_name
+from fuzzspark.pipeline.blocking import block_key_columns, block_keys
+from fuzzspark.pipeline.util import (arrow_bytes, broadcast_fits, content_bytes,
+                                     join_scores)
 
 __all__ = ["streaming_exact_dedup", "streaming_fuzzy_match",
            "streaming_ingest_linkage", "streaming_stateful_dedup",
@@ -49,17 +50,18 @@ def _key_sources(df: DataFrame, key_cols: dict) -> DataFrame:
                       for fam, c in key_cols.items()]))
 
 
-def _index_matcher(reference: DataFrame, scorer: str, threshold: float):
-    """Reference side built ONCE on the driver (one collect, MinHash
-    keys by the same kernel, hot keys dropped) and broadcast as a
-    :class:`RefIndex`; each micro-batch is then one Arrow map that
-    probes it and scores the distinct candidates against its content
-    table (the kernel's own length prune stands in for
-    ``length_prefilter``).  Returns (run, release, stats)."""
+def _index_matcher(reference: DataFrame, scorer: str, threshold: float,
+                   key_cols: dict):
+    """Reference side built ONCE on the driver (one collect of its
+    ``key_cols`` sources, MinHash keys by the same kernel, hot keys
+    dropped) and broadcast as a :class:`RefIndex`; each micro-batch is
+    then one Arrow map that probes it and scores the distinct
+    candidates against its content table (the kernel's own length
+    prune stands in for ``length_prefilter``).  Returns (run, release,
+    stats)."""
     # read on the driver: the executors key the arrivals with the same
     # MinHash constants as the reference
     mh = blocking.minhash_params()
-    key_cols = block_key_columns()
     index = RefIndex.build(_key_sources(reference, key_cols).toArrow(),
                            make_minhash_matrix(**mh), blocking.MAX_BLOCK)
     bcv = reference.sparkSession.sparkContext.broadcast(index)
@@ -144,20 +146,30 @@ def _match_batch(reference: DataFrame, scorer: str, threshold: float):
     match edges (stream_id, ref_id, score).
 
     One aggregate job measures the reference's uncompressed content
-    bytes for 04_scores' gate (:func:`broadcast_fits`).  Within it the
-    reference becomes a broadcast :class:`RefIndex` and a micro-batch
+    bytes for 04_scores' gate (:func:`broadcast_fits`), and the bytes of
+    the key sources the index build collects with it.  Within the gate
+    the reference becomes a broadcast :class:`RefIndex` and a micro-batch
     is a single Arrow map — no join, no exchange, one Spark job with
     the sink write.  Above it the join plan runs.  The returned
     callable carries ``.unpersist()`` (release the reference side once
     the stream is done) and ``.plan``, the path taken and its build
     figures."""
     t0 = time.perf_counter()
-    agg = reference.agg(F.count(F.lit(1)).alias("n"),
-                        content_bytes().alias("b")).first()
+    key_cols = block_key_columns()
+    agg = reference.agg(
+        F.count(F.lit(1)).alias("n"), content_bytes().alias("b"),
+        *[F.sum(F.octet_length(c)).alias(fam)
+          for fam, c in key_cols.items()]).first()
     ref_bytes = int(agg["b"] or 0)
-    use_index, gate = broadcast_fits(reference.sparkSession, ref_bytes)
-    build = _index_matcher if use_index else _join_matcher
-    run, release, stats = build(reference, scorer, threshold)
+    # the index build collects (id, content, one source per family)
+    collect = arrow_bytes(int(agg["n"]), sum(int(agg[c] or 0) for c in
+                                             ("b", *key_cols)),
+                          2 + len(key_cols))
+    use_index, gate = broadcast_fits(reference.sparkSession, ref_bytes,
+                                     collect)
+    run, release, stats = (
+        _index_matcher(reference, scorer, threshold, key_cols) if use_index
+        else _join_matcher(reference, scorer, threshold))
     if use_index:  # the broadcast carries the content too
         stats["index_bytes"] += ref_bytes
 

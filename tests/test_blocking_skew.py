@@ -117,8 +117,8 @@ def test_minhash_key_rows_equal_exploded_per_doc_keys(spark):
     """minhash_key_rows emits make_minhash_matrix's per-doc keys,
     exploded: one (id, bk) row per band of every non-null text, none for
     a null text."""
-    from fuzzspark.pipeline.blocking import (make_minhash_matrix,
-                                             minhash_key_rows)
+    from fuzzspark.kernels.minhash import make_minhash_matrix
+    from fuzzspark.pipeline.blocking import minhash_key_rows, minhash_params
 
     texts = [None, "", "abc", "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 😀 text beyond the BMP 𐍈𐍈",
              "😀😀😀", "short doc"] + [f"def f{i}(x):\n    return x + {i}\n"
@@ -128,7 +128,8 @@ def test_minhash_key_rows_equal_exploded_per_doc_keys(spark):
         docs, "id: long, tag: string, __mh_norm: string").repartition(3)
     got = sorted(tuple(r) for r in minhash_key_rows(
         df, carry=("tag",)).collect())
-    idx, keys = make_minhash_matrix()([t for _i, _tag, t in docs])
+    idx, keys = make_minhash_matrix(**minhash_params())(
+        [t for _i, _tag, t in docs])
     want = sorted((docs[i][0], docs[i][1], k)
                   for i, ks in zip(idx.tolist(), keys.tolist()) for k in ks)
     assert len(want) == 8 * (len(texts) - 1)

@@ -60,10 +60,17 @@ def test_resume_after_kill(spark, tmp_path):
 
 
 def test_params_change_invalidates_checkpoint(spark, tmp_path):
+    """A new threshold reruns the stages that read it (03_pairs on)
+    and reuses the two before, with the rows a fresh run gives."""
     corpus = generate_corpus(n_clusters=30, seed=11, threshold=0.9)
     files, _, _ = corpus_to_spark(spark, corpus)
     wd = str(tmp_path / "wd")
     run_pipeline(spark, files, wd, LinkageConfig(threshold=0.9))
     out = run_pipeline(spark, files, wd, LinkageConfig(threshold=0.8))
-    # different params hash -> nothing skipped
-    assert not out["runner"].stages_skipped
+    assert out["runner"].stages_skipped == ["01_files", "02_blocks"]
+    assert out["runner"].stages_run == ["03_pairs", "04_scores",
+                                        "05_clusters"]
+    fresh = run_pipeline(spark, files, str(tmp_path / "fresh"),
+                         LinkageConfig(threshold=0.8))
+    for name in ("scores", "clusters"):
+        assert sorted(out[name].collect()) == sorted(fresh[name].collect())

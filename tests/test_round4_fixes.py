@@ -81,7 +81,6 @@ def test_damerau_zhao_sahni_long_strings():
               ("", ""), ("a" * 5000, "a" * 4999 + "b")]
     got = _native.native_damerau([a for a, _ in pairs],
                                  [b for _, b in pairs])
-    assert got is not None
     for i, (a, b) in enumerate(pairs):
         assert int(got[i]) == damerau_distance_raw(a, b), (a[:40], b[:40])
 

@@ -274,13 +274,14 @@ def test_indel_family_hint_is_result_invariant():
 # --------------------------- C minhash kernel parity (r6)
 
 
-def test_native_minhash_bit_exact_with_numpy_reference():
+def test_native_minhash_bit_exact_with_numpy_reference(request):
     """The C batch minhash kernel must be BIT-EXACT with the numpy
-    loop in make_minhash_matrix (which defines oracle parity) —
+    loop of _native.native_minhash (which defines oracle parity) —
     including unicode, short (< shingle), empty and None docs."""
     import numpy as np
 
     from fuzzspark.kernels import _native
+    from fuzzspark.kernels.minhash import make_minhash_matrix
     from fuzzspark.pipeline import blocking as BL
 
     if _native.get_lib() is None:
@@ -291,13 +292,9 @@ def test_native_minhash_bit_exact_with_numpy_reference():
             for _ in range(300)]
     docs += ["", "ab", "abcd", None, "κόσμος και άλλα",
              "日本語テキスト " * 40, "a" * 5, " ", "q" * 2500]
-    got_idx, got = BL.make_minhash_matrix()(docs)
-    real = _native.native_minhash
-    try:
-        _native.native_minhash = lambda *a, **k: None  # force numpy path
-        want_idx, want = BL.make_minhash_matrix()(docs)
-    finally:
-        _native.native_minhash = real
+    got_idx, got = make_minhash_matrix(**BL.minhash_params())(docs)
+    request.getfixturevalue("python_kernels")  # the numpy loop from here
+    want_idx, want = make_minhash_matrix(**BL.minhash_params())(docs)
     assert np.array_equal(got_idx, want_idx)
     assert np.array_equal(got, want)
 

@@ -161,8 +161,9 @@ def test_doc_pairs_residue_key_equals_mod_filter(spark, mod):
 
 
 def test_minhash_fallback_no_runtime_warning(python_kernels):
-    from fuzzspark.pipeline.blocking import make_minhash_matrix
-    matrix = make_minhash_matrix()
+    from fuzzspark.kernels.minhash import make_minhash_matrix
+    from fuzzspark.pipeline import blocking
+    matrix = make_minhash_matrix(**blocking.minhash_params())
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
         idx, keys = matrix(["ab", "x", "", None, "hello world document text"])

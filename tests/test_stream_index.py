@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from fuzzspark.kernels import _native
-from fuzzspark.streaming.index import KeyCSR
+from fuzzspark.kernels.refindex import KeyCSR
 from fuzzspark.streaming.ops import _match_batch
 from tests.conftest import broadcast_gate
 
